@@ -306,29 +306,57 @@ _MINHASH_COEFFS = (
 )
 
 
-def _arrow_minhash_signatures(
-    pre: DataFrame, id_col: str, shingle_col: str = "__sh"
+def _codepoint_folds(vals):
+    """Rabin-Karp fold ``h → (h·131 + codepoint) mod 2^40`` of every string
+    in the non-empty Arrow string array ``vals`` — :func:`.text.poly_hash`
+    as numpy, vectorized ACROSS strings (one pass per character position).
+
+    Code points are Python ``ord`` / UTF-32 units, astral chars included
+    — the units the DuckDB oracles' per-character ``unicode`` fold
+    iterates. Every step stays < 2^47, exact in int64; the empty string
+    folds to 0. Runs inside Python workers (imports are local)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = np.asarray(pc.utf8_length(vals), dtype=np.int64)
+    cps = np.frombuffer(
+        "".join(vals.to_pylist()).encode("utf-32-le"), dtype="<u4"
+    ).astype(np.int64)
+    starts = np.zeros(len(vals), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    h = np.zeros(len(vals), dtype=np.int64)
+    for k in range(int(lens.max())):
+        act = lens > k
+        h[act] = (h[act] * 131 + cps[starts[act] + k]) % (1 << 40)
+    return h
+
+
+def minhash_portable_signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash signature stage as vectorized numpy over Arrow batches —
-    the batched twin of the ``poly_hash % P`` / ``array_min(transform)``
-    projection in :func:`minhash_portable_pairs`.
+    """Portable MinHash signatures: (id, ``__hs`` = the doc's DISTINCT
+    shingle hashes in first-occurrence order, ``__mh0..4`` = the five
+    permutation minima) for every doc that has at least one shingle —
+    NULL text and docs with fewer than ``shingle_n`` run-split tokens have
+    no signature and are dropped.
 
-    Input: (id, shingle strings) — tokenization and shingling stay JVM
-    codegen, so no string-splitting semantics are re-implemented here;
-    only the per-character fold moves (it is an interpreted HOF in the
-    JVM — the minhash family's single most expensive stage, r10 measured
-    10.7 s of the 22 s sf0.1 pass).
-
-    Exactness: ALL integer arithmetic, bit-identical by construction —
-    Spark's ``split(s, '')`` + ``ascii`` folds CODE POINTS (verified
-    empirically incl. astral chars), which is exactly Python ``ord``
-    iteration / UTF-32 units; Horner steps stay < 2^47 and permutation
-    steps < 2^62, exact in int64; ``array_distinct`` keeps first
-    occurrence, as does the vectorized drop_duplicates. The empty string
-    folds to 0 in both (split('','') yields [''] and ascii('') = 0).
-    Output column names/types match the JVM ``sigs`` frame so every
-    downstream consumer (banding, both verify sides) is unchanged.
+    Tokenizing and shingling are JVM codegen; the hashing is one numpy
+    pass per Arrow batch (mapInArrow). A shingle hash is
+    :func:`_codepoint_folds` reduced mod P; permutation ``i`` is
+    ``(a_i·x + b_i) mod P`` (steps < 2^62, exact int64). DuckDB replays
+    every step (the q_dedup_minhash oracle).
     """
+    from .text import shingles
+
+    toks = F.filter(
+        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
+    )
+    pre = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), toks.alias("__toks")
+    ).select(id_col, shingles("__toks", shingle_n).alias("__sh"))
     id_dt = pre.schema[id_col].dataType.simpleString()
     n_coeffs = len(_MINHASH_COEFFS)
     coeffs = tuple(_MINHASH_COEFFS)
@@ -338,45 +366,18 @@ def _arrow_minhash_signatures(
         import numpy as np
         import pandas as pd
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         mh_names = [f"__mh{i}" for i in range(n_coeffs)]
 
         for rb in batches:
             ids = rb.column(0)
             sh = rb.column(1)
-            n_docs = rb.num_rows
-            if n_docs == 0:
-                continue
-            doc_counts = np.diff(np.asarray(sh.offsets))
             vals = sh.flatten()
-            n_sh = len(vals)
-            if n_sh == 0:
-                hs_col = pa.ListArray.from_arrays(
-                    np.zeros(n_docs + 1, dtype=np.int32),
-                    pa.array([], type=pa.int64()),
-                )
-                yield pa.record_batch(
-                    {id_col: ids, "__hs": hs_col}
-                    | {m: pa.array(np.zeros(n_docs, dtype=np.int64)) for m in mh_names}
-                )
-                continue
-            # per-shingle code-point Horner fold, vectorized ACROSS
-            # shingles (one numpy pass per character position)
-            lens = np.asarray(pc.utf8_length(vals), dtype=np.int64)
-            joined = "".join(vals.to_pylist())
-            cps = np.frombuffer(
-                joined.encode("utf-32-le"), dtype="<u4"
-            ).astype(np.int64)
-            starts = np.zeros(n_sh, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            h = np.zeros(n_sh, dtype=np.int64)
-            mod = 1 << 40
-            for k in range(int(lens.max())):
-                act = lens > k
-                idx = starts[act] + k
-                h[act] = (h[act] * 131 + cps[idx]) % mod
-            hs = h % p_mod
+            if len(vals) == 0:
+                continue  # no doc in the batch has a shingle
+            n_docs = rb.num_rows
+            doc_counts = np.diff(np.asarray(sh.offsets))
+            hs = _codepoint_folds(vals) % p_mod
             # distinct per doc, first occurrence preserved
             doc_idx = np.repeat(np.arange(n_docs), doc_counts)
             dd = pd.DataFrame({"d": doc_idx, "h": hs}).drop_duplicates()
@@ -390,24 +391,22 @@ def _arrow_minhash_signatures(
                 pa.array(offsets, type=pa.int32()),
                 pa.array(hvals, type=pa.int64()),
             )
-            # five LCG permutation minima per doc (empty docs -> 0; they
-            # are dropped by the size(__hs) > 0 filter downstream, same
-            # domain as the JVM path)
+            # five LCG permutation minima per doc (docs without shingles
+            # get 0 here and are dropped by the size(__hs) > 0 filter)
             cols = {id_col: ids, "__hs": hs_col}
             nonempty = counts > 0
             seg = offsets[:-1][nonempty]
             for m, (a, b) in zip(mh_names, coeffs):
                 t = (hvals * a + b) % p_mod
                 out = np.zeros(n_docs, dtype=np.int64)
-                if len(seg):
-                    out[nonempty] = np.minimum.reduceat(t, seg)
+                out[nonempty] = np.minimum.reduceat(t, seg)
                 cols[m] = pa.array(out)
             yield pa.record_batch(cols)
 
     mh_schema = ", ".join(f"__mh{i} bigint" for i in range(n_coeffs))
     return pre.mapInArrow(
         signatures, f"{id_col} {id_dt}, __hs array<bigint>, {mh_schema}"
-    )
+    ).filter(F.size("__hs") > 0)
 
 
 def minhash_portable_pairs(
@@ -417,7 +416,6 @@ def minhash_portable_pairs(
     jaccard_threshold: float = 0.5,
     shingle_n: int = 3,
     collapse: bool = True,
-    batched_sig: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with an ENGINE-NEUTRAL hash family — the
     SQL-oracle-checkable twin of :func:`minhash_lsh_pairs` (same upgrade
@@ -442,75 +440,29 @@ def minhash_portable_pairs(
     (equal signatures). A base-hash collision (two distinct shingles
     colliding mod P, ~n²/2^32 per doc pair) perturbs the ESTIMATE exactly
     like any MinHash collision and identically on both engines — parity
-    is unaffected. Scale shape: signatures are array HOFs (no explode
-    until banding), banding shuffles five (slot, value) keys per doc,
-    linear in distinct texts under ``collapse=True``.
+    is unaffected. Scale shape: signatures are one numpy pass per Arrow
+    batch (:func:`minhash_portable_signatures`; no explode until banding),
+    banding shuffles five (slot, value) keys per doc, linear in distinct
+    texts under ``collapse=True``.
     """
-    from .text import shingles
-
     if collapse:
         return _collapsed_pairs(
             docs, id_col, text_col,
             naive_fn=lambda reps: minhash_portable_pairs(
                 reps, id_col, text_col, jaccard_threshold, shingle_n,
-                collapse=False, batched_sig=batched_sig,
+                collapse=False,
             ),
             pairable=_run_split_size("vec") >= shingle_n,
             payload=F.lit(0.0), payload_name="jaccard_dist",
             emit_intra=jaccard_threshold < 1.0,
         )
 
-    from .text import poly_hash
-
-    p = F.lit(_MINHASH_P)
-    toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
-    )
-    # localCheckpoint (r10): three consumers re-derive this projection —
-    # bands plus both verify sides — and the per-character poly_hash fold
-    # is the operator's single most expensive stage (10.7 s of the 22 s
-    # sf0.1 total for ONE pass). Truncating lineage materializes the
-    # signatures once; the established _collapse_groups discipline.
-    #
-    # batched_sig (r11, guide §4.2): the fold is an interpreted HOF per
-    # character; callers opt in above a volume threshold to compute the
-    # SAME signatures as vectorized numpy over Arrow batches
-    # (_arrow_minhash_signatures — bit-identical integer arithmetic;
-    # tokenize/shingle stay JVM either way).
-    if batched_sig:
-        pre = docs.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), toks.alias("__toks")
-        ).select(id_col, shingles("__toks", shingle_n).alias("__sh"))
-        sigs = (
-            _arrow_minhash_signatures(pre, id_col)
-            .filter(F.size("__hs") > 0)
-            .localCheckpoint(eager=False)
-        )
-    else:
-        base = (
-            docs.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col), toks.alias("__toks"))
-            .select(
-                id_col,
-                F.array_distinct(
-                    F.transform(
-                        shingles("__toks", shingle_n),
-                        lambda s: poly_hash(s) % p,
-                    )
-                ).alias("__hs"),
-            )
-            .filter(F.size("__hs") > 0)
-        )
-        sigs = base.select(
-            id_col,
-            "__hs",
-            *[
-                F.array_min(
-                    F.transform("__hs", lambda x: (x * F.lit(a) + F.lit(b)) % p)
-                ).alias(f"__mh{i}")
-                for i, (a, b) in enumerate(_MINHASH_COEFFS)
-            ],
-        ).localCheckpoint(eager=False)
+    # localCheckpoint (r10): three consumers re-derive the signatures —
+    # bands plus both verify sides — so lineage is truncated once here;
+    # the established _collapse_groups discipline.
+    sigs = minhash_portable_signatures(
+        docs, id_col, text_col, shingle_n
+    ).localCheckpoint(eager=False)
     bands = sigs.select(
         id_col,
         F.explode(
@@ -623,28 +575,37 @@ def simhash_signatures(
     )
 
 
-def _arrow_simhash_signatures(
-    pre: DataFrame, id_col: str, toks_col: str = "__toks"
+def simhash_portable_signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """40-bit SimHash signatures as vectorized numpy over Arrow batches —
-    the batched twin of :func:`simhash_portable_signatures`'s interpreted
-    HOF pipeline (per-character token folds, 3-token shingle folds,
-    40 vote counters per shingle).
+    """40-bit SimHash over poly-hash shingle hashes — the ENGINE-NEUTRAL
+    twin of :func:`simhash_signatures` (which stays the 64-bit xxhash64
+    library fast path).
 
-    Input: (id, token array) — tokenization stays JVM codegen. All
-    arithmetic is exact int64 (token folds < 2^47, shingle steps < 2^47,
-    vote counts < 2^31), and the character fold is the same code-point
-    Horner as :func:`_arrow_minhash_signatures`, so signatures are
-    bit-identical to the JVM expression. Domain rule preserved: a NULL
-    token array (NULL text upstream) or fewer than 3 tokens yields a NULL
-    signature.
+    Token hashes are Rabin-Karp ``poly_hash`` folds; a shingle hash folds
+    its three token hashes with the same (·131 mod 2^40) step — every
+    intermediate < 2^47, exact in BIGINT on both engines, so DuckDB can
+    replay the signature bit-for-bit (the q_dedup_simhash oracle). The
+    signature width follows the hash width: 40 vote counters, sign bits
+    packed into one BIGINT. Same domain rule as the 64-bit form (< 3
+    run-split tokens → NULL signature, cannot pair) and the same frequency
+    weighting (duplicate shingles vote per occurrence).
+
+    Tokenization is JVM codegen; the token folds (:func:`_codepoint_folds`),
+    shingle folds and 40 vote counters per shingle are one numpy pass per
+    Arrow batch (mapInArrow). Vote counts stay < 2^31.
     """
+    toks = F.filter(
+        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
+    )
+    pre = docs.select(F.col(id_col), toks.alias("__toks"))
     id_dt = pre.schema[id_col].dataType.simpleString()
 
     def signatures(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         mod = 1 << 40
         bit_weights = (np.int64(1) << np.arange(40, dtype=np.int64))
@@ -664,16 +625,7 @@ def _arrow_simhash_signatures(
             sig = np.zeros(n_docs, dtype=np.int64)
             has_sig = (~null_doc) & (tok_counts >= 3)
             if len(vals) and has_sig.any():
-                lens = np.asarray(pc.utf8_length(vals), dtype=np.int64)
-                cps = np.frombuffer(
-                    "".join(vals.to_pylist()).encode("utf-32-le"), dtype="<u4"
-                ).astype(np.int64)
-                starts = np.zeros(len(vals), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                th = np.zeros(len(vals), dtype=np.int64)
-                for k in range(int(lens.max())):
-                    act = lens > k
-                    th[act] = (th[act] * 131 + cps[starts[act] + k]) % mod
+                th = _codepoint_folds(vals)
                 doc_idx = np.repeat(np.arange(n_docs), tok_counts)
                 if len(th) >= 3:
                     win_ok = doc_idx[:-2] == doc_idx[2:]
@@ -700,85 +652,12 @@ def _arrow_simhash_signatures(
     return pre.mapInArrow(signatures, f"{id_col} {id_dt}, simhash bigint")
 
 
-def simhash_portable_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batched_sig: bool = False,
-) -> DataFrame:
-    """40-bit SimHash over poly-hash shingle hashes — the ENGINE-NEUTRAL
-    twin of :func:`simhash_signatures` (which stays the 64-bit xxhash64
-    library fast path).
-
-    Token hashes are Rabin-Karp ``poly_hash`` folds; a shingle hash folds
-    its three token hashes with the same (·131 mod 2^40) step — every
-    intermediate < 2^47, exact in BIGINT on both engines, so DuckDB can
-    replay the signature bit-for-bit (the q_dedup_simhash oracle). The
-    signature width follows the hash width: 40 vote counters, sign bits
-    packed into one BIGINT. Same aggregation shape as the 64-bit form (ONE
-    aggregate carrying all counters; a finish lambda packs), same
-    domain rule (< 3 run-split tokens → NULL signature, cannot pair),
-    same frequency weighting (duplicate shingles vote per occurrence).
-
-    The token-hash array is HOISTED into its own projection (r06 review):
-    inlined, the per-character fold appears six times in the signature
-    expression (three zip_with/slice references + three size() guards),
-    and while CollapseProject's cost guard keeps the expensive aggregate
-    from fully re-inlining, the hoist still measured ~2× faster at sf0.1
-    — unlike the 64-bit twin, whose repeated xxhash64 is one codegen call.
-    """
-    mod = 1 << 40
-    # batched_sig (r11, guide §4.2): every stage below is an interpreted
-    # HOF (token folds, shingle folds, 40 vote counters per shingle);
-    # above a volume threshold the caller opts into the numpy twin —
-    # bit-identical integer arithmetic, tokenization stays JVM.
-    if batched_sig:
-        toks = F.filter(
-            F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
-        )
-        pre = docs.select(F.col(id_col), toks.alias("__toks"))
-        return _arrow_simhash_signatures(pre, id_col)
-    th_expr = (
-        f"transform(filter(split({text_col}, '\\\\s+'), t -> t != ''),"
-        f" t -> aggregate(split(t, ''), 0L,"
-        f" (a, c) -> (a * 131L + ascii(c)) % {mod}L))"
-    )
-    shingle_hashes = f"""
-        slice(
-          zip_with(
-            zip_with(__th, slice(__th, 2, size(__th)),
-                     (a, b) -> (a * 131L + b) % {mod}L),
-            slice(__th, 3, size(__th)),
-            (ab, c) -> (ab * 131L + c) % {mod}L),
-          1, size(__th) - 2)
-    """
-    sig = F.expr(
-        f"""
-        CASE WHEN size(__th) >= 3 THEN
-          aggregate(
-            CAST(({shingle_hashes}) AS ARRAY<BIGINT>),
-            array_repeat(0, 40),
-            (acc, h) -> zip_with(acc, sequence(0, 39),
-                        (c, i) -> c + IF((shiftright(h, i) & 1L) = 1L, 1, -1)),
-            acc -> aggregate(
-                     zip_with(acc, sequence(0, 39),
-                              (v, i) -> IF(v >= 0, shiftleft(1L, i), 0L)),
-                     0L, (a, b) -> a | b))
-        ELSE CAST(NULL AS BIGINT) END
-        """
-    )
-    return docs.select(id_col, F.expr(th_expr).alias("__th")).select(
-        id_col, sig.alias("simhash")
-    )
-
-
 def simhash_portable_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 8,
     collapse: bool = True,
-    batched_sig: bool = False,
 ) -> DataFrame:
     """:func:`simhash_pairs` over the portable 40-bit signatures: 4×10-bit
     band candidates (pigeonhole: Hamming ≤ 3 always shares a band — same
@@ -793,15 +672,14 @@ def simhash_portable_pairs(
             docs, id_col, text_col,
             naive_fn=lambda reps: simhash_portable_pairs(
                 reps, id_col, text_col, max_hamming, collapse=False,
-                batched_sig=batched_sig,
             ),
             pairable=_run_split_size("vec") >= 3,
             payload=F.lit(0).cast("int"), payload_name="hamming",
             emit_intra=max_hamming >= 0,
         )
-    sigs = simhash_portable_signatures(
-        docs, id_col, text_col, batched_sig=batched_sig
-    ).filter(F.col("simhash").isNotNull())
+    sigs = simhash_portable_signatures(docs, id_col, text_col).filter(
+        F.col("simhash").isNotNull()
+    )
     bands = sigs.select(
         id_col,
         "simhash",
@@ -1086,30 +964,16 @@ def _collapse_exact(
     return groups, membership
 
 
-#: Verify-path selector for the embed family (r11, guide §4.2): ``auto``
-#: prices the verify driver-side from the SAME bounded cell collect the
-#: blocking already does (Σ nᵢ·nⱼ pair dots over surviving cell pairs ×
-#: vector width = exact MAC count, zero extra jobs) and switches from the
-#: codegen'd per-pair dot to the Arrow-batched BLAS kernel once the work
-#: amortizes the Python-worker round-trip. ``jvm``/``arrow`` force a path
-#: (A/B + differential tests).
-_EMBED_VERIFY_MODES = ("auto", "jvm", "arrow")
+#: Exact verify cost (multiply-accumulates) above which
+#: ``embedding_cosine_dups_blocked`` switches from the codegen'd per-pair
+#: dot to the Arrow-batched BLAS kernel: below it the Python-worker
+#: round-trip does not pay. The cost is read from the bounded cell collect
+#: the blocking already does (Σ nᵢ·nⱼ pair dots over surviving cell pairs
+#: × vector width), so pricing costs no extra job.
+_EMBED_VERIFY_ARROW_MIN_MACS = 200_000_000
 
-#: Last gate decision (diagnostic; see embedding_cosine_dups_blocked).
+#: Last verify-path decision (diagnostic; see embedding_cosine_dups_blocked).
 _LAST_EMBED_VERIFY: dict = {}
-
-
-def _embed_verify_mode() -> tuple[str, int]:
-    mode = os.environ.get("SPARK_GRAFT_EMBED_VERIFY", "auto").lower()
-    if mode not in _EMBED_VERIFY_MODES:
-        raise ValueError(
-            "SPARK_GRAFT_EMBED_VERIFY must be one of "
-            f"{_EMBED_VERIFY_MODES}, got {mode!r}"
-        )
-    min_macs = int(float(os.environ.get(
-        "SPARK_GRAFT_EMBED_VERIFY_MIN_MACS", "2e8"
-    )))
-    return mode, min_macs
 
 
 def _arrow_pair_verify(
@@ -1572,30 +1436,19 @@ def embedding_cosine_dups_blocked(
     dim = dmaxs[0] if homogeneous else 0
     unroll = homogeneous and dim <= 256
 
-    # r11 (guide §4.2): above the measured crossover, the per-pair dot —
-    # even codegen'd — loses to one BLAS matmul per cell pair; the MAC
-    # count is known exactly driver-side, so the switch costs no probe.
-    # The Arrow kernel needs a rectangular matrix (homogeneous widths) and
-    # numpy-orderable ids; anything else keeps the always-correct JVM path.
+    # Above _EMBED_VERIFY_ARROW_MIN_MACS the per-pair dot — even codegen'd —
+    # loses to one BLAS matmul per cell pair; the MAC count is known exactly
+    # driver-side, so the switch costs no probe. The Arrow kernel needs a
+    # rectangular matrix (homogeneous widths) and numpy-orderable ids;
+    # anything else keeps the always-correct JVM path.
     from pyspark.sql.types import NumericType
 
-    verify_mode, verify_min_macs = _embed_verify_mode()
     id_numeric = isinstance(assigned.schema["id"].dataType, NumericType)
     arrow_ok = homogeneous and dim >= 1 and id_numeric
-    if verify_mode == "arrow" and not arrow_ok:
-        raise ValueError(
-            "SPARK_GRAFT_EMBED_VERIFY=arrow requires homogeneous vector "
-            "widths and a numeric id column"
-        )
-    use_arrow = verify_mode == "arrow" or (
-        verify_mode == "auto"
-        and arrow_ok
-        and pair_dots * dim >= verify_min_macs
-    )
-    # Observability for tests/A-Bs: what the gate saw and chose (plan-time
-    # diagnostic only, never consulted by the computation).
+    use_arrow = arrow_ok and pair_dots * dim >= _EMBED_VERIFY_ARROW_MIN_MACS
+    # What the choice saw and chose (plan-time diagnostic only, never
+    # consulted by the computation).
     _LAST_EMBED_VERIFY.update(
-        mode=verify_mode,
         pair_dots=pair_dots,
         dim=dim,
         arrow_ok=arrow_ok,

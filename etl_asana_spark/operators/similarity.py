@@ -538,24 +538,17 @@ def pca_power_reduce(
     ``pca_reduce`` (MLlib/LAPACK) stays the library path when a converged
     eigenbasis matters and external checkability does not.
 
-    Scale shape: the data-sized work is ONE pass — per-row outer products
-    built map-side by a transform×transform expression and partially
-    aggregated before the shuffle, so the exchange carries d²·partitions
-    rows, never n·d². Driver state is the d×d Gramian (the "model is
-    tiny, ship it to the data" pattern shared with kmeans_lloyd); the
-    d-term projection is generated JVM codegen, no Python anywhere.
+    Scale shape: the data-sized work is ONE pass — one numpy syrk per
+    Arrow batch (mapInArrow) accumulates each partition's moments, so the
+    exchange carries one d(d+1)/2 + d + 1 row set per partition, never
+    n·d². Driver state is the d×d Gramian (the "model is tiny, ship it to
+    the data" pattern shared with kmeans_lloyd); the d-term projection is
+    generated JVM codegen.
     """
-    import os
-
     import numpy as np
 
     x = embeddings.filter(F.col(vec_col).isNotNull())
-    # The row count rides the width probe's single scan job for free — it
-    # prices the moment pass (n·d² MACs) for the JVM-vs-Arrow gate below.
-    probe = x.select(
-        F.max(F.size(vec_col)).alias("d"), F.count(F.lit(1)).alias("n")
-    ).first()
-    d, n_probe = probe["d"], int(probe["n"])
+    d = x.select(F.max(F.size(vec_col))).first()[0]
     if d is None:
         return embeddings.sparkSession.createDataFrame(
             [], f"{id_col} bigint, reduced array<double>"
@@ -563,97 +556,51 @@ def pca_power_reduce(
     x = x.filter(F.size(vec_col) == d)
     e = F.col(vec_col).cast("array<double>")
 
-    # Moment accumulation in ONE scan / one shuffle / one collect. Only the
-    # Gramian's upper triangle (j ≥ i) is built — it is symmetric, so the
-    # explode carries d(d+1)/2 structs per row instead of d² and the driver
-    # mirrors. The per-dim sums ride along as (i, 0) sentinel structs and
-    # the row count as (0, 0) — j=0 is free because Gramian indices are
-    # 1-based (SQL sequence). Partial agg combines map-side, so the
-    # exchange carries ~d²/2 rows per partition regardless of n.
-    #
-    # r11 (guide §4.2): above SPARK_GRAFT_PCA_MOMENTS_MIN_MACS the same
-    # moments come from one numpy syrk per Arrow batch (mapInArrow) —
-    # identical reduction tree up to float-summation order, which the
-    # oracle parity argument already absorbs (the proj CTE's unordered SQL
-    # sum rests on the margin probe's ~1000× fixed-point headroom, not on
-    # matching order). The per-row work drops from d(d+1)/2 exploded
-    # structs through codegen'd agg to a BLAS rank-k update; the exchange
-    # shrinks from ~d²/2 rows per partition to the same rows ONCE per
-    # partition. Default threshold keeps every shipped SF on the explode
-    # path (externally hash-checked configurations stay byte-stable);
-    # SPARK_GRAFT_PCA_MOMENTS=jvm|arrow forces a path for A/Bs.
-    mode = os.environ.get("SPARK_GRAFT_PCA_MOMENTS", "auto").lower()
-    if mode not in ("auto", "jvm", "arrow"):
-        raise ValueError(
-            "SPARK_GRAFT_PCA_MOMENTS must be auto, jvm or arrow, "
-            f"got {mode!r}"
+    # Moment accumulation in ONE scan / one shuffle / one collect, as
+    # (i, j, s) rows: the Gramian's upper triangle (1 ≤ i ≤ j ≤ d; it is
+    # symmetric, the driver mirrors), the per-dim sums as (i, 0) and the
+    # row count as (0, 0). The oracle's unordered SQL sums already rest on
+    # the margin probe's ~1000× fixed-point headroom over summation-order
+    # drift, which the BLAS reduction order stays inside.
+    def partial_moments(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        g = np.zeros((d, d))
+        mu = np.zeros(d)
+        n = 0
+        for rb in batches:
+            arr = rb.column(0)
+            n += len(arr)
+            vals = arr.flatten()
+            if vals.null_count:
+                # A SQL SUM skips NULL elements; a zero contributes exactly
+                # nothing to the same sums. NaN data values propagate.
+                vals = pc.fill_null(vals, 0.0)
+            m = np.asarray(vals, dtype=np.float64).reshape(-1, d)
+            g += m.T @ m
+            mu += m.sum(axis=0)
+        iu = np.triu_indices(d)
+        yield pa.record_batch(
+            {
+                "i": np.concatenate(
+                    [iu[0] + 1, np.arange(1, d + 1), [0]]
+                ).astype("int32"),
+                "j": np.concatenate(
+                    [iu[1] + 1, np.zeros(d, dtype=int), [0]]
+                ).astype("int32"),
+                "s": np.concatenate([g[iu], mu, [float(n)]]),
+            }
         )
-    min_macs = int(float(os.environ.get(
-        "SPARK_GRAFT_PCA_MOMENTS_MIN_MACS", "2e8"
-    )))
-    use_arrow = mode == "arrow" or (
-        mode == "auto" and n_probe * d * d >= min_macs
+
+    moments = (
+        x.select(e.alias("__e"))
+        .mapInArrow(partial_moments, "i int, j int, s double")
+        .groupBy("i", "j")
+        .agg(F.sum("s").alias("s"))
+        .collect()
     )
-    if use_arrow:
-
-        def partial_moments(batches):
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            g = np.zeros((d, d))
-            mu = np.zeros(d)
-            n = 0
-            for rb in batches:
-                arr = rb.column(0)
-                n += len(arr)
-                vals = arr.flatten()
-                if vals.null_count:
-                    # NULL elements contribute nothing to a SUM that
-                    # skips NULLs; a zero contributes exactly nothing to
-                    # the same sums — bit-equivalent fill. (NaN data
-                    # values propagate identically in both engines.)
-                    vals = pc.fill_null(vals, 0.0)
-                m = np.asarray(vals, dtype=np.float64).reshape(-1, d)
-                g += m.T @ m
-                mu += m.sum(axis=0)
-            iu = np.triu_indices(d)
-            yield pa.record_batch(
-                {
-                    "i": np.concatenate(
-                        [iu[0] + 1, np.arange(1, d + 1), [0]]
-                    ).astype("int32"),
-                    "j": np.concatenate(
-                        [iu[1] + 1, np.zeros(d, dtype=int), [0]]
-                    ).astype("int32"),
-                    "s": np.concatenate([g[iu], mu, [float(n)]]),
-                }
-            )
-
-        moments = (
-            x.select(e.alias("__e"))
-            .mapInArrow(partial_moments, "i int, j int, s double")
-            .groupBy("i", "j")
-            .agg(F.sum("s").alias("s"))
-            .collect()
-        )
-    else:
-        prods = F.expr(
-            "concat("
-            " flatten(transform(sequence(1, __d), i -> "
-            "  transform(sequence(i, __d), j -> "
-            "   struct(i AS i, j AS j, element_at(__e, i) * element_at(__e, j) AS p)))),"
-            " transform(sequence(1, __d), i -> "
-            "  struct(i AS i, 0 AS j, element_at(__e, i) AS p)),"
-            " array(struct(0 AS i, 0 AS j, CAST(1.0 AS DOUBLE) AS p)))"
-        )
-        moments = (
-            x.select(e.alias("__e"), F.lit(d).alias("__d"))
-            .select(F.explode(prods).alias("c"))
-            .groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j"))
-            .agg(F.sum("c.p").alias("s"))
-            .collect()
-        )
     n = next((int(r["s"]) for r in moments if r["i"] == 0 and r["j"] == 0), 0)
     if n == 0:
         return embeddings.sparkSession.createDataFrame(

@@ -165,7 +165,7 @@ def q_golden_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_golden_doc_pipeline",
-    oracle="""
+    oracle=r"""
     WITH en AS (
         SELECT doc_id, text FROM documents WHERE lang = 'en'
     ), feats AS (

@@ -119,32 +119,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``minhash_lsh_pairs`` (MLlib, xxhash64) stays the library fast path;
     its precision remains property-checked vs exact shingle Jaccard in
     tests, and the two families' candidate recall is compared there too."""
-    import os
-
-    from .fsutil import local_input_bytes
-
     t = load_tables(spark, sf_dir)
-    # Batched signature stage above a volume threshold (r11, guide §4.2):
-    # the per-character poly_hash fold is an interpreted HOF — the
-    # family's dominant cost — and its numpy twin is bit-identical exact
-    # integer arithmetic (differential-tested incl. the messy/unicode
-    # corpora). Same volume-derived pattern as q_dedup_semantic; env
-    # override for A/Bs.
-    mode = os.environ.get("SPARK_GRAFT_MINHASH_SIG", "auto").lower()
-    if mode not in ("auto", "jvm", "arrow"):
-        raise ValueError(
-            f"SPARK_GRAFT_MINHASH_SIG must be auto, jvm or arrow, got {mode!r}"
-        )
-    min_bytes = int(float(os.environ.get(
-        "SPARK_GRAFT_MINHASH_SIG_MIN_BYTES", "4194304"
-    )))
-    batched = mode == "arrow" or (
-        mode == "auto"
-        and local_input_bytes(f"{sf_dir}/documents.parquet") >= min_bytes
-    )
-    return dedup.minhash_portable_pairs(
-        t["documents"], jaccard_threshold=0.5, batched_sig=batched
-    )
+    return dedup.minhash_portable_pairs(t["documents"], jaccard_threshold=0.5)
 
 
 def _simhash_oracle_sql(max_hamming: int = 8) -> str:
@@ -213,35 +189,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     path as q_dedup_minhash this round and q_text_fingerprint in r5).
     ``simhash_pairs`` (64-bit xxhash64) stays the library fast path;
     Hamming invariants for both families remain property-tested."""
-    import os
-
-    from .fsutil import local_input_bytes
-
     t = load_tables(spark, sf_dir)
-    # Batched signature stage above a volume threshold — same rationale,
-    # gate pattern and bit-identical integer-arithmetic argument as
-    # q_dedup_minhash (this round); shares the minhash env knobs so the
-    # two portable-hash families flip together.
-    mode = os.environ.get("SPARK_GRAFT_MINHASH_SIG", "auto").lower()
-    if mode not in ("auto", "jvm", "arrow"):
-        raise ValueError(
-            f"SPARK_GRAFT_MINHASH_SIG must be auto, jvm or arrow, got {mode!r}"
-        )
-    min_bytes = int(float(os.environ.get(
-        "SPARK_GRAFT_MINHASH_SIG_MIN_BYTES", "4194304"
-    )))
-    batched = mode == "arrow" or (
-        mode == "auto"
-        and local_input_bytes(f"{sf_dir}/documents.parquet") >= min_bytes
-    )
-    return dedup.simhash_portable_pairs(
-        t["documents"], max_hamming=8, batched_sig=batched
-    )
+    return dedup.simhash_portable_pairs(t["documents"], max_hamming=8)
 
 
 @register(
     "q_dedup_ngram",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'fr'
@@ -611,7 +565,7 @@ def q_emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tokens",
-    oracle="""
+    oracle=r"""
     SELECT token, COUNT(*) AS freq, COUNT(DISTINCT doc_id) AS doc_freq
     FROM (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
@@ -635,7 +589,7 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tfidf",
-    oracle="""
+    oracle=r"""
     WITH tokens AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'es'
@@ -674,7 +628,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_stats",
-    oracle="""
+    oracle=r"""
     SELECT doc_id,
            length(text) AS n_chars_measured,
            n_chars AS n_chars_declared,
@@ -703,11 +657,11 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_quality",
-    oracle="""
+    oracle=r"""
     SELECT doc_id,
            CAST(length(text) AS BIGINT) AS n_chars,
            CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_words,
-           ROUND(CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
+           ROUND(CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))
                  AS DOUBLE) / length(text), 8) AS punct_ratio,
            ROUND(CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
                      t -> t IN ('the','of','and','to','in','is','that','for')))
@@ -758,7 +712,7 @@ def _stopword_values_sql() -> str:
 
 @register(
     "q_text_langid",
-    oracle=f"""
+    oracle=rf"""
     WITH stop(lang_cand, w) AS (VALUES {_stopword_values_sql()}),
     toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS w FROM documents
@@ -799,7 +753,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_fingerprint",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, text, regexp_split_to_array(text, '\s+') AS t FROM documents
     ), sh AS (
@@ -1171,7 +1125,7 @@ def q_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hist_tokens",
-    oracle="""
+    oracle=r"""
     SELECT CAST(floor(len(regexp_split_to_array(text, '\s+')) / 10) * 10 AS BIGINT) AS bucket_lo,
            COUNT(*) AS n_docs,
            CAST(MIN(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS min_words,
@@ -1227,7 +1181,7 @@ def q_text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_clusters",
-    oracle="""
+    oracle=r"""
     WITH RECURSIVE pairs AS MATERIALIZED (
         WITH toks AS (
             SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
@@ -1309,7 +1263,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_mix_corpus",
-    oracle="""
+    oracle=r"""
     WITH stats AS (
         SELECT source,
                CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS DOUBLE) AS src_tokens
@@ -1363,7 +1317,7 @@ def q_mix_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pack_sequences",
-    oracle="""
+    oracle=r"""
     WITH RECURSIVE docs AS MATERIALIZED (
         SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS tok, doc_id % 8 AS b
         FROM documents
@@ -1425,7 +1379,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_contamination",
-    oracle="""
+    oracle=r"""
     WITH bench AS (
         SELECT doc_id AS bench_id, text FROM documents
         WHERE (doc_id * 2654435761) % 4294967296 % 50 = 7
@@ -1517,7 +1471,7 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_repetition_score",
-    oracle="""
+    oracle=r"""
     WITH sh AS (
         SELECT doc_id, unnest(
             [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
@@ -1555,7 +1509,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_chunk_docs",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents
     )
@@ -1679,7 +1633,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_inverted_index",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'en'
@@ -1723,7 +1677,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dup_ngram_fraction",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'es'
@@ -2150,7 +2104,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_prefix",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'fr'
@@ -2346,6 +2300,11 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Embeddings input size (bytes) from which q_dedup_semantic runs the
+#: Arrow-batched BLAS verify instead of the JVM pair join.
+_SEMANTIC_VERIFY_ARROW_MIN_BYTES = 4 << 20
+
+
 @register(
     "q_dedup_semantic",
     oracle=_lloyd_cte_sql(k=16, n_iter=2) + """
@@ -2391,8 +2350,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min |cos − 0.28| = 5.1e-6 within clusters at both gate scales).
     Recall vs the clusterless all-pairs scan and drop-idempotence remain
     property-tested."""
-    import os
-
     from .fsutil import local_input_bytes
     from .operators.dedup import semantic_dedup_stats
     from .operators.similarity import kmeans_lloyd
@@ -2404,17 +2361,16 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = t["embeddings"].select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).join(assigned, "vec_id")
-    # Batched (BLAS) verify above a volume threshold (r11, guide §4.2):
-    # the within-cluster pair count is quadratic in distinct reps, so a
-    # big corpus amortizes the Python boundary where the gate-scale corpus
-    # (0.8 MB at sf0.1) never does — same volume-derived pattern as the
-    # multimodal fan-out and streaming state sizing. Results are
-    # differential-tested identical either way (margin 5.1e-6 vs ~1e-15
-    # summation-order drift; see semantic_dedup_stats).
-    min_bytes = int(float(os.environ.get(
-        "SPARK_GRAFT_SEMANTIC_VERIFY_MIN_BYTES", "4194304"
-    )))
-    batched = local_input_bytes(f"{sf_dir}/embeddings.parquet") >= min_bytes
+    # Batched (BLAS) verify above _SEMANTIC_VERIFY_ARROW_MIN_BYTES: the
+    # within-cluster pair count is quadratic in distinct reps, so a big
+    # corpus amortizes the Python boundary where the gate-scale corpus
+    # (0.8 MB at sf0.1) never does. Results are differential-tested
+    # identical either way (margin 5.1e-6 vs ~1e-15 summation-order drift;
+    # see semantic_dedup_stats).
+    batched = (
+        local_input_bytes(f"{sf_dir}/embeddings.parquet")
+        >= _SEMANTIC_VERIFY_ARROW_MIN_BYTES
+    )
     return semantic_dedup_stats(
         vecs, threshold=0.28, batched_verify=batched
     ).orderBy("cluster")
@@ -2465,7 +2421,7 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quality_gopher",
-    oracle="""
+    oracle=r"""
     WITH feats AS (
         SELECT doc_id, lang,
                len(regexp_split_to_array(text, '\s+')) AS n_words,
@@ -2528,7 +2484,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_vocab_oov",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'en'
@@ -2586,7 +2542,7 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dsir_weights",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, lang, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents
@@ -2702,7 +2658,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_scrub_dup_spans",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'de'
@@ -2900,7 +2856,7 @@ def q_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_entropy",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents

@@ -319,7 +319,7 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_fuzzy",
-    oracle="""
+    oracle=r"""
     WITH names AS (SELECT DISTINCT p_name AS name FROM part)
     SELECT a.name AS name_a, b.name AS name_b,
            CAST(levenshtein(a.name, b.name) AS INT) AS dist

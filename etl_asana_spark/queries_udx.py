@@ -290,16 +290,21 @@ def _ema_batches(batches):
     the tail to NULL instead) would make the kernel state richer than
     one float only when a NaN-bearing group also straddles a batch
     boundary; NULL user_ids keep their own group (``dropna=False``),
-    matching Spark's grouping semantics.
+    matching Spark's grouping semantics, and carry across a boundary like
+    any other key (NULL == NULL here, as in the grouping).
     """
+    seen = False  # a batch has been emitted, so last_user/last_ema are set
     last_user = None
     last_ema = None
     for pdf in batches:
         if not len(pdf):
             continue
-        prepended = (
-            last_user is not None and pdf["user_id"].iloc[0] == last_user
-        )
+        head_user = pdf["user_id"].iloc[0]
+        if pd.isna(head_user) or pd.isna(last_user):
+            same_user = pd.isna(head_user) and pd.isna(last_user)
+        else:
+            same_user = head_user == last_user
+        prepended = seen and same_user
         if prepended:
             head = pd.DataFrame(
                 {
@@ -321,6 +326,7 @@ def _ema_batches(batches):
         out["ema"] = ema
         if prepended:
             out = out.iloc[1:]
+        seen = True
         last_user = pdf["user_id"].iloc[-1]
         last_ema = ema[-1]
         yield out

@@ -91,52 +91,23 @@ def _stream_partitions(spark: SparkSession, input_path: str | None) -> str:
     return str(max(2, min(cores, math.ceil(total / _STREAM_TARGET_BYTES))))
 
 
-#: State-store backend for bounded drains. ``SPARK_GRAFT_STATE_PROVIDER=
-#: rocksdb`` switches to RocksDBStateStoreProvider (changelog files per
-#: commit instead of the HDFS store's snapshot+delta), ``hdfs``/unset keeps
-#: Spark's default. Measured on this engine's bounded AvailableNow drains
-#: (scripts/state_provider_ab.py): the per-batch state commit is the
-#: documented ~85%-of-warm-drain floor, and which backend wins is
-#: volume/partition-count dependent — hence a knob, not a hardcode.
-_STATE_PROVIDERS = {
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
-
-
 @contextlib.contextmanager
 def _stream_shuffle(spark: SparkSession, input_path: str | None = None):
-    """Temporarily right-size shuffle partitions (and, when requested, the
-    state-store provider) for a bounded stateful run.
+    """Temporarily right-size shuffle partitions for a bounded stateful run.
 
-    Both values are pinned into the (fresh, per-run) checkpoint at query
-    start, so setting them around start→stop is safe; the previous values
-    are restored for subsequent batch queries on the shared session.
+    The value is pinned into the (fresh, per-run) checkpoint at query
+    start, so setting it around start→stop is safe; the previous value is
+    restored for subsequent batch queries on the shared session. The
+    state-store backend is Spark's own
+    ``spark.sql.streaming.stateStore.providerClass``, left as configured.
     """
     key = "spark.sql.shuffle.partitions"
-    pkey = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key)
-    provider = os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "").lower()
-    p_before = None
-    if provider and provider != "hdfs":
-        if provider not in _STATE_PROVIDERS:
-            raise ValueError(
-                "SPARK_GRAFT_STATE_PROVIDER must be 'rocksdb' or 'hdfs', "
-                f"got {provider!r}"
-            )
-        p_before = spark.conf.get(pkey, None)
-        spark.conf.set(pkey, _STATE_PROVIDERS[provider])
     spark.conf.set(key, _stream_partitions(spark, input_path))
     try:
         yield
     finally:
         spark.conf.set(key, before)
-        if p_before is not None:
-            spark.conf.set(pkey, p_before)
-        elif provider and provider != "hdfs":
-            spark.conf.unset(pkey)
 
 
 def _events_stream_dir(sf_dir: str) -> str:

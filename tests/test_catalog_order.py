@@ -254,6 +254,23 @@ def test_oracle_text_changes_are_requeued():
     )
 
 
+def test_package_sources_compile_without_warnings():
+    """Every package source compiles with warnings as errors. An invalid
+    escape such as '\\s' in a non-raw oracle string is a
+    DeprecationWarning on Python 3.11 and a SyntaxWarning from 3.12; the
+    SQL text stays the same only while the literal is raw."""
+    import pathlib
+    import warnings
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent
+    sources = sorted(pkg.rglob("*.py"))
+    assert sources
+    for path in sources:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(path.read_text(encoding="utf-8"), str(path), "exec")
+
+
 def test_corrupt_oracle_generations_warns_not_silently_disables(tmp_path):
     """r06 advice: a typo'd hand edit of oracle_generations.json must warn
     loudly instead of silently disabling the re-queue fix."""

@@ -37,72 +37,145 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
     assert len(exact & ivf) >= 3  # nprobe=4/16 recall floor, fixed seed
 
 
-def test_minhash_batched_signatures_are_bit_identical(spark, sf_dir):
-    """r11: the Arrow signature stage (vectorized code-point Horner fold +
-    LCG minima in numpy, exact int64 arithmetic) must produce the SAME
-    pair set as the interpreted-HOF JVM fold — including on an astral/
-    multi-whitespace adversarial corpus (tokenize/shingle stay JVM, so
-    only the per-character fold semantics are at stake, and Spark's
-    split('')+ascii folds CODE POINTS, which ord() matches exactly)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    adv = spark.createDataFrame(
-        [
-            (1, "\U0001F600 emoji soup \U0001F600 emoji soup again"),
-            (2, "\U0001F600 emoji soup \U0001F600 emoji soup again!"),
-            (3, "tab\tand\nnewline  and   runs of spaces here twice over"),
-            (4, "tab\tand\nnewline  and   runs of spaces here twice more"),
-            (5, ""), (6, None), (7, "short one"),
-        ],
-        "doc_id bigint, text string",
-    ).withColumn("lang", F.lit("en"))
-    for corpus, thresholds in ((docs, (0.5,)), (adv, (0.2, 0.5))):
-        for thr in thresholds:
-            a = sorted(
-                tuple(r)
-                for r in dedup.minhash_portable_pairs(
-                    corpus, jaccard_threshold=thr
-                ).collect()
-            )
-            b = sorted(
-                tuple(r)
-                for r in dedup.minhash_portable_pairs(
-                    corpus, jaccard_threshold=thr, batched_sig=True
-                ).collect()
-            )
-            assert a == b, thr
+#: Adversarial text rows for the signature kernels: astral characters,
+#: tab/newline/multi-space runs, the empty string, NULL text and docs with
+#: fewer than 3 tokens (no shingles -> excluded / NULL signature).
+_ADVERSARIAL_DOCS = [
+    (1, "\U0001F600 emoji soup \U0001F600 emoji soup again"),
+    (2, "\U0001F600 emoji soup \U0001F600 emoji soup again!"),
+    (3, "tab\tand\nnewline  and   runs of spaces here twice over"),
+    (4, "tab\tand\nnewline  and   runs of spaces here twice more"),
+    (5, "tab\tand\nnewline  runs   everywhere now"),
+    (6, ""), (7, None), (8, "short one"), (9, "two toks"),
+]
 
 
-def test_simhash_batched_signatures_are_bit_identical(spark, sf_dir):
-    """r11: the Arrow simhash stage (token folds -> shingle folds -> 40
-    vote counters in numpy, exact int64) must produce byte-equal
-    signatures AND pairs vs the interpreted-HOF expression, including the
-    NULL-text / short-doc NULL-signature domain rule and astral chars."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    sig = lambda df, b: sorted(
-        (r[0], r[1])
-        for r in dedup.simhash_portable_signatures(
-            df, batched_sig=b
-        ).collect()
-    )
-    assert sig(docs, False) == sig(docs, True)
-    adv = spark.createDataFrame(
-        [
-            (1, "\U0001F600 emoji soup \U0001F600 emoji soup again"),
-            (2, None), (3, ""), (4, "two toks"),
-            (5, "tab\tand\nnewline  runs   everywhere now"),
-        ],
-        "doc_id bigint, text string",
-    )
-    a = sig(adv, False)
-    assert a == sig(adv, True)
-    assert a[1][1] is None and a[2][1] is None and a[3][1] is None
-    pairs = lambda b: sorted(
-        tuple(r)
-        for r in dedup.simhash_portable_pairs(
-            docs, max_hamming=8, batched_sig=b
-        ).collect()
-    )
-    assert pairs(False) == pairs(True)
+def _signature_cases(spark, sf_dir, duck):
+    """(label, Spark documents frame, DuckDB connection holding the same
+    rows as ``documents``): the corpus, the adversarial rows, a zero-row
+    frame and an all-NULL-text frame."""
+    import duckdb
+
+    cases = [("corpus", load_tables(spark, sf_dir)["documents"], duck)]
+    extra = {
+        "adversarial": _ADVERSARIAL_DOCS,
+        "zero_rows": [],
+        "all_null_text": [(1, None), (2, None), (3, None)],
+    }
+    for label, rows in extra.items():
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR)"
+        )
+        if rows:
+            con.executemany("INSERT INTO documents VALUES (?, ?, 'en')", rows)
+        df = spark.createDataFrame(rows, "doc_id bigint, text string")
+        cases.append((label, df.withColumn("lang", F.lit("en")), con))
+    return cases
+
+
+def _py_poly_hash(s):
+    """Scalar reference of the Rabin-Karp code-point fold."""
+    h = 0
+    for c in s:
+        h = (h * 131 + ord(c)) % (1 << 40)
+    return h
+
+
+def _py_tokens(text):
+    """Whitespace-RUN tokens; Java's \\s (Spark's split) is exactly this
+    ASCII class."""
+    import re
+
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+
+
+def _py_minhash(text):
+    """Scalar reference of the portable MinHash signature: (distinct
+    shingle hashes in first-occurrence order, five permutation minima),
+    or None for NULL text and docs with fewer than 3 tokens."""
+    p = dedup._MINHASH_P
+    toks = [] if text is None else _py_tokens(text)
+    if len(toks) < 3:
+        return None
+    shingles = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+    hs = list(dict.fromkeys(_py_poly_hash(s) % p for s in shingles))
+    return hs, [min((h * a + b) % p for h in hs) for a, b in dedup._MINHASH_COEFFS]
+
+
+def _py_simhash(text):
+    """Scalar reference of the 40-bit portable SimHash signature."""
+    toks = [] if text is None else _py_tokens(text)
+    if len(toks) < 3:
+        return None
+    mod = 1 << 40
+    th = [_py_poly_hash(t) for t in toks]
+    votes = [0] * 40
+    for i in range(len(th) - 2):
+        h = ((th[i] * 131 + th[i + 1]) % mod * 131 + th[i + 2]) % mod
+        for b in range(40):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    return sum(1 << b for b in range(40) if votes[b] >= 0)
+
+
+def test_minhash_signatures_and_pairs_match_references(spark, sf_dir, duck):
+    """minhash_portable_signatures (Arrow kernel: code-point Horner fold +
+    LCG minima in numpy) equals a scalar pure-Python ord() fold for
+    signature, and minhash_portable_pairs returns exactly the pair set the
+    q_dedup_minhash DuckDB oracle computes — on the corpus, the
+    adversarial rows, a zero-row frame and an all-NULL-text frame."""
+    from etl_asana_spark.queries_llm import _minhash_oracle_sql
+    from etl_asana_spark.testing import compare_frames
+
+    mh = [f"__mh{i}" for i in range(len(dedup._MINHASH_COEFFS))]
+    for label, df, con in _signature_cases(spark, sf_dir, duck):
+        got = sorted(
+            (r["doc_id"], (list(r["__hs"]), [r[m] for m in mh]))
+            for r in dedup.minhash_portable_signatures(df).collect()
+        )
+        want = sorted(
+            (r["doc_id"], _py_minhash(r["text"]))
+            for r in df.select("doc_id", "text").collect()
+            if _py_minhash(r["text"]) is not None
+        )
+        assert got == want, label
+        if label == "adversarial":
+            assert [i for i, _ in got] == [1, 2, 3, 4, 5]
+        for thr in (0.2, 0.5):
+            pairs = dedup.minhash_portable_pairs(df, jaccard_threshold=thr)
+            oracle = con.execute(_minhash_oracle_sql(threshold=thr)).fetchdf()
+            problems = compare_frames(pairs.toPandas(), oracle)
+            assert not problems, (label, thr, problems)
+            if label in ("corpus", "adversarial"):
+                assert len(oracle), (label, thr)
+
+
+def test_simhash_signatures_and_pairs_match_references(spark, sf_dir, duck):
+    """simhash_portable_signatures (Arrow kernel: token folds -> shingle
+    folds -> 40 vote counters in numpy) equals a scalar pure-Python ord()
+    fold signature for signature, including the NULL-signature domain rule
+    (NULL text, "" and < 3 tokens), and simhash_portable_pairs equals the
+    q_dedup_simhash DuckDB oracle — on the corpus, the adversarial rows, a
+    zero-row frame and an all-NULL-text frame."""
+    from etl_asana_spark.queries_llm import _simhash_oracle_sql
+    from etl_asana_spark.testing import compare_frames
+
+    for label, df, con in _signature_cases(spark, sf_dir, duck):
+        got = sorted(
+            tuple(r) for r in dedup.simhash_portable_signatures(df).collect()
+        )
+        want = sorted(
+            (r["doc_id"], _py_simhash(r["text"]))
+            for r in df.select("doc_id", "text").collect()
+        )
+        assert got == want, label
+        if label == "adversarial":
+            assert [i for i, h in got if h is None] == [6, 7, 8, 9]
+        pairs = dedup.simhash_portable_pairs(df, max_hamming=8)
+        problems = compare_frames(
+            pairs.toPandas(), con.execute(_simhash_oracle_sql(8)).fetchdf()
+        )
+        assert not problems, (label, problems)
 
 
 def test_minhash_pairs_are_true_near_dups(spark, sf_dir):
@@ -283,29 +356,30 @@ def test_embed_dedup_blocked_equals_all_pairs_with_exact_duplicates(spark, sf_di
 def test_embed_arrow_verify_matches_jvm(spark, sf_dir, monkeypatch):
     """r11: the Arrow-batched BLAS verify must return the SAME pair set as
     the codegen'd per-pair dot (cos values may differ in float summation
-    order only — bounded at 1e-10 here, ~1e-15 in practice), and the auto
-    gate must keep the JVM path at gate-scale MAC counts."""
+    order only — bounded at 1e-10 here, ~1e-15 in practice), and the
+    default MAC threshold must keep the JVM path at gate-scale MAC counts.
+    Each side is forced through the threshold: 0 -> Arrow, huge -> JVM."""
     e = load_tables(spark, sf_dir)["embeddings"]
+    # The verify is priced from the bounded cell collect and stays JVM
+    # below the default MAC threshold (every shipped SF).
+    dedup.embedding_cosine_dups_blocked(e, threshold=0.45)
+    d = dedup._LAST_EMBED_VERIFY
+    assert d["arrow_ok"] and not d["use_arrow"]
+    assert d["pair_dots"] > 0 and d["dim"] == 64
     rows = {}
-    for mode in ("jvm", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_EMBED_VERIFY", mode)
+    for mode, min_macs in (("jvm", 1 << 62), ("arrow", 0)):
+        monkeypatch.setattr(dedup, "_EMBED_VERIFY_ARROW_MIN_MACS", min_macs)
         rows[mode] = sorted(
             (r["id_a"], r["id_b"], r["cos"])
             for r in dedup.embedding_cosine_dups_blocked(
                 e, threshold=0.45
             ).collect()
         )
+        assert dedup._LAST_EMBED_VERIFY["use_arrow"] == (mode == "arrow")
     assert [r[:2] for r in rows["jvm"]] == [r[:2] for r in rows["arrow"]]
     assert rows["jvm"]  # non-empty at every shipped SF
     for (_, _, cj), (_, _, ca) in zip(rows["jvm"], rows["arrow"]):
         assert abs(cj - ca) < 1e-10
-    # auto prices the verify from the bounded cell collect and stays JVM
-    # below the MAC threshold (every shipped SF).
-    monkeypatch.delenv("SPARK_GRAFT_EMBED_VERIFY", raising=False)
-    dedup.embedding_cosine_dups_blocked(e, threshold=0.45)
-    d = dedup._LAST_EMBED_VERIFY
-    assert d["mode"] == "auto" and d["arrow_ok"] and not d["use_arrow"]
-    assert d["pair_dots"] > 0 and d["dim"] == 64
 
 
 def test_embed_arrow_verify_null_and_nan_semantics(spark, monkeypatch):
@@ -326,14 +400,15 @@ def test_embed_arrow_verify_null_and_nan_semantics(spark, monkeypatch):
         "vec_id bigint, embedding array<double>",
     )
     rows = {}
-    for mode in ("jvm", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_EMBED_VERIFY", mode)
+    for mode, min_macs in (("jvm", 1 << 62), ("arrow", 0)):
+        monkeypatch.setattr(dedup, "_EMBED_VERIFY_ARROW_MIN_MACS", min_macs)
         rows[mode] = sorted(
             (r["id_a"], r["id_b"])
             for r in dedup.embedding_cosine_dups_blocked(
                 df, threshold=0.9
             ).collect()
         )
+        assert dedup._LAST_EMBED_VERIFY["use_arrow"] == (mode == "arrow")
     assert rows["jvm"] == rows["arrow"]
     assert (0, 1) in rows["jvm"]
     assert all(4 in p for p in rows["jvm"] if p != (0, 1))
@@ -821,17 +896,32 @@ def test_pca_reduce_shape_and_variance_order(spark, sf_dir):
     assert variances[0] > 0
 
 
-def test_pca_moments_arrow_path_is_bit_identical(spark, sf_dir, monkeypatch):
-    """r11: the mapInArrow (numpy syrk) moment pass must produce the SAME
-    fixed-point q_emb_pca output as the explode/codegen pass — the
-    serialization rounds at 1e-6 with ~1000x margin-probed headroom over
-    summation-order drift, so any difference is a real bug."""
-    q = catalog.queries()["q_emb_pca"]
-    rows = {}
-    for mode in ("jvm", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_PCA_MOMENTS", mode)
-        rows[mode] = sorted(tuple(r) for r in q(spark, sf_dir).collect())
-    assert rows["jvm"] == rows["arrow"] and rows["jvm"]
+def test_pca_moments_match_duckdb_oracle(spark, sf_dir, duck):
+    """pca_power_reduce's mapInArrow (numpy syrk) moment pass gives the
+    q_emb_pca DuckDB oracle's fixed-point output — the serialization
+    rounds at 1e-6 with ~1000x margin-probed headroom over summation-order
+    drift, so any difference is a real bug. A zero-row and an all-NULL
+    embeddings frame give the oracle's empty answer."""
+    import duckdb
+
+    from etl_asana_spark.functions.parity import fixed_point_join
+    from etl_asana_spark.testing import compare_frames
+
+    oracle = catalog.oracle_sql()["q_emb_pca"]
+    got = catalog.queries()["q_emb_pca"](spark, sf_dir).toPandas()
+    assert len(got)
+    assert not compare_frames(got, duck.execute(oracle).fetchdf())
+    for rows in ([], [(1, None), (2, None)]):
+        df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+        out = similarity.pca_power_reduce(df, k=8, n_iter=20).select(
+            "vec_id", fixed_point_join("reduced").alias("reduced")
+        )
+        con = duckdb.connect()
+        con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+        if rows:
+            con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+        assert not compare_frames(out.toPandas(), con.execute(oracle).fetchdf())
+        con.close()
 
 
 def test_pca_power_reduce_tolerates_nonfinite_components(spark):

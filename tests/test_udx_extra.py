@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from etl_asana_spark import catalog
@@ -61,6 +63,29 @@ def test_ema_batch_boundary_carry_is_exact(spark, sf_dir):
         spark.conf.set(key, old)
     assert len(got) and got["user_id"].nunique() > 1
     pd.testing.assert_frame_equal(got, ref, check_exact=True)
+
+
+@pytest.mark.parametrize(
+    "dtype, null", [("float64", float("nan")), ("Int64", pd.NA)]
+)
+def test_ema_carry_across_batches_for_null_user(dtype, null):
+    """The NULL user_id group (float64 NaN, as mapInPandas delivers a
+    nullable long; or a pandas NA) carries its EMA across a batch boundary
+    like any other key: splitting inside it must not restart the fold."""
+    from etl_asana_spark.queries_udx import _ema_batches
+
+    pdf = pd.DataFrame(
+        {
+            # Spark sorts NULLS FIRST, so the NULL group heads the partition.
+            "user_id": pd.array([null] * 5 + [1] * 3 + [2] * 4, dtype=dtype),
+            "event_id": pd.array(range(12), dtype="int64"),
+            "value": [1.0, 4.0, 2.5, 8.0, 3.0, 5.0, 1.5, 2.0, 9.0, 0.5, 6.0, 7.0],
+        }
+    )
+    one = pd.concat(list(_ema_batches([pdf])), ignore_index=True)
+    split = [pdf.iloc[:3], pdf.iloc[3:].reset_index(drop=True)]
+    two = pd.concat(list(_ema_batches(split)), ignore_index=True)
+    pd.testing.assert_frame_equal(two, one, check_exact=True)
 
 
 def test_variant_extract_equals_schema_declared_path(spark, sf_dir):
