@@ -11,13 +11,16 @@ shows, surfaced as a dict.
 AQE wrapping: after execution the root is AdaptiveSparkPlanExec and each
 materialized stage hides behind *QueryStage nodes; the walker descends
 through both so callers see the REAL final operators.
+
+``codegen_stats`` reads the JVM-wide generated-code compile counter, so a
+caller can difference two reads into "classes compiled by this call".
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -71,3 +74,21 @@ def execution_metrics(df: DataFrame) -> ExecutionMetrics:
         if top is not None:
             m.output_rows = int(top["numOutputRows"])
     return m
+
+
+@dataclass(frozen=True)
+class CodegenStats:
+    compiles: int
+    compile_ms: int
+
+
+def codegen_stats(spark: SparkSession) -> CodegenStats:
+    """Spark's own Janino compile counter for this JVM (``CodegenMetrics``).
+
+    ``compiles`` counts every generated class compiled since the JVM started
+    (a codegen-cache hit does not count). ``compile_ms`` sums the histogram
+    snapshot, which samples at most 1028 compiles: it is the exact total
+    only while ``compiles`` is at most 1028."""
+    hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ms = spark._jvm.java.util.Arrays.stream(hist.getSnapshot().getValues()).sum()
+    return CodegenStats(compiles=int(hist.getCount()), compile_ms=int(ms))

@@ -17,6 +17,17 @@ Why these configs (SURVEY.md §1.2, §4, memory of probe sessions):
 - Arrow on — every pandas interchange (createDataFrame/toPandas, pandas UDFs,
   applyInPandas/mapInPandas) moves via Arrow columnar batches instead of
   pickled rows.
+- ``spark.sql.codegen.cache.maxEntries=1000`` (static, builder only) — the
+  JVM keeps compiled whole-stage-codegen classes in an LRU cache of Spark's
+  default 100 entries. One ``perfbench`` ``analytics`` pass needs ~133
+  distinct classes (curate_corpus 55, q_dedup_minhash 39, q_join_star 13,
+  q_win_topk_group 8, ...) and visits them in the same cyclic order every
+  pass, so at 100 every lookup misses and each pass recompiles all of them
+  (~9 ms of Janino each, plus fresh JIT work). 1000 holds that working set
+  with ~7x headroom; ``plans.metrics.codegen_stats`` counts the compiles.
+  A session the engine did not build keeps Spark's 100: a static conf
+  cannot be set on a running session, so ``ensure_engine_confs`` cannot
+  apply it.
 
 The driver may hand us an already-built session; ``ensure_engine_confs``
 applies the runtime-settable subset to any session, so engine code never
@@ -177,20 +188,18 @@ def build_session(
     a 1000-executor cluster the operator would instead size this to
     ~2-3× total cores (or rely on AQE coalescing from a high initial value).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = SparkSession.builder.appName(app_name).master(master)
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
-        except ValueError:
-            shuffle_partitions = os.cpu_count() or 8
+        shuffle_partitions = _base_parallelism()
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     builder = builder.config("spark.ui.enabled", "false")
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "1000")
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
