@@ -245,12 +245,9 @@ def _rotated(keys: list[str]) -> list[str]:
     Only the gate-facing surfaces use this ordering — ``__spark_entry__.py``
     (what the external driver imports) and ``scripts/sweep.py`` (its local
     mirror). The library API ``catalog.queries()`` defaults to deterministic
-    registration order (SURVEY §7 milestone order). Set
-    ``SPARK_GRAFT_STATIC_ORDER=1`` to force static order even in the gate
-    surfaces (e.g. to reproduce a registration-order run).
+    registration order (SURVEY §7 milestone order); pass
+    ``ordering="registration"`` to reproduce a registration-order run.
     """
-    if os.environ.get("SPARK_GRAFT_STATIC_ORDER"):
-        return list(keys)
     passed, failed, hash_passed = _driver_check_history()
     costs = _key_costs()
     gens = _key_generations()

@@ -24,7 +24,6 @@ Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -1729,10 +1728,8 @@ def semantic_dedup_stats(
 #: only), and raising it from the r07 100k converted q_dedup_clusters'
 #: sf0.1 graph (188k sym edges, one giant component at threshold 0.015)
 #: from a 3-round distributed loop to one collect: 5.29 → 3.96 s measured
-#: (r10). Env knob for clusters with a different driver-memory budget.
-_CC_DRIVER_CUTOVER = int(
-    os.environ.get("SPARK_GRAFT_CC_CUTOVER", str(300_000))
-)
+#: (r10).
+_CC_DRIVER_CUTOVER = 300_000
 
 
 def connected_components(

@@ -38,8 +38,6 @@ codecs, which genuinely need ffmpeg.
 from __future__ import annotations
 
 import importlib
-import math
-import os
 import struct
 import wave
 from collections.abc import Iterator
@@ -47,7 +45,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..fsutil import local_input_bytes
+from ..fsutil import local_input_bytes, volume_partitions
 from . import avi_codec, jpeg_codec, png_codec, wav_codec
 
 
@@ -68,13 +66,8 @@ def _optional(name: str):
 #: measured at sf0.1 (5000 docs, 581 KB parquet, 32-core local): fanning
 #: the decode to all 32 cores ran 0.91 s, 8–16 partitions 0.64–0.76 s,
 #: 1 partition 1.45 s. 64 KiB/task lands that corpus at 9 partitions —
-#: the measured plateau. Env-overridable for corpora whose decode cost per
-#: input byte is very different (the payloads here EXPAND ~50× from
-#: compressed text to pixels; already-binary corpora may want bigger
-#: targets).
-_PY_TASK_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PY_TASK_TARGET_KB", "64")
-) * 1024
+#: the measured plateau.
+_PY_TASK_TARGET_BYTES = 64 * 1024
 
 
 def decode_partitions(spark, path: str, work_factor: float = 1.0) -> int:
@@ -91,12 +84,10 @@ def decode_partitions(spark, path: str, work_factor: float = 1.0) -> int:
     measured at sf0.1 it still wants the full fan-out where decode-only
     kernels plateau at ~10 partitions). Unprobeable paths (object stores
     this local walk can't see) keep the core count."""
-    total = local_input_bytes(path)
     cores = spark.sparkContext.defaultParallelism
-    if total <= 0:
-        return cores
-    return max(
-        1, min(cores, math.ceil(total * work_factor / _PY_TASK_TARGET_BYTES))
+    return volume_partitions(
+        local_input_bytes(path) * work_factor, _PY_TASK_TARGET_BYTES,
+        1, cores, cores,
     )
 
 

@@ -118,8 +118,8 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
             return decode_ima_adpcm(payload)
         raise
     except RuntimeError as exc:
-        # stdlib chunk.py raises a BARE RuntimeError on out-of-range seeks
-        # inside truncated/mutated containers (chunk.Chunk.seek) — a
+        # the stdlib parser raises a BARE RuntimeError on out-of-range seeks
+        # inside truncated/mutated containers (wave._Chunk.seek) — a
         # malformed-container condition, not a programming error. Translate
         # it into the decode contract's ValueError so the callers' narrowed
         # dispatch (r07 advice) keeps real bugs loud while mutated payloads
@@ -129,8 +129,7 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
         # RecursionError (a RuntimeError subclass) and any RuntimeError
         # raised outside the stdlib container parser are genuine bugs and
         # stay loud (r08 advice — verified by walking the traceback's
-        # origin frame; on 3.11 the Chunk class is vendored into wave.py,
-        # so both wave.py and the legacy chunk.py count as parser frames).
+        # origin frame; the Chunk class lives in wave.py since 3.11).
         if isinstance(exc, RecursionError) or not _raised_from_chunk(exc):
             raise
         raise ValueError(f"malformed RIFF chunk structure: {exc!r}") from exc
@@ -138,54 +137,43 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
 
 @functools.lru_cache(maxsize=1)
 def _stdlib_parser_files() -> tuple[str, ...]:
-    """Absolute paths of the ACTUAL imported stdlib RIFF-parser modules:
-    ``wave.__file__`` always (3.11+ vendors the Chunk class there), plus
-    ``chunk.__file__`` where the legacy module still exists (removed in
-    3.13). Resolved from the live modules — not basenames — so a
-    third-party module that happens to be called wave.py can never match
-    (r09 advice: the basename check kept a bug-masking filename axis
-    open). Each module contributes BOTH its ``__file__`` and the matching
-    source/bytecode twin (importlib cache mapping): in a sourceless or
-    frozen deployment ``__file__`` is the ``.pyc`` while a frame's
-    ``co_filename`` is the compile-time ``.py`` path — without the twin
-    the check would silently stop translating (r10 review). lru_cached:
-    the module set is invariant for the process lifetime and the fuzz path
-    routes every mutated container through this classification."""
-    mods = [wave]
+    """Absolute paths of the ACTUAL imported stdlib RIFF parser:
+    ``wave.__file__``, which defines the Chunk class itself since 3.11.
+    Resolved from the live module — not a basename — so a third-party
+    module that happens to be called wave.py can never match (r09 advice:
+    the basename check kept a bug-masking filename axis open). Both the
+    ``__file__`` and its source/bytecode twin (importlib cache mapping)
+    count: in a sourceless or frozen deployment ``__file__`` is the
+    ``.pyc`` while a frame's ``co_filename`` is the compile-time ``.py``
+    path — without the twin the check would silently stop translating
+    (r10 review). lru_cached: the path is invariant for the process
+    lifetime and the fuzz path routes every mutated container through
+    this classification."""
+    mod_file = getattr(wave, "__file__", None)
+    if not mod_file:
+        return ()
+    files = [os.path.realpath(mod_file)]
     try:
-        import chunk as _chunk  # removed from the stdlib in 3.13
+        import importlib.util as _ilu
 
-        mods.append(_chunk)
-    except ImportError:
+        twin = (
+            _ilu.source_from_cache(mod_file)
+            if mod_file.endswith((".pyc", ".pyo"))
+            else _ilu.cache_from_source(mod_file)
+        )
+        files.append(os.path.realpath(twin))
+    except (ValueError, ImportError):
         pass
-    files: list[str] = []
-    for mod in mods:
-        mod_file = getattr(mod, "__file__", None)
-        if not mod_file:
-            continue
-        files.append(os.path.realpath(mod_file))
-        try:
-            import importlib.util as _ilu
-
-            twin = (
-                _ilu.source_from_cache(mod_file)
-                if mod_file.endswith((".pyc", ".pyo"))
-                else _ilu.cache_from_source(mod_file)
-            )
-            files.append(os.path.realpath(twin))
-        except (ValueError, ImportError):
-            pass
     return tuple(files)
 
 
 def _raised_from_chunk(exc: BaseException) -> bool:
     """True iff the exception is the stdlib RIFF parser's out-of-range-seek
     signal: a BARE (no-args) RuntimeError whose innermost frame is the
-    ``seek`` method defined in the imported ``wave`` module's file (or the
-    legacy ``chunk`` module's, pre-3.13). The frame's ``co_filename`` is
-    compared against those modules' resolved ``__file__`` paths — never a
-    basename — so a seek in any OTHER module, whatever its filename, stays
-    loud; requiring the empty args additionally keeps argumented
+    ``seek`` method defined in the imported ``wave`` module's file. The
+    frame's ``co_filename`` is compared against that module's resolved
+    ``__file__`` paths — never a basename — so a seek in any OTHER module,
+    whatever its filename, stays loud; requiring the empty args additionally keeps argumented
     RuntimeErrors raised inside the parser itself loud (r09 advice)."""
     if exc.args:
         return False

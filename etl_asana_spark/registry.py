@@ -22,11 +22,10 @@ filters on all other columns down to the parquet reader).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import local_input_bytes
 from .session import ensure_engine_confs, right_size_shuffle_partitions
 
 #: The driver-materialized tables (TESTDATA.md; FIXTURES.md §A).
@@ -80,30 +79,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Memoized compressed-byte totals per sf_dir (an os.walk per query call
-# would be wasted syscalls; rehearsal scripts that REGENERATE a dir in
+# Memoized compressed-byte totals per sf_dir (a directory walk per query
+# call would be wasted syscalls; rehearsal scripts that REGENERATE a dir in
 # place call clear_cache(), which drops this too).
 _DIR_BYTES: dict[str, int] = {}
 
 
 def _input_bytes(sf_dir: str) -> int:
-    """Total on-disk bytes of the directory's data files (0 if unprobeable
-    — e.g. an object-store URI this local walk can't see; auto-sizing then
-    simply keeps the core-count floor and the operator sizes explicitly)."""
-    cached = _DIR_BYTES.get(sf_dir)
-    if cached is None:
-        total = 0
-        try:
-            for root, _dirs, files in os.walk(sf_dir):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        except OSError:
-            total = 0
-        cached = _DIR_BYTES[sf_dir] = total
-    return cached
+    """Memoized ``fsutil.local_input_bytes`` of the directory (0 if
+    unprobeable — auto-sizing then keeps the core-count floor)."""
+    if sf_dir not in _DIR_BYTES:
+        _DIR_BYTES[sf_dir] = local_input_bytes(sf_dir)
+    return _DIR_BYTES[sf_dir]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

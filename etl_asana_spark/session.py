@@ -36,10 +36,11 @@ depends on who constructed the session.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import SparkSession
+
+from .fsutil import volume_partitions
 
 #: SQL confs that are runtime-settable (safe on a session we didn't build).
 RUNTIME_CONFS: dict[str, str] = {
@@ -86,10 +87,6 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def default_parallelism(spark: SparkSession) -> int:
-    return spark.sparkContext.defaultParallelism
-
-
 def _base_parallelism() -> int:
     """The engine's core-count shuffle default (what ensure_engine_confs
     replaces the stock 200 with)."""
@@ -104,38 +101,35 @@ def _base_parallelism() -> int:
 #: a later right-size can tell "we set this" from "the operator pinned it".
 _AUTO_SHUFFLE_TAG = "spark.etl_asana_spark.autoShufflePartitions"
 
-#: Parquet-compressed → in-memory-row expansion estimate. Snappy parquet on
-#: numeric-heavy columns decompresses/deserializes ~5-10×; 8 is the middle.
-#: Env-overridable for corpora with very different compressibility.
-_PARQUET_EXPANSION = float(os.environ.get("SPARK_GRAFT_PARQUET_EXPANSION", "8"))
-
-#: Target in-memory bytes per shuffle partition. 64 MiB leaves sort/agg
-#: headroom inside a per-task memory share (e.g. 8 GiB heap × 0.6 / 32
-#: concurrent tasks ≈ 150 MiB); the r09 100× rehearsal showed the failure
-#: mode this prevents — q_win_topk_group's per-partition window sort at a
-#: FIXED 32 partitions spilled into a 47.6× multiplier, while 8×cores
-#: partitions ran 0.40× of it. AQE coalesces over-split partitions back
-#: together, but it can never SPLIT a too-big sort partition upward — so
-#: the initial count must scale with input volume.
-_SHUFFLE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SHUFFLE_TARGET_MB", "64")
-) * 1024 * 1024
+#: Compressed input bytes per shuffle partition: a 64 MiB in-memory target
+#: over an ~8× parquet-compressed → in-memory-row expansion (snappy parquet
+#: on numeric-heavy columns decompresses/deserializes ~5-10×; 8 is the
+#: middle). 64 MiB in memory leaves sort/agg headroom inside a per-task
+#: memory share (e.g. 8 GiB heap × 0.6 / 32 concurrent tasks ≈ 150 MiB);
+#: the r09 100× rehearsal showed the failure mode this prevents —
+#: q_win_topk_group's per-partition window sort at a FIXED 32 partitions
+#: spilled into a 47.6× multiplier, while 8×cores partitions ran 0.40× of
+#: it. AQE coalesces over-split partitions back together, but it can never
+#: SPLIT a too-big sort partition upward — so the initial count must scale
+#: with input volume.
+_SHUFFLE_BYTES_PER_PARTITION = 8 * 1024 * 1024
 
 #: Upper bound, as a multiple of the core count, on what auto-sizing will
 #: set (scheduling overhead bound at local scale; on a real cluster cores
 #: grows with the fleet, so the cap scales with it).
-_SHUFFLE_CAP_X = int(os.environ.get("SPARK_GRAFT_SHUFFLE_CAP_X", "16"))
+_SHUFFLE_CAP_X = 16
 
 
 def right_size_shuffle_partitions(spark: SparkSession, input_bytes: int) -> int:
     """Scale ``spark.sql.shuffle.partitions`` with estimated input volume.
 
-    ``max(cores, input_bytes × expansion ÷ target-per-partition)``, capped
-    at ``cores × 16``. Only adjusts a value the engine itself set (the
-    core-count default ensure_engine_confs substitutes for the stock 200,
-    or a previous auto-set value — the latter remembered in a tag conf);
-    an explicit operator-pinned count is respected untouched, so substrate
-    sweeps (SWEEP_SHUFFLE=7) and cluster operators keep full control. One
+    ``clamp(ceil(input_bytes ÷ 8 MiB), cores, cores × 16)`` via
+    ``fsutil.volume_partitions``. Only adjusts a value the engine itself
+    set (the core-count default ensure_engine_confs substitutes for the
+    stock 200, or a previous auto-set value — the latter remembered in a
+    tag conf); an explicit operator-pinned count is respected untouched,
+    so substrate sweeps (SWEEP_SHUFFLE=7) and cluster operators keep full
+    control. One
     inherent ambiguity (r10 review): an operator pinning EXACTLY the core
     count is indistinguishable from the engine default and will be
     auto-scaled — pin any other value to opt out. Returns the effective
@@ -143,7 +137,7 @@ def right_size_shuffle_partitions(spark: SparkSession, input_bytes: int) -> int:
 
     At the shipped scale factors (sf0.001–sf0.1, ≤ ~18 MB parquet) the
     formula stays at the core-count floor — plans and timings there are
-    unchanged; the knob engages exactly where the r09 100× rehearsal
+    unchanged; the rule engages exactly where the r09 100× rehearsal
     demonstrated fixed-count sort spill (SURVEY §8)."""
     try:
         cur = spark.conf.get("spark.sql.shuffle.partitions")
@@ -159,10 +153,10 @@ def right_size_shuffle_partitions(spark: SparkSession, input_bytes: int) -> int:
         # never touched — respect it (r10 review).
         if cur != str(base) and cur != tag:
             return int(cur)
-        want = max(
-            base, math.ceil(input_bytes * _PARQUET_EXPANSION / _SHUFFLE_TARGET_BYTES)
+        want = volume_partitions(
+            input_bytes, _SHUFFLE_BYTES_PER_PARTITION,
+            base, base * _SHUFFLE_CAP_X, base,
         )
-        want = min(want, base * _SHUFFLE_CAP_X)
         if str(want) != cur:
             spark.conf.set("spark.sql.shuffle.partitions", str(want))
         spark.conf.set(_AUTO_SHUFFLE_TAG, str(want))

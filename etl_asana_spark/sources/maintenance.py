@@ -14,6 +14,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fsutil import volume_partitions
 from ..session import ensure_engine_confs
 
 #: Compaction target: bytes of INPUT data per output file. Real deployments
@@ -37,7 +38,7 @@ def compact_parquet(
     ensure_engine_confs(spark)
     df = spark.read.parquet(path)
     total = _input_bytes(spark, path)
-    n_files = max(1, math.ceil(total / target_bytes))
+    n_files = volume_partitions(total, target_bytes, 1, math.inf, 1)
     df.coalesce(n_files).write.mode("overwrite").parquet(out_path or path)
     return n_files
 

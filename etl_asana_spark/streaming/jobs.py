@@ -26,7 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import local_input_bytes
+from ..fsutil import local_input_bytes, volume_partitions
 from ..functions.parity import dsum
 from ..scratch import fresh_dir
 from ..session import ensure_engine_confs
@@ -44,7 +44,7 @@ STORIES_FIXTURE = str(FIXTURES_DIR / "stories.ndjson")
 #: (≤100 k rows/run) 32 partitions means the wall clock is dominated by
 #: empty state-store commits, not data. Production tuning is the opposite
 #: direction: size partitions so per-key state fits executor memory.
-_STREAM_SHUFFLE_PARTITIONS = "8"
+_STREAM_SHUFFLE_PARTITIONS = 8
 
 #: Compressed input bytes per state partition for volume-derived sizing
 #: (r10). Every shuffle partition costs ~40-90 ms of state-store commit
@@ -64,31 +64,16 @@ def _stream_partitions(spark: SparkSession, input_path: str | None) -> str:
     Floor 2 keeps multi-partition state sharding exercised (the semantics
     the demo keys exist to prove); the core cap matches the engine's batch
     default at local scale — a production deployment sizes state fan-out
-    explicitly, and ``SPARK_GRAFT_STREAM_PARTITIONS`` pins the count for
-    substrate sweeps / operators either way. Results are partition-count
-    invariant by construction (dsum fixed-point aggregation; r9's
-    SWEEP_SHUFFLE=7 full-catalog sweep is the standing evidence)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        try:
-            pinned = int(env)
-            if pinned <= 0:
-                raise ValueError
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer, "
-                f"got {env!r}"
-            ) from None
-        return str(pinned)
-    if not input_path:
-        return _STREAM_SHUFFLE_PARTITIONS
-    total = local_input_bytes(input_path)
-    if total <= 0:
-        return _STREAM_SHUFFLE_PARTITIONS
-    import math
-
-    cores = spark.sparkContext.defaultParallelism
-    return str(max(2, min(cores, math.ceil(total / _STREAM_TARGET_BYTES))))
+    explicitly. Results are partition-count invariant by construction
+    (dsum fixed-point aggregation; r9's SWEEP_SHUFFLE=7 full-catalog sweep
+    is the standing evidence)."""
+    return str(volume_partitions(
+        local_input_bytes(input_path) if input_path else 0,
+        _STREAM_TARGET_BYTES,
+        2,
+        spark.sparkContext.defaultParallelism,
+        _STREAM_SHUFFLE_PARTITIONS,
+    ))
 
 
 @contextlib.contextmanager

@@ -254,7 +254,7 @@ def test_runtimeerror_origin_check_requires_seek_frame_and_bare_args():
 
 def test_runtimeerror_origin_check_rejects_foreign_wave_py(tmp_path):
     """r09 advice: the origin check compares the raising frame's file
-    against the IMPORTED wave/chunk modules' __file__, not basenames — a
+    against the IMPORTED wave module's __file__, not basenames — a
     bare RuntimeError from a ``seek`` function in some third-party module
     that happens to live in a file called wave.py must stay loud."""
     import wave as _wave
@@ -283,3 +283,20 @@ def test_runtimeerror_origin_check_rejects_foreign_wave_py(tmp_path):
         seek2()
     except RuntimeError as exc:
         assert wc._raised_from_chunk(exc)
+
+
+def test_parser_origin_files_never_import_deprecated_chunk(monkeypatch):
+    """The stdlib RIFF parser is wave.py alone (it defines its own Chunk
+    class); importing the deprecated ``chunk`` module warns on 3.11-3.12
+    and fails on 3.13, where it is removed."""
+    import os
+    import sys
+    import warnings
+    import wave as _wave
+
+    monkeypatch.delitem(sys.modules, "chunk", raising=False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        files = wc._stdlib_parser_files.__wrapped__()
+    assert os.path.realpath(_wave.__file__) in files
+    assert "chunk" not in sys.modules

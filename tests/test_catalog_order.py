@@ -8,8 +8,7 @@ round, so the rotation's ordering rules ARE the coverage strategy:
 2. never-verified keys sort before verified ones;
 3. within never-verified, OLDER generations first — a key added in a later
    round can never displace a key that has been waiting longer;
-4. within a generation, cheaper keys first (more keys fit the time budget);
-5. ``SPARK_GRAFT_STATIC_ORDER=1`` restores registration order exactly.
+4. within a generation, cheaper keys first (more keys fit the time budget).
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ import etl_asana_spark.catalog as catalog
 
 
 def _order(monkeypatch, keys, passed, costs, gens, failed=frozenset(),
-           static=False, oracle_gens=None, hash_passed=None):
+           oracle_gens=None, hash_passed=None):
     # hash_passed=None keeps the pre-r07 semantics: every pass was a full
     # SQL hash pass (the subtier then never fires).
     hp = set(passed) if hash_passed is None else set(hash_passed)
@@ -30,10 +29,6 @@ def _order(monkeypatch, keys, passed, costs, gens, failed=frozenset(),
     monkeypatch.setattr(
         catalog, "_oracle_generations", lambda: dict(oracle_gens or {})
     )
-    if static:
-        monkeypatch.setenv("SPARK_GRAFT_STATIC_ORDER", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_STATIC_ORDER", raising=False)
     return catalog._rotated(keys)
 
 
@@ -173,19 +168,6 @@ def test_oracle_generations_snapshot_is_sane():
     )
 
 
-def test_static_order_flag(monkeypatch):
-    keys = ["c", "a", "b"]
-    got = _order(
-        monkeypatch,
-        keys,
-        passed={"c": 1},
-        costs={"a": 9.0},
-        gens={},
-        static=True,
-    )
-    assert got == keys
-
-
 def test_library_default_is_registration_order(monkeypatch):
     # catalog.queries() must NOT depend on repo-root artifacts by default;
     # only the gate-facing ordering reads them.
@@ -269,6 +251,22 @@ def test_package_sources_compile_without_warnings():
         with warnings.catch_warnings():
             warnings.simplefilter("error")
             compile(path.read_text(encoding="utf-8"), str(path), "exec")
+
+
+def test_package_reads_only_deployment_env_settings():
+    """The package reads three environment settings, all deployment
+    facts (core count, driver memory, scratch location); sizing rules and
+    thresholds are module constants."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent
+    names = set()
+    for path in pkg.rglob("*.py"):
+        names |= set(re.findall(
+            r"SPARK_GRAFT_([A-Z0-9_]+)", path.read_text(encoding="utf-8")
+        ))
+    assert names == {"CPUS", "DRIVER_MEM", "SCRATCH_BASE"}
 
 
 def test_corrupt_oracle_generations_warns_not_silently_disables(tmp_path):

@@ -367,7 +367,7 @@ def test_right_size_shuffle_partitions_volume_scaling(spark):
         # 100x sf0.1 (~1.75 GB): scales up per the bytes formula.
         want = min(
             max(base, math.ceil(
-                1_750_000_000 * S._PARQUET_EXPANSION / S._SHUFFLE_TARGET_BYTES
+                1_750_000_000 / S._SHUFFLE_BYTES_PER_PARTITION
             )),
             base * S._SHUFFLE_CAP_X,
         )

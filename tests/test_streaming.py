@@ -1139,10 +1139,11 @@ spark.stop()
 
 def test_stream_partitions_volume_rule(spark, tmp_path, monkeypatch):
     """r10 state-partition sizing: volume-derived with floor 2 and core
-    cap, env pin wins, unprobeable input falls back to the static pin."""
+    cap, unprobeable input falls back to the static pin."""
+    from pyspark import SparkContext
+
     from etl_asana_spark.streaming import jobs
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     cores = spark.sparkContext.defaultParallelism
 
     small = tmp_path / "small.parquet"
@@ -1155,13 +1156,16 @@ def test_stream_partitions_volume_rule(spark, tmp_path, monkeypatch):
 
     # no probe-able path: the static pin
     assert (
-        jobs._stream_partitions(spark, None) == jobs._STREAM_SHUFFLE_PARTITIONS
+        jobs._stream_partitions(spark, None)
+        == str(jobs._STREAM_SHUFFLE_PARTITIONS)
     )
     assert (
         jobs._stream_partitions(spark, str(tmp_path / "missing"))
-        == jobs._STREAM_SHUFFLE_PARTITIONS
+        == str(jobs._STREAM_SHUFFLE_PARTITIONS)
     )
 
-    # operator pin beats the rule (substrate sweeps)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "7")
-    assert jobs._stream_partitions(spark, str(big)) == "7"
+    # one core: the floor of 2 wins over the core cap of 1
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    assert jobs._stream_partitions(spark, str(big)) == "2"
