@@ -9,10 +9,12 @@ output a downstream analyst queries.
 Batch-incremental design (SURVEY §2.1 #7/#8): each run merges the new
 batch into the existing store with last-modified-wins semantics keyed on
 ``gid``, so replays and overlapping syncs are idempotent — the property the
-tests assert. At 100 TB the same topology holds: the store is a
-date-partitioned parquet table, the merge is one window over the union
-(shuffle on gid), and everything else is generator/projection work inside
-the scan stage.
+tests assert. One sync round = one scan + one shuffle: the merge is one
+window over the union (shuffle on gid), evaluated once per round and read
+back by the checkpoint token, the store write and every output table.
+At 100 TB the same topology holds: the store is a date-partitioned parquet
+table, and everything after the merge is generator/projection work over
+its materialized rows.
 """
 
 from __future__ import annotations
@@ -28,7 +30,14 @@ from .sources.fixtures import FIXTURES_DIR, ensure_fixtures
 
 @dataclass(frozen=True)
 class EtlResult:
-    """Materialized relational outputs of one sync run."""
+    """Materialized relational outputs of one sync run.
+
+    All four frames sit on one materialized merge: the last-modified-wins
+    upsert is evaluated once per round, so every consumer reads the same
+    surviving version of each gid. The merged rows live as local-checkpoint
+    blocks in the executors' block managers; Spark's ContextCleaner frees
+    them once this result is unreachable.
+    """
 
     tasks: DataFrame              # one row per gid, newest version
     task_tags: DataFrame          # task↔tag bridge
@@ -54,8 +63,19 @@ def run_asana_etl(
     on top of a prior store), derive the bridge/pivot tables from the
     surviving task versions.
 
+    The merge is evaluated once per round: the JSON scan, the union and the
+    ``row_number`` shuffle run in the checkpoint-token job, which fills the
+    merge's local-checkpoint blocks; the store write and the four output
+    tables read those blocks instead of re-parsing the batch. The blocks
+    belong to the executors' block managers and are freed by Spark's
+    ContextCleaner once the returned result is unreachable (persist it on a
+    cluster; localCheckpoint is the single-node form).
+
     Idempotent by construction: re-running with the same batches — or with
     ``prior_tasks`` = a previous run's output — yields identical tables.
+    The tables also agree with each other: one ranking picks the survivor
+    of each gid for all of them, even when two versions tie on
+    ``modified_at``.
     """
     if batch_paths is None:
         d = ensure_fixtures(FIXTURES_DIR)
@@ -64,7 +84,9 @@ def run_asana_etl(
     batches = [asana.read_tasks(spark, p) for p in batch_paths]
     if prior_tasks is not None:
         batches = [prior_tasks, *batches]
-    merged = asana.upsert_batches(*batches)
+    # eager=False: the max_modified job below fills the blocks, and the
+    # five writes read them (one scan + one shuffle per round).
+    merged = asana.upsert_batches(*batches).localCheckpoint(eager=False)
 
     return EtlResult(
         tasks=merged,

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import json
+import os
 import tempfile
 
 from pyspark.sql import functions as F
 
 from etl_asana_spark import pipelines
+from etl_asana_spark.sources import sinks
 from etl_asana_spark.sources.fixtures import FIXTURES_DIR, N_NEW, N_TASKS
 from etl_asana_spark.testing import canonical_rows
 
@@ -55,6 +58,71 @@ def test_etl_outputs_written_and_typed(spark):
     assert dict(tasks.dtypes)["created_ts"] == "timestamp"
     assert tasks.count() == r.tasks.count()
     assert spark.read.parquet(f"{out}/task_tags").count() == r.task_tags.count()
+
+
+def _file_bytes_read(spark) -> int:
+    """Bytes read so far through Hadoop ``FileSystem`` instances of scheme
+    ``file`` in this JVM (driver and local executors alike)."""
+    stats = spark._jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics()
+    return sum(s.getBytesRead() for s in stats if s.getScheme() == "file")
+
+
+def _sync_round(spark, batch_paths, out_dir):
+    """One sync round as a caller runs it: merge, store write, outputs."""
+    r = pipelines.run_asana_etl(spark, batch_paths)
+    sinks.write_table(r.tasks, os.path.join(out_dir, "store"))
+    pipelines.write_etl_outputs(r, os.path.join(out_dir, "out"))
+
+
+def test_etl_round_reads_its_input_once(spark):
+    """A sync round parses its ndjson once, not once per consumer.
+
+    Counter: ``FileSystem.getAllStatistics()`` bytes read for scheme
+    ``file``, the Hadoop filesystem statistic every JSON split read goes
+    through. A round has six consumers of the merge (the checkpoint token,
+    the store write and four output tables); evaluating the merge for each
+    of them reads the batch six times."""
+    d = FIXTURES_DIR
+    paths = [d / "tasks_batch1.ndjson", d / "tasks_batch2.ndjson"]
+    input_bytes = sum(os.path.getsize(p) for p in paths)
+    before = _file_bytes_read(spark)
+    _sync_round(spark, paths, tempfile.mkdtemp(prefix="etl_once_"))
+    read = _file_bytes_read(spark) - before
+    assert input_bytes <= read < 2 * input_bytes, (read, input_bytes)
+
+
+def test_etl_outputs_agree_under_modified_at_tie(spark):
+    """Two versions of a gid with the same ``modified_at`` but different
+    ``name`` and ``tags``: the store row, the ``tasks`` output and the
+    gid's ``task_tags`` rows all carry the same version."""
+    tmp = tempfile.mkdtemp(prefix="etl_tie_")
+    n = 64
+    version_tags = {"a": {"ta"}, "b": {"tb1", "tb2"}}
+    paths = []
+    for version, tags in version_tags.items():
+        path = os.path.join(tmp, f"batch_{version}.ndjson")
+        with open(path, "w") as f:
+            for i in range(n):
+                f.write(json.dumps({
+                    "gid": str(9000 + i),
+                    "name": version,
+                    "modified_at": "2024-02-01T00:00:00.000Z",
+                    "tags": [{"gid": t, "name": t} for t in sorted(tags)],
+                }) + "\n")
+        paths.append(path)
+    _sync_round(spark, paths, tmp)
+
+    def versions(table: str) -> dict[str, str]:
+        return {r["gid"]: r["name"]
+                for r in spark.read.parquet(f"{tmp}/{table}").collect()}
+
+    store = versions("store")
+    tags: dict[str, set[str]] = {}
+    for r in spark.read.parquet(f"{tmp}/out/task_tags").collect():
+        tags.setdefault(r["task_gid"], set()).add(r["tag_gid"])
+    assert len(store) == n
+    assert versions("out/tasks") == store
+    assert tags == {g: version_tags[v] for g, v in store.items()}
 
 
 # ---------------------------------------------------------------------------

@@ -13,8 +13,7 @@ of rows on one key):
 2. AQE's runtime skew-join split: with skew thresholds scaled to test data,
    the executed plan must show ``SortMergeJoin(skew=true)`` — the runtime
    re-plan a 1000-executor cluster relies on for unknown-at-write-time
-   skew. scripts/skew_probe.py records the same measurements at sf0.1
-   scale for SURVEY.
+   skew. SURVEY.md records the same measurements at 2M rows.
 
 The corpus is generated from ``spark.range`` expressions (pure function of
 the row id — no rand(), same reproducibility rule as the salting operators
