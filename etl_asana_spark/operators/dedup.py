@@ -18,8 +18,13 @@ Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
                   sharing ≥1 shingle are ever materialized.
 - embedding cos — near-dups in embedding space; the registered path is
                   triangle-inequality cell blocking (exact, BNLJ-free —
-                  ``embedding_cosine_dups_blocked``); the plain all-pairs
-                  form is kept as the small-scale reference/oracle twin.
+                  ``embedding_cosine_dups_blocked``) whose candidate pairs
+                  are verified by one numpy/BLAS kernel over Arrow
+                  cogroups (``_cosine_matches``, shared with
+                  ``semantic_dedup_stats``); it keeps the JVM filter's
+                  NULL/NaN/length semantics, so the answer set is the
+                  all-pairs one. The plain all-pairs form is kept as the
+                  small-scale reference the tests compare against.
 """
 
 from __future__ import annotations
@@ -102,8 +107,7 @@ def _expand_member_pairs(
     rep_pairs: DataFrame, membership: DataFrame, payload: str
 ) -> DataFrame:
     """Representative pairs → member pairs (the exact-duplicate-collapse
-    expansion shared by the text fuzzy-dedup family; the embed family's
-    twin lives in ``embedding_cosine_dups_blocked``).
+    expansion shared by the text and embedding fuzzy-dedup families).
 
     Every member of rep_a's text-group pairs with every member of rep_b's
     at the rep pair's ``payload`` value (members are byte-identical to
@@ -132,22 +136,19 @@ def _intra_group_pairs(
 ) -> DataFrame:
     """All within-group member pairs for groups that can self-pair.
 
-    ``pairable`` is evaluated against the group's ``vec`` (the shared
-    text): byte-identical docs pair in the naive formulation exactly when
-    they can shingle at all, at the self-distance ``payload``. The filter
-    runs BEFORE the quadratic enumeration joins, so an unpairable group
-    never pays its expansion."""
+    ``pairable`` and ``payload`` are evaluated against the group's ``vec``
+    (the shared text or vector): byte-identical members pair in the naive
+    formulation exactly when their shared value pairs with itself, at the
+    self-distance ``payload``. Both are evaluated once per group, BEFORE the
+    quadratic enumeration joins, so an unpairable group never pays its
+    expansion."""
     return (
         groups.filter((F.col("cnt") >= 2) & pairable)
-        .select("rep")
+        .select("rep", payload.alias(payload_name))
         .join(membership.select("rep", F.col("id").alias("pa")), "rep")
         .join(membership.select("rep", F.col("id").alias("pb")), "rep")
         .filter(F.col("pa") < F.col("pb"))
-        .select(
-            F.col("pa").alias("id_a"),
-            F.col("pb").alias("id_b"),
-            payload.alias(payload_name),
-        )
+        .select(F.col("pa").alias("id_a"), F.col("pb").alias("id_b"), payload_name)
     )
 
 
@@ -161,16 +162,16 @@ def _collapsed_pairs(
     payload_name: str,
     emit_intra: bool,
 ) -> DataFrame:
-    """The exact-duplicate collapse shared by all four text pair families:
-    one representative per distinct text → ``naive_fn`` over reps → expand
-    rep pairs to member pairs → within-group pairs for groups the naive
-    form would self-pair.
+    """The exact-duplicate collapse shared by the four text pair families
+    and the blocked embedding family: one representative per distinct text
+    (or vector) → ``naive_fn`` over reps → expand rep pairs to member pairs
+    → within-group pairs for groups the naive form would self-pair.
 
     Single-sourced so the per-family pieces that MUST stay mutually
     consistent live at one call site each: ``naive_fn(reps)`` returns the
     family's naive pairs as (id_a, id_b, ``payload_name``) over a frame
     with the caller's ``id_col``/``text_col`` schema; ``pairable`` mirrors
-    the naive featurizer's pairing capability against the group text
+    the naive featurizer's pairing capability against the group value
     ``vec``; ``emit_intra`` mirrors the naive form's threshold boundary
     (identical texts sit AT self-distance, and whether the naive filter
     emits them there is family-specific — strict ``<`` for MinHash's
@@ -912,9 +913,10 @@ def embedding_cosine_dups(
 ) -> DataFrame:
     """Near-duplicate pairs in embedding space (cos >= threshold).
 
-    All-pairs here (correct and fine to ~10⁴ vectors); the scale path is
-    identical code over LSH/IVF candidate buckets (operators.similarity) —
-    block first, then this exact verification join per bucket.
+    All-pairs, one JVM ``cosine`` per pair (correct and fine to ~10⁴
+    vectors): the reference the blocked scale path
+    (:func:`embedding_cosine_dups_blocked`, which prunes cell pairs and
+    then verifies exactly in BLAS) is tested against.
     """
     from ..functions.vector import cosine
 
@@ -963,272 +965,169 @@ def _collapse_exact(
     return groups, membership
 
 
-#: Exact verify cost (multiply-accumulates) above which
-#: ``embedding_cosine_dups_blocked`` switches from the codegen'd per-pair
-#: dot to the Arrow-batched BLAS kernel: below it the Python-worker
-#: round-trip does not pay. The cost is read from the bounded cell collect
-#: the blocking already does (Σ nᵢ·nⱼ pair dots over surviving cell pairs
-#: × vector width), so pricing costs no extra job.
-_EMBED_VERIFY_ARROW_MIN_MACS = 200_000_000
+def _cosine_matches(vec_a, vec_b, ids_a, ids_b, threshold: float, ordered: bool):
+    """Left/right row pairs with ``cosine(a, b) >= threshold``: the numpy
+    scoring kernel behind both Arrow pair verifies.
 
-#: Last verify-path decision (diagnostic; see embedding_cosine_dups_blocked).
-_LAST_EMBED_VERIFY: dict = {}
+    ``vec_*`` / ``ids_*`` are one cogroup side's Arrow list vectors and ids
+    (chunked arrays). Returns numpy ``(ii, jj, cos)``: row indices into each
+    side and the pair cosine. The filter is :func:`functions.vector.cosine`
+    ``>= threshold`` as Spark evaluates it:
+
+    - NaN cosines are KEPT (Spark orders NaN above any threshold);
+    - zero denominators drop (``try_divide`` gives NULL);
+    - NULL vectors, vectors with a NULL element and NULL ids drop (the fold
+      is NULL; a NULL id never joins back to its members);
+    - vectors of unequal length never pair (``zip_with`` pads with NULL), so
+      rows are blocked by length — any width, 0 included — and each block
+      is one level-3 BLAS matmul, its score matrix chunked to ≤2²⁴ doubles
+      so an oversized group pair bounds worker memory instead of OOMing;
+    - ``ordered`` keeps only ``id_a < id_b`` under the id type's Spark order
+      (Arrow's dense rank: byte order for strings, NaN last), which dedups
+      the pairs of one group scored against itself.
+
+    Cosines differ from the JVM fold only in float-summation order (BLAS
+    blocking and numpy's norm sum vs strict index order, ~1e-15), so a
+    threshold decision can flip only for a pair that close to the cut.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def rows(vec, ids):
+        # Flat values, row starts, row lengths and the rows that can pair.
+        vec = vec.combine_chunks()
+        offs = np.asarray(vec.offsets)
+        vals = vec.values
+        ok = np.asarray(vec.is_valid()) & np.asarray(ids.is_valid())
+        if vals.null_count:
+            nulls = np.concatenate(([0], np.cumsum(np.asarray(vals.is_null()))))
+            ok &= nulls[offs[1:]] == nulls[offs[:-1]]
+        flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
+        return flat, offs[:-1], np.diff(offs), ok
+
+    fa, sa, la, oka = rows(vec_a, ids_a)
+    fb, sb, lb, okb = rows(vec_b, ids_b)
+    if ordered:
+        rank = pc.rank(
+            pa.chunked_array(ids_a.chunks + ids_b.chunks, type=ids_a.type),
+            tiebreaker="dense",
+        ).to_numpy()
+        ra, rb = rank[: len(ids_a)], rank[len(ids_a) :]
+    ii, jj, cs = [np.zeros(0, np.intp)], [np.zeros(0, np.intp)], [np.zeros(0)]
+    for length in np.intersect1d(la[oka], lb[okb]):
+        ia = np.nonzero(oka & (la == length))[0]
+        ib = np.nonzero(okb & (lb == length))[0]
+        ma = fa[sa[ia, None] + np.arange(length)]
+        mb = fb[sb[ib, None] + np.arange(length)]
+        with np.errstate(all="ignore"):
+            na_, nb_ = np.sqrt((ma * ma).sum(axis=1)), np.sqrt((mb * mb).sum(axis=1))
+        step = max(1, (1 << 24) // len(ia))
+        for j0 in range(0, len(ib), step):
+            j = ib[j0 : j0 + step]
+            with np.errstate(all="ignore"):
+                denom = np.outer(na_, nb_[j0 : j0 + step])
+                cos = (ma @ mb[j0 : j0 + step].T) / denom
+                keep = ((cos >= threshold) | np.isnan(cos)) & (denom != 0.0)
+            if ordered:
+                keep &= ra[ia, None] < rb[None, j]
+            i, k = np.nonzero(keep)
+            ii.append(ia[i])
+            jj.append(j[k])
+            cs.append(cos[i, k])
+    return np.concatenate(ii), np.concatenate(jj), np.concatenate(cs)
 
 
 def _arrow_pair_verify(
-    assigned: DataFrame, edge_df: DataFrame, dim: int, threshold: float
+    assigned: DataFrame, edge_df: DataFrame, threshold: float
 ) -> DataFrame:
-    """Candidate-pair cosine verify as one BLAS matmul per cell pair.
+    """Exact cosine verify of the surviving cell pairs: one cogroup per
+    cell pair, scored by :func:`_cosine_matches`.
 
-    Same answer set as the JVM join + per-pair dot (the blocked verify's
-    other branch) up to float-summation order: the matmul accumulates
-    partial products in BLAS blocking order instead of the fold's strict
-    index order, so a cosine can differ from the JVM value in the last
-    ulp — which only matters for a pair sitting within ~1e-15 of the
-    threshold (the shipped corpora have ≥1e-3 margins, differential-tested
-    bit-equal after the queries' ROUND(8)). Spark filter semantics are
-    replicated exactly: NaN cosines KEPT (NaN > any threshold), zero
-    denominators dropped (try_divide NULL), vectors containing NULL
-    elements dropped (NULL poisons the JVM fold), same-cell pairs deduped
-    by id order.
-
-    Scale shape (guide §4.2/§2.3): each cell's vectors cross the Python
-    boundary once per incident cell-pair edge as Arrow batches — the same
-    fan-out the JVM join's exchange pays — while the O(pairs) dot work
-    runs as level-3 BLAS instead of per-pair scalar expression eval. The
-    score matrix is chunked to ≤2²⁴ doubles so one oversized cell pair
-    bounds memory, never OOMs the worker.
+    ``assigned`` has one row per representative (cell, id, vec); ``edge_df``
+    the unpruned (cell_a ≤ cell_b) pairs. Returns (id_a, id_b, cos) rep
+    pairs. Cross-cell pairs meet exactly once (one edge per cell pair);
+    same-cell pairs are deduped by id order. Each cell's vectors cross the
+    Python boundary once per incident edge as Arrow batches — the fan-out a
+    JVM join's exchange would pay — and the O(pairs) dot work runs as BLAS.
     """
-    members = assigned.filter(F.col("vec").isNotNull())
     # Distinct column names per side: both derive from the same plan, and
     # identically-named columns would trip the ambiguous-self-join check
     # at the cogroup.
-    lt = members.select(
-        F.col("cell").alias("cell_a"),
-        F.col("id").alias("ida"),
-        F.col("vec").alias("veca"),
-        F.col("nrm").alias("nrma"),
+    lt = assigned.select(
+        F.col("cell").alias("cell_a"), F.col("id").alias("ida"), F.col("vec").alias("veca")
     ).join(F.broadcast(edge_df), "cell_a")
-    rt = members.select(
-        F.col("cell").alias("cell_b"),
-        F.col("id").alias("idb"),
-        F.col("vec").alias("vecb"),
-        F.col("nrm").alias("nrmb"),
+    rt = assigned.select(
+        F.col("cell").alias("cell_b"), F.col("id").alias("idb"), F.col("vec").alias("vecb")
     ).join(F.broadcast(edge_df), "cell_b")
     id_dt = assigned.schema["id"].dataType.simpleString()
 
     def verify(left, right):
-        import numpy as np
         import pyarrow as pa
 
-        out_schema = pa.schema(
-            [
-                pa.field("rep_a", left.schema.field("ida").type),
-                pa.field("rep_b", right.schema.field("idb").type),
-                pa.field("cos", pa.float64()),
-            ]
-        )
-        if left.num_rows == 0 or right.num_rows == 0:
-            return out_schema.empty_table()
-
-        def unpack(tbl, vec_col, nrm_col, id_col):
-            vec = tbl.column(vec_col).combine_chunks()
-            vals = vec.flatten()  # respects slice offsets, no null lists
-            n = len(vec)
-            if vals.null_count:
-                # A NULL element poisons the JVM fold to a NULL cosine,
-                # which the threshold filter drops — exclude those rows
-                # (zeroing keeps the matmul shape without NaN leakage).
-                bad = np.asarray(vals.is_null()).reshape(n, dim).any(axis=1)
-            else:
-                bad = np.zeros(n, dtype=bool)
-            m = np.asarray(
-                vals.to_numpy(zero_copy_only=False), dtype=np.float64
-            ).reshape(n, dim)
-            if bad.any():
-                m[bad] = 0.0
-            nrm = np.asarray(
-                tbl.column(nrm_col)
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            ids = tbl.column(id_col).combine_chunks()
-            return m, nrm, ~bad, ids
-
-        ma, na_, va, ids_a = unpack(left, "veca", "nrma", "ida")
-        mb, nb_, vb, ids_b = unpack(right, "vecb", "nrmb", "idb")
         same_cell = (
-            left.column("cell_a")[0].as_py() == left.column("cell_b")[0].as_py()
+            left.num_rows > 0
+            and left["cell_a"][0].as_py() == left["cell_b"][0].as_py()
         )
-        if same_cell:
-            ids_a_np = ids_a.to_numpy(zero_copy_only=False)
-            ids_b_np = ids_b.to_numpy(zero_copy_only=False)
-        ii_parts, jj_parts, cos_parts = [], [], []
-        step = max(1, (1 << 24) // max(1, ma.shape[0]))
-        for j0 in range(0, mb.shape[0], step):
-            mbj = mb[j0 : j0 + step]
-            s = ma @ mbj.T
-            denom = np.outer(na_, nb_[j0 : j0 + step])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = s / denom
-            keep = ((cos >= threshold) | np.isnan(cos)) & (denom != 0.0)
-            keep &= va[:, None] & vb[None, j0 : j0 + step]
-            if same_cell:
-                keep &= ids_a_np[:, None] < ids_b_np[None, j0 : j0 + step]
-            ii, jj = np.nonzero(keep)
-            if len(ii):
-                ii_parts.append(ii)
-                jj_parts.append(jj + j0)
-                cos_parts.append(cos[ii, jj])
-        if not ii_parts:
-            return out_schema.empty_table()
+        ii, jj, cos = _cosine_matches(
+            left["veca"], right["vecb"], left["ida"], right["idb"],
+            threshold, ordered=same_cell,
+        )
         return pa.table(
             {
-                "rep_a": ids_a.take(pa.array(np.concatenate(ii_parts))),
-                "rep_b": ids_b.take(pa.array(np.concatenate(jj_parts))),
-                "cos": pa.array(np.concatenate(cos_parts), type=pa.float64()),
-            },
-            schema=out_schema,
+                "id_a": left["ida"].take(ii),
+                "id_b": right["idb"].take(jj),
+                "cos": pa.array(cos, pa.float64()),
+            }
         )
 
     return (
         lt.groupBy("cell_a", "cell_b")
         .cogroup(rt.groupBy("cell_a", "cell_b"))
-        .applyInArrow(verify, f"rep_a {id_dt}, rep_b {id_dt}, cos double")
+        .applyInArrow(verify, f"id_a {id_dt}, id_b {id_dt}, cos double")
     )
 
 
-def _arrow_cluster_pair_stats(
-    groups: DataFrame, threshold: float
-) -> DataFrame:
-    """Within-cluster rep-pair matching as one BLAS matmul per cluster —
-    the batched twin of ``semantic_dedup_stats``'s JVM pair join.
+def _arrow_cluster_pair_stats(groups: DataFrame, threshold: float) -> DataFrame:
+    """Within-cluster rep-pair matching: one cogroup per cluster, scored by
+    :func:`_cosine_matches`.
 
     Input: the collapse's ``groups`` frame (cluster, rep, vec, cnt).
     Output: matched pairs (cluster, rep_a, rep_b, cnt_a, cnt_b) with
     ``rep_a < rep_b`` — exactly the columns the stats arithmetic consumes
     (the pair cosine itself is never read downstream).
-
-    Pair semantics replicate the JVM ``cosine(va, vb) >= threshold``
-    filter: NaN cosines kept, zero-norm denominators dropped (try_divide
-    NULL), NULL vectors and vectors containing NULL elements dropped (the
-    fold poisons to NULL), and — because ``zip_with`` null-pads unequal
-    lengths into a NULL dot — pairs only ever match BETWEEN equal-length
-    vectors, which the kernel expresses by blocking each cluster's rows by
-    vector length and matmul'ing within a block. Cosine values differ from
-    the JVM fold only in float-summation order (BLAS blocking vs strict
-    index order), so the threshold decision can flip only for a pair
-    within ~1e-15 of the cut — the registered corpus margin is 5.1e-6
-    (q_dedup_semantic docstring), differential-tested identical.
     """
     lt = groups.select(
         "cluster",
         F.col("rep").alias("rep_a"),
         F.col("vec").alias("va"),
         F.col("cnt").alias("cnt_a"),
-    ).filter(F.col("va").isNotNull())
+    )
     rt = groups.select(
         "cluster",
         F.col("rep").alias("rep_b"),
         F.col("vec").alias("vb"),
         F.col("cnt").alias("cnt_b"),
-    ).filter(F.col("vb").isNotNull())
+    )
     cl_dt = groups.schema["cluster"].dataType.simpleString()
     rep_dt = groups.schema["rep"].dataType.simpleString()
     cnt_dt = groups.schema["cnt"].dataType.simpleString()
 
     def verify(left, right):
-        import numpy as np
         import pyarrow as pa
 
-        out_schema = pa.schema(
-            [
-                pa.field("cluster", left.schema.field("cluster").type),
-                pa.field("rep_a", left.schema.field("rep_a").type),
-                pa.field("rep_b", right.schema.field("rep_b").type),
-                pa.field("cnt_a", left.schema.field("cnt_a").type),
-                pa.field("cnt_b", right.schema.field("cnt_b").type),
-            ]
+        ii, jj, _ = _cosine_matches(
+            left["va"], right["vb"], left["rep_a"], right["rep_b"],
+            threshold, ordered=True,
         )
-        if left.num_rows == 0 or right.num_rows == 0:
-            return out_schema.empty_table()
-
-        def unpack(tbl, vec_col, rep_col):
-            vec = tbl.column(vec_col).combine_chunks()
-            offs = np.asarray(vec.offsets)
-            lens = np.diff(offs)
-            vals = vec.flatten()
-            if vals.null_count:
-                elem_ok = ~np.asarray(vals.is_null())
-            else:
-                elem_ok = None
-            flat = np.asarray(
-                vals.to_numpy(zero_copy_only=False), dtype=np.float64
-            )
-            reps = np.asarray(
-                tbl.column(rep_col)
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False)
-            )
-            return flat, offs - offs[0], lens, elem_ok, reps
-
-        fa, offa, la, oka, reps_a = unpack(left, "va", "rep_a")
-        fb, offb, lb, okb, reps_b = unpack(right, "vb", "rep_b")
-
-        def block(flat, offs, elem_ok, length, idx):
-            # Rows of one length as a dense (n, length) matrix + validity.
-            if length == 0:
-                m = np.zeros((len(idx), 0))
-                ok = np.ones(len(idx), dtype=bool)
-            else:
-                starts = offs[idx]
-                gather = starts[:, None] + np.arange(length)[None, :]
-                m = flat[gather]
-                ok = (
-                    np.ones(len(idx), dtype=bool)
-                    if elem_ok is None
-                    else elem_ok[gather].all(axis=1)
-                )
-                m[~ok] = 0.0
-            nrm = np.sqrt((m * m).sum(axis=1))
-            return m, nrm, ok
-
-        ii_parts, jj_parts = [], []
-        for length in np.intersect1d(np.unique(la), np.unique(lb)):
-            ia = np.nonzero(la == length)[0]
-            ib = np.nonzero(lb == length)[0]
-            ma, na_, va_ok = block(fa, offa, oka, int(length), ia)
-            mb, nb_, vb_ok = block(fb, offb, okb, int(length), ib)
-            step = max(1, (1 << 24) // max(1, ma.shape[0]))
-            for j0 in range(0, mb.shape[0], step):
-                mbj = mb[j0 : j0 + step]
-                s = ma @ mbj.T
-                denom = np.outer(na_, nb_[j0 : j0 + step])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = s / denom
-                keep = ((cos >= threshold) | np.isnan(cos)) & (denom != 0.0)
-                keep &= va_ok[:, None] & vb_ok[None, j0 : j0 + step]
-                keep &= (
-                    reps_a[ia][:, None] < reps_b[ib][None, j0 : j0 + step]
-                )
-                ii, jj = np.nonzero(keep)
-                if len(ii):
-                    ii_parts.append(ia[ii])
-                    jj_parts.append(ib[jj + j0])
-        if not ii_parts:
-            return out_schema.empty_table()
-        ii = pa.array(np.concatenate(ii_parts))
-        jj = pa.array(np.concatenate(jj_parts))
         return pa.table(
             {
-                "cluster": left.column("cluster").combine_chunks().take(ii),
-                "rep_a": left.column("rep_a").combine_chunks().take(ii),
-                "rep_b": right.column("rep_b").combine_chunks().take(jj),
-                "cnt_a": left.column("cnt_a").combine_chunks().take(ii),
-                "cnt_b": right.column("cnt_b").combine_chunks().take(jj),
-            },
-            schema=out_schema,
+                "cluster": left["cluster"].take(ii),
+                "rep_a": left["rep_a"].take(ii),
+                "rep_b": right["rep_b"].take(jj),
+                "cnt_a": left["cnt_a"].take(ii),
+                "cnt_b": right["cnt_b"].take(jj),
+            }
         )
 
     return (
@@ -1267,297 +1166,130 @@ def embedding_cosine_dups_blocked(
        only if ``‖cᵢ−cⱼ‖ ≤ rᵢ+rⱼ+d`` (triangle inequality: any a∈i, b∈j
        has ``‖â−b̂‖ ≥ ‖cᵢ−cⱼ‖−rᵢ−rⱼ``); all other cell pairs are pruned
        with proof, never scanned.
-    4. The surviving cell pairs get the SAME exact cosine verify join as
-       the all-pairs form (raw vectors, identical expression), so values
-       are bit-identical where produced.
+    4. The surviving cell pairs get one exact cosine verify: each cell pair
+       is a cogroup whose two sides are scored by one BLAS matmul
+       (``_cosine_matches``) under the all-pairs form's filter semantics —
+       NaN kept, zero denominator / NULL / unequal length dropped. The
+       answer set is the all-pairs one; cosines differ from the JVM fold
+       only in summation order (~1e-15, against q_dedup_embed's 5e-3
+       threshold margin).
 
     Scale shape: no BNLJ anywhere — cell stats are two shuffles on the cell
     key, the cell-pair table is O(cells²) tiny rows computed from a bounded
     ``collect()`` (cells ≤ 2^n_sign_bits, same class as the repo's other
-    bounded collects), and the verify join is a broadcast of that table plus
-    one shuffle on the cell key. With clustered real-world embeddings and a
-    realistic threshold, pruning discards most cell pairs; on an adversarial
-    uniform corpus it degrades to the same total comparisons as all-pairs
-    but still executes as shuffle joins, never a nested loop.
+    bounded collects), and the verify is a broadcast of that table plus one
+    cogroup shuffle on the cell-pair key. With clustered real-world
+    embeddings and a realistic threshold, pruning discards most cell pairs;
+    on an adversarial uniform corpus it degrades to the same total
+    comparisons as all-pairs but still executes as shuffles, never a nested
+    loop, and as matmuls, never a per-pair expression eval.
 
     Round-4 (found by ``scripts/scale_rehearsal.py``, which replicates the
     corpus so every vector has N−1 byte-identical copies): cell blocking
     cannot subdivide IDENTICAL vectors, so a duplicate-heavy corpus made
-    the within-cell verify quadratic in the duplicate count — 7.3× cost at
-    3× data, a single hot task evaluating interpreted-HOF cosines for
-    minutes at 10×. Two fixes, both preserving exactness:
-
-    - **Exact-duplicate collapse first**: reduce to one REPRESENTATIVE per
-      distinct vector (min id, map-side-combinable groupBy on the vector
-      bytes), run the blocked pipeline over reps only, then expand rep
-      pairs back to member pairs through an ``(id, rep)`` membership table
-      — cross-group pairs inherit the rep pair's cosine (the member
-      vectors ARE the rep vectors), and intra-group pairs compute the
-      self-cosine once per DISTINCT VECTOR and enumerate member pairs with
-      plain codegen'd joins (no per-pair distance eval at all). The
-      expansion is deliberately join-based, not collect_list+explode: a
-      boilerplate vector with millions of copies would otherwise build one
-      giant array cell and fan it out in a single task, where the
-      membership joins shuffle on rep ids and stay AQE-skew-splittable.
-      Exactly the hygiene a production pipeline wants anyway: never
-      re-verify a byte dup.
-    - **Unrolled dot in the verify**: interpreted higher-order functions
-      (``aggregate``/``zip_with``) cannot whole-stage-codegen, and the
-      verify evaluates one per candidate PAIR. The dot is unrolled to a
-      fixed-width left-to-right sum of products (dim is known driver-side
-      from the bounded cell collect) — the identical float-addition
-      sequence as the HOF fold (bit-identical values), but codegen'd.
+    the within-cell verify quadratic in the duplicate count. Hence the
+    exact-duplicate collapse first, shared with the text families through
+    ``_collapsed_pairs``: the blocked pipeline runs over one REPRESENTATIVE
+    per distinct vector (min id), rep pairs expand back to member pairs
+    through an ``(id, rep)`` membership table — the member vectors ARE the
+    rep vectors, so they inherit the rep pair's cosine — and intra-group
+    pairs compute the self-cosine once per DISTINCT VECTOR and enumerate
+    member pairs with plain joins. The expansion is join-based, never
+    collect_list+explode, so a boilerplate vector with millions of copies
+    stays AQE-skew-splittable instead of fanning out in one task.
     """
     import math
 
-    from ..functions.vector import dot, l2_norm, l2_normalize
+    from ..functions.vector import cosine, l2_normalize
 
     d_cut = math.sqrt(max(0.0, 2.0 - 2.0 * threshold)) + 1e-9
 
-    # Collapse byte-identical vectors (see docstring): reps is one row per
-    # DISTINCT vector; membership maps every id to its group's rep via a
-    # join back on the vector bytes. Null vectors drop at the inner join,
-    # matching the all-pairs form (any cosine against NULL is NULL and
-    # fails the threshold filter). localCheckpoint truncates lineage so the
-    # groupBy/join are not re-executed by each downstream branch (blocking
-    # / cross-expansion / intra-enumeration) — same discipline as
-    # connected_components' symmetric edge list.
-    reps, membership = _collapse_exact(embeddings, id_col, vec_col)
-
-    # Per-vector norm computed ONCE here (rep rows) instead of inside the
-    # verify join (candidate-pair count ≫ n): pair cosine then costs one
-    # pass (the dot) instead of three. Bit-identical to cosine():
-    # same l2_norm expression, same product, same try_divide.
-    base = reps.select(
-        F.col("rep").alias("id"),
-        F.col("vec"),
-        l2_normalize("vec").alias("nv"),
-        l2_norm("vec").alias("nrm"),
-    )
-    # Cell id from coordinate signs — pure projection, no shuffle. F.get
-    # (not []) so a vector SHORTER than n_sign_bits contributes NULL > 0 =
-    # false (bit 0) instead of an ANSI INVALID_ARRAY_INDEX — any
-    # deterministic assignment is valid, crashing is not.
-    cell = F.lit(0)
-    for p in range(n_sign_bits):
-        cell = cell + F.when(
-            F.get(F.col("nv"), p) > 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-    assigned = base.withColumn("cell", cell)
-
-    # Centroid per cell via posexplode → (cell, pos) mean → re-assembled
-    # array (ordered collect_list — the repo's standard array-rebuild).
-    cent = (
-        assigned.select("cell", F.posexplode("nv").alias("pos", "x"))
-        .groupBy("cell", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("centroid")
+    def blocked_rep_pairs(reps: DataFrame) -> DataFrame:
+        assigned = reps.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            l2_normalize(vec_col).alias("nv"),
         )
-    )
-    dist_to_cent = F.sqrt(
-        F.aggregate(
-            F.zip_with("nv", "centroid", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    stats = (
-        assigned.join(F.broadcast(cent), "cell")
-        .groupBy("cell")
-        .agg(
-            F.first("centroid").alias("centroid"),
-            F.max(dist_to_cent).alias("r"),
-            # vector-width bounds ride along in the same bounded collect:
-            # they decide whether the verify dot may unroll (see below).
-            F.min(F.size("vec")).alias("dmin"),
-            F.max(F.size("vec")).alias("dmax"),
-            # member count per cell: with the edge list this prices the
-            # verify EXACTLY (Σ nᵢ·nⱼ candidate dots) driver-side, zero
-            # extra jobs — the r11 JVM-vs-Arrow verify decision input.
-            F.count(F.lit(1)).alias("n_members"),
-        )
-    )
+        # Cell id from coordinate signs — pure projection, no shuffle. F.get
+        # (not []) so a vector SHORTER than n_sign_bits contributes NULL > 0
+        # = false (bit 0) instead of an ANSI INVALID_ARRAY_INDEX — any
+        # deterministic assignment is valid, crashing is not.
+        cell = F.lit(0)
+        for p in range(n_sign_bits):
+            cell = cell + F.when(
+                F.get(F.col("nv"), p) > 0, F.lit(1 << p)
+            ).otherwise(F.lit(0))
+        assigned = assigned.withColumn("cell", cell)
 
-    # Bounded collect (≤ 2^n_sign_bits rows): prune cell pairs driver-side.
-    # EXACTNESS RULE: a cell pair may be dropped only when the triangle
-    # inequality PROVES no member pair can match. NaN/NULL cell stats
-    # (vectors with NaN components, Inf vectors whose normalization is
-    # NaN, all-degenerate cells) prove nothing — and Spark's comparison
-    # semantics treat a NaN cosine as greater than ANY threshold, so the
-    # all-pairs oracle KEEPS such pairs. Hence `not (cc > bound)` (keep on
-    # unprovable), never `cc <= bound` (Python NaN comparisons are False,
-    # which would silently prune pairs the oracle emits).
-    nan = float("nan")
-    rows = stats.collect()
-    cells = [(row["cell"], row["centroid"], row["r"]) for row in rows]
-    dmins = [row["dmin"] for row in rows if row["dmin"] is not None]
-    dmaxs = [row["dmax"] for row in rows if row["dmax"] is not None]
-    counts = {row["cell"]: int(row["n_members"] or 0) for row in rows}
-    edges = []
-    for i, (ci, vi, ri) in enumerate(cells):
-        for cj, vj, rj in cells[i:]:
-            cc = math.sqrt(
-                sum(
-                    ((nan if a is None else a) - (nan if b is None else b)) ** 2
-                    for a, b in zip(vi, vj)
+        # Centroid per cell via posexplode → (cell, pos) mean → re-assembled
+        # array (ordered collect_list — the repo's standard array-rebuild).
+        cent = (
+            assigned.select("cell", F.posexplode("nv").alias("pos", "x"))
+            .groupBy("cell", "pos")
+            .agg(F.avg("x").alias("m"))
+            .groupBy("cell")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"],
+                ).alias("centroid")
+            )
+        )
+        dist_to_cent = F.sqrt(
+            F.aggregate(
+                F.zip_with("nv", "centroid", lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        )
+        stats = (
+            assigned.join(F.broadcast(cent), "cell")
+            .groupBy("cell")
+            .agg(F.first("centroid").alias("centroid"), F.max(dist_to_cent).alias("r"))
+        )
+
+        # Bounded collect (≤ 2^n_sign_bits rows): prune cell pairs
+        # driver-side. EXACTNESS RULE: a cell pair may be dropped only when
+        # the triangle inequality PROVES no member pair can match. NaN/NULL
+        # cell stats (vectors with NaN components, Inf vectors whose
+        # normalization is NaN, all-degenerate cells) prove nothing — and
+        # Spark's comparison semantics treat a NaN cosine as greater than
+        # ANY threshold, so the all-pairs oracle KEEPS such pairs. Hence
+        # `not (cc > bound)` (keep on unprovable), never `cc <= bound`
+        # (Python NaN comparisons are False, which would silently prune
+        # pairs the oracle emits).
+        nan = float("nan")
+        cells = [(row["cell"], row["centroid"], row["r"]) for row in stats.collect()]
+        edges = []
+        for i, (ci, vi, ri) in enumerate(cells):
+            for cj, vj, rj in cells[i:]:
+                cc = math.sqrt(
+                    sum(
+                        ((nan if a is None else a) - (nan if b is None else b)) ** 2
+                        for a, b in zip(vi, vj)
+                    )
                 )
-            )
-            bound = (nan if ri is None else ri) + (nan if rj is None else rj)
-            if not (cc > bound + d_cut + 1e-9):
-                edges.append((min(ci, cj), max(ci, cj)))
-    spark = embeddings.sparkSession
-    edge_df = spark.createDataFrame(edges or [], "cell_a int, cell_b int")
-    # Exact verify cost, priced from the same bounded collect: candidate
-    # pair-dot count over the SURVIVING cell pairs only.
-    pair_dots = sum(
-        counts.get(ca, 0) * (counts.get(ca, 0) - 1) // 2
-        if ca == cb
-        else counts.get(ca, 0) * counts.get(cb, 0)
-        for ca, cb in edges
-    )
-
-    # The embedding width, known driver-side from the same bounded collect —
-    # lets the verify's dot unroll into codegen'd arithmetic (see docstring).
-    # The unroll is only VALID when every vector shares one width (a ragged
-    # corpus's unequal-length pairs must get the NULL cosine the all-pairs
-    # zip_with produces, which a fixed-width unroll cannot express), and
-    # only WISE below ~256 terms (a wider single expression tree risks
-    # Janino's 64KB generated-method limit, which would silently fall back
-    # to interpreted eval — the exact cost the unroll exists to avoid).
-    # Outside that envelope the verify keeps the HOF fold, whose semantics
-    # are the all-pairs form's by construction.
-    homogeneous = bool(dmins) and min(dmins) == max(dmaxs)
-    dim = dmaxs[0] if homogeneous else 0
-    unroll = homogeneous and dim <= 256
-
-    # Above _EMBED_VERIFY_ARROW_MIN_MACS the per-pair dot — even codegen'd —
-    # loses to one BLAS matmul per cell pair; the MAC count is known exactly
-    # driver-side, so the switch costs no probe. The Arrow kernel needs a
-    # rectangular matrix (homogeneous widths) and numpy-orderable ids;
-    # anything else keeps the always-correct JVM path.
-    from pyspark.sql.types import NumericType
-
-    id_numeric = isinstance(assigned.schema["id"].dataType, NumericType)
-    arrow_ok = homogeneous and dim >= 1 and id_numeric
-    use_arrow = arrow_ok and pair_dots * dim >= _EMBED_VERIFY_ARROW_MIN_MACS
-    # What the choice saw and chose (plan-time diagnostic only, never
-    # consulted by the computation).
-    _LAST_EMBED_VERIFY.update(
-        pair_dots=pair_dots,
-        dim=dim,
-        arrow_ok=arrow_ok,
-        use_arrow=use_arrow,
-    )
-
-    def dot_unrolled(ca: str, cb: str):
-        """Left-to-right Σ aᵢ·bᵢ as a plain expression tree: the identical
-        addition sequence as functions.vector.dot's fold (which starts at
-        0.0 and accumulates in index order), so values are bit-identical —
-        but element access/multiply/add all whole-stage-codegen, where the
-        interpreted HOF fold costs a Catalyst eval() per candidate pair.
-        F.get (NULL out of bounds, poisoning the sum to NULL) rather than
-        [] (ANSI crash) for a vector shorter than the corpus dim — the HOF
-        fold's zip_with null-padding yields the same NULL cosine, which
-        the threshold filter drops either way."""
-        s = F.lit(0.0)
-        for i in range(dim):
-            s = s + (
-                F.get(F.col(ca), i).cast("double")
-                * F.get(F.col(cb), i).cast("double")
-            )
-        return s
-
-    # Explicit repartition on the cell key (r09): the verify join's LEFT
-    # side inherits the collapse checkpoint's partition count (AQE coalesces
-    # the tiny rep table to ~2 partitions), and the RIGHT side is broadcast-
-    # eligible — so without this the pair-producing join, whose OUTPUT is
-    # the candidate-pair explosion (the compute-heavy part), runs at 2-task
-    # parallelism regardless of cores. Cells ARE the documented verify
-    # shuffle keys; one cheap shuffle of n rep rows unlocks core-count
-    # parallelism for the O(pairs) dot evaluation (measured at sf0.01:
-    # 4.6 s → ~2 s steady-state).
-    # Cross-cell pairs match exactly once (edge has cell_a < cell_b);
-    # same-cell pairs dedupe on id order. These are REPRESENTATIVE pairs —
-    # one per distinct-vector pair.
-    if use_arrow:
-        rep_pairs = _arrow_pair_verify(assigned, edge_df, dim, threshold)
-    else:
-        n_par = max(
-            embeddings.sparkSession.sparkContext.defaultParallelism, 8
+                bound = (nan if ri is None else ri) + (nan if rj is None else rj)
+                if not (cc > bound + d_cut + 1e-9):
+                    edges.append((min(ci, cj), max(ci, cj)))
+        edge_df = embeddings.sparkSession.createDataFrame(
+            edges, "cell_a int, cell_b int"
         )
-        a = assigned.select(
-            F.col("cell").alias("cell_a"),
-            F.col("id").alias("ida"),
-            F.col("vec").alias("veca"),
-            F.col("nrm").alias("nrma"),
-        ).repartition(n_par, "cell_a")
-        b = assigned.select(
-            F.col("cell").alias("cell_b"),
-            F.col("id").alias("idb"),
-            F.col("vec").alias("vecb"),
-            F.col("nrm").alias("nrmb"),
-        )
-        rep_pairs = (
-            a.join(F.broadcast(edge_df), "cell_a")
-            .join(b, "cell_b")
-            .filter(
-                (F.col("cell_a") != F.col("cell_b"))
-                | (F.col("ida") < F.col("idb"))
-            )
-            .select(
-                F.col("ida").alias("rep_a"),
-                F.col("idb").alias("rep_b"),
-                # cosine via precomputed norms; bit-symmetric in the pair
-                # order: per-element products commute and the accumulation
-                # order is the element index either way.
-                F.try_divide(
-                    (dot_unrolled if unroll else dot)("veca", "vecb"),
-                    F.col("nrma") * F.col("nrmb"),
-                ).alias("cos"),
-            )
-            .filter(F.col("cos") >= threshold)
-        )
-
-    # Expand rep pairs to member pairs: every member of group A pairs with
-    # every member of group B at the rep pair's cosine (the member vectors
-    # ARE the rep vectors, byte-identical) — two shuffle joins on rep ids,
-    # no distance eval. Output size is the answer size, which is inherent
-    # to the pair contract.
-    ma = membership.select(F.col("rep").alias("rep_a"), F.col("id").alias("pa"))
-    mb = membership.select(F.col("rep").alias("rep_b"), F.col("id").alias("pb"))
-    cross = (
-        rep_pairs.join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("pa", "pb").alias("id_a"),
-            F.greatest("pa", "pb").alias("id_b"),
-            F.col("cos"),
-        )
-    )
+        return _arrow_pair_verify(assigned, edge_df, threshold)
 
     # Intra-group pairs: byte-identical vectors trivially satisfy any sane
-    # threshold, but the cosine is still COMPUTED (once per distinct
-    # vector, same expression the all-pairs form evaluates on two identical
-    # arrays) and the threshold applied BEFORE the enumeration joins, so
-    # the answer set stays exactly equal to the all-pairs oracle even for
-    # threshold > self-cosine edge cases — and a failing group never pays
-    # its quadratic expansion.
-    self_cos = F.try_divide(dot("vec", "vec"), l2_norm("vec") * l2_norm("vec"))
-    intra = (
-        reps.select("rep", self_cos.alias("cos"))
-        .filter(F.col("cos") >= threshold)
-        .join(membership.select("rep", F.col("id").alias("pa")), "rep")
-        .join(membership.select("rep", F.col("id").alias("pb")), "rep")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("id_a"), F.col("pb").alias("id_b"), F.col("cos"))
+    # threshold, but the self-cosine is still COMPUTED (once per distinct
+    # vector, the expression the all-pairs form evaluates on two identical
+    # arrays) and the threshold applied before the enumeration joins, so
+    # threshold > self-cosine and zero vectors match the all-pairs oracle.
+    self_cos = cosine("vec", "vec")
+    return _collapsed_pairs(
+        embeddings, id_col, vec_col,
+        naive_fn=blocked_rep_pairs,
+        pairable=self_cos >= threshold,
+        payload=self_cos, payload_name="cos",
+        emit_intra=True,
     )
-
-    return cross.unionByName(intra)
 
 
 def semantic_dedup_stats(
@@ -1566,7 +1298,6 @@ def semantic_dedup_stats(
     id_col: str = "vec_id",
     vec_col: str = "v",
     cluster_col: str = "cluster",
-    batched_verify: bool = False,
 ) -> DataFrame:
     """Per-cluster SemDeDup stats without enumerating duplicate pairs.
 
@@ -1597,7 +1328,11 @@ def semantic_dedup_stats(
     Scale shape: the only joins are groupBy/join on the vector bytes (the
     same collapse as ``embedding_cosine_dups_blocked``) and rep-level
     pairing within clusters — O((distinct/k)²) per cluster, which is the
-    SemDeDup contract, but never quadratic in duplicate count.
+    SemDeDup contract, but never quadratic in duplicate count. The pairing
+    is one cogroup per cluster scored by one BLAS matmul
+    (``_cosine_matches``) under the naive filter's semantics, so the counts
+    are the naive ones; cosines differ from the JVM fold only in summation
+    order (~1e-15, against q_dedup_semantic's 5.1e-6 threshold margin).
     """
     from ..functions.vector import cosine
 
@@ -1614,44 +1349,9 @@ def semantic_dedup_stats(
         base, "id", "vec", group_cols=("cluster",)
     )
 
-    # Explicit repartition on the join key (r09, same finding as
-    # embedding_cosine_dups_blocked's verify join): ``groups`` is a
-    # localCheckpoint whose partition count AQE coalesced to ~2, and the
-    # right side is broadcast-eligible — so the within-cluster pair join,
-    # whose OUTPUT is O((distinct/k)²·k) rows of cosine work, otherwise
-    # runs 2-wide regardless of cores. Parallelism is key-bound at k
-    # clusters, which is the operator's documented SemDeDup shape (k grows
-    # with the corpus on a real deployment).
-    if batched_verify:
-        # r11 (guide §4.2): one BLAS matmul per cluster instead of an
-        # interpreted HOF cosine per rep pair — the caller opts in above a
-        # volume threshold (the pair count is quadratic in distinct reps,
-        # so toy inputs never amortize the Python worker round-trip).
-        rep_pairs = _arrow_cluster_pair_stats(
-            groups, threshold
-        ).localCheckpoint(eager=False)
-    else:
-        n_par = max(vecs.sparkSession.sparkContext.defaultParallelism, 8)
-        ga = groups.select(
-            "cluster",
-            F.col("rep").alias("rep_a"),
-            F.col("vec").alias("va"),
-            F.col("cnt").alias("cnt_a"),
-        ).repartition(n_par, "cluster")
-        gb = groups.select(
-            "cluster",
-            F.col("rep").alias("rep_b"),
-            F.col("vec").alias("vb"),
-            F.col("cnt").alias("cnt_b"),
-        )
-        rep_pairs = (
-            ga.join(gb, "cluster")
-            .filter(F.col("rep_a") < F.col("rep_b"))
-            .withColumn("cos", cosine("va", "vb"))
-            .filter(F.col("cos") >= threshold)
-            .select("cluster", "rep_a", "rep_b", "cnt_a", "cnt_b")
-            .localCheckpoint(eager=False)
-        )
+    rep_pairs = _arrow_cluster_pair_stats(groups, threshold).localCheckpoint(
+        eager=False
+    )
     # Self-matching groups: the cosine is still COMPUTED (once per distinct
     # vector) and the threshold applied, so zero vectors (NULL cosine) and
     # threshold > self-cosine edge cases behave exactly like the naive

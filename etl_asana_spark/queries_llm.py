@@ -251,7 +251,10 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicates via triangle-inequality cell
     blocking — EXACT (provably the same answer set as the all-pairs oracle,
     see operators.dedup.embedding_cosine_dups_blocked) but with no BNLJ:
-    cell stats + a broadcast cell-pair table + one shuffle-key verify join.
+    cell stats + a broadcast cell-pair table + one cogroup verify that
+    scores each surviving cell pair as a BLAS matmul under the oracle's
+    filter semantics (cosines within ~1e-15 of the oracle's, far inside the
+    5e-3 threshold margin and the ROUND(8) output).
     The 0.45 cut is tuned to this corpus (uniform-ish embeddings, max
     pairwise cosine ~0.51) so the operator returns a non-empty exact answer
     set; probabilistic LSH banding at such a low threshold would degenerate,
@@ -2300,11 +2303,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Embeddings input size (bytes) from which q_dedup_semantic runs the
-#: Arrow-batched BLAS verify instead of the JVM pair join.
-_SEMANTIC_VERIFY_ARROW_MIN_BYTES = 4 << 20
-
-
 @register(
     "q_dedup_semantic",
     oracle=_lloyd_cte_sql(k=16, n_iter=2) + """
@@ -2339,7 +2337,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     and computes member-pair counts arithmetically — integer-identical to
     the naive within-cluster self-join (differential-tested) but never
     quadratic in duplicate multiplicity (the round-4 scale rehearsal's
-    replicated corpus made the naive form's verify 100× at 10× data).
+    replicated corpus made the naive form's verify 100× at 10× data). The
+    within-cluster rep pairs are verified by one cogroup per cluster, each
+    scored as a BLAS matmul under the naive filter's NULL/NaN/length
+    semantics — the only verify path at every input size.
     Returns per-cluster totals: members, near-dup pairs, docs to drop.
 
     SQL-oracle-checked since round 5: DuckDB replays the Lloyd fixpoint
@@ -2347,10 +2348,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     see q_emb_kmeans) and then the NAIVE within-cluster enumeration, which
     the collapse arithmetic is integer-identical to by construction
     (differential-tested); the cosine threshold is margin-safe too
-    (min |cos − 0.28| = 5.1e-6 within clusters at both gate scales).
+    (min |cos − 0.28| = 5.1e-6 within clusters at both gate scales, vs
+    ~1e-15 BLAS summation-order drift from the JVM fold).
     Recall vs the clusterless all-pairs scan and drop-idempotence remain
     property-tested."""
-    from .fsutil import local_input_bytes
     from .operators.dedup import semantic_dedup_stats
     from .operators.similarity import kmeans_lloyd
 
@@ -2361,19 +2362,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = t["embeddings"].select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).join(assigned, "vec_id")
-    # Batched (BLAS) verify above _SEMANTIC_VERIFY_ARROW_MIN_BYTES: the
-    # within-cluster pair count is quadratic in distinct reps, so a big
-    # corpus amortizes the Python boundary where the gate-scale corpus
-    # (0.8 MB at sf0.1) never does. Results are differential-tested
-    # identical either way (margin 5.1e-6 vs ~1e-15 summation-order drift;
-    # see semantic_dedup_stats).
-    batched = (
-        local_input_bytes(f"{sf_dir}/embeddings.parquet")
-        >= _SEMANTIC_VERIFY_ARROW_MIN_BYTES
-    )
-    return semantic_dedup_stats(
-        vecs, threshold=0.28, batched_verify=batched
-    ).orderBy("cluster")
+    return semantic_dedup_stats(vecs, threshold=0.28).orderBy("cluster")
 
 
 @register(

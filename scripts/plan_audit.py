@@ -50,9 +50,10 @@ CROSS_OK = {
                            # to a broadcast product of ONE row; the band
                            # candidate join and the vector re-join are
                            # hash joins (r06 unpivot rewrite)
-    # NOTE: q_dedup_embed left this list in round 3 — it now runs the exact
-    # triangle-inequality blocked pipeline (broadcast cell-pair table + hash
-    # joins); a BNLJ in its plan is a regression to flag.
+    # NOTE: q_dedup_embed is deliberately NOT here — it runs the exact
+    # triangle-inequality blocked pipeline: a broadcast cell-pair table,
+    # hash joins, and a cogroup verify (FlatMapCoGroupsInArrow, a batched
+    # Arrow node, not BatchEvalPython). A BNLJ in its plan is a regression.
     "q_skew_report",       # counts × 1-row total for the share column
     "q_orders_rfm",        # fact × 1-row reference-date broadcast
     "q_pareto_8020",       # ranked × 1-row total/count broadcasts

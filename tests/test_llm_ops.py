@@ -317,10 +317,14 @@ def test_embed_dedup_blocked_equals_all_pairs(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
     for thr in (0.3, 0.45, 0.9):
-        ap = dedup.embedding_cosine_dups(e, threshold=thr).collect()
-        bl = dedup.embedding_cosine_dups_blocked(e, threshold=thr).collect()
-        key = lambda r: (r["id_a"], r["id_b"], round(r["cos"], 10))
-        assert sorted(map(key, ap)) == sorted(map(key, bl)), thr
+        ap = sorted(tuple(r) for r in dedup.embedding_cosine_dups(e, threshold=thr).collect())
+        bl = sorted(
+            tuple(r) for r in dedup.embedding_cosine_dups_blocked(e, threshold=thr).collect()
+        )
+        assert [r[:2] for r in ap] == [r[:2] for r in bl], thr
+        # BLAS verify vs the JVM fold: summation order only (~1e-15)
+        assert all(abs(a[2] - b[2]) < 1e-10 for a, b in zip(ap, bl)), thr
+        assert bl or thr > 0.45  # non-empty at every shipped SF
 
 
 @pytest.mark.slow  # ~40 s duplicate-planted battery; opt-in (r11, see pytest.ini)
@@ -352,41 +356,21 @@ def test_embed_dedup_blocked_equals_all_pairs_with_exact_duplicates(spark, sf_di
     )
 
 
-@pytest.mark.slow  # ~25 s dual-path differential; opt-in (r11, see pytest.ini)
-def test_embed_arrow_verify_matches_jvm(spark, sf_dir, monkeypatch):
-    """r11: the Arrow-batched BLAS verify must return the SAME pair set as
-    the codegen'd per-pair dot (cos values may differ in float summation
-    order only — bounded at 1e-10 here, ~1e-15 in practice), and the
-    default MAC threshold must keep the JVM path at gate-scale MAC counts.
-    Each side is forced through the threshold: 0 -> Arrow, huge -> JVM."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    # The verify is priced from the bounded cell collect and stays JVM
-    # below the default MAC threshold (every shipped SF).
-    dedup.embedding_cosine_dups_blocked(e, threshold=0.45)
-    d = dedup._LAST_EMBED_VERIFY
-    assert d["arrow_ok"] and not d["use_arrow"]
-    assert d["pair_dots"] > 0 and d["dim"] == 64
-    rows = {}
-    for mode, min_macs in (("jvm", 1 << 62), ("arrow", 0)):
-        monkeypatch.setattr(dedup, "_EMBED_VERIFY_ARROW_MIN_MACS", min_macs)
-        rows[mode] = sorted(
-            (r["id_a"], r["id_b"], r["cos"])
-            for r in dedup.embedding_cosine_dups_blocked(
-                e, threshold=0.45
-            ).collect()
-        )
-        assert dedup._LAST_EMBED_VERIFY["use_arrow"] == (mode == "arrow")
-    assert [r[:2] for r in rows["jvm"]] == [r[:2] for r in rows["arrow"]]
-    assert rows["jvm"]  # non-empty at every shipped SF
-    for (_, _, cj), (_, _, ca) in zip(rows["jvm"], rows["arrow"]):
-        assert abs(cj - ca) < 1e-10
+def _pair_key(r):
+    """(id_a, id_b, cos) with NaN canonicalized: NaN != NaN would fail an
+    equality even when both sides emit the identical pair."""
+    import math
+
+    c = r["cos"]
+    return (r["id_a"], r["id_b"], "nan" if math.isnan(c) else round(c, 12))
 
 
-def test_embed_arrow_verify_null_and_nan_semantics(spark, monkeypatch):
-    """The Arrow kernel must replicate Spark filter semantics exactly:
-    NULL vector -> dropped, NULL element -> dropped (fold poisons to
-    NULL), NaN element -> KEPT (NaN cosine compares greater than any
-    threshold), zero vector -> dropped (try_divide NULL)."""
+def test_embed_arrow_verify_null_and_nan_semantics(spark):
+    """The BLAS verify replicates Spark filter semantics exactly, checked
+    against the all-pairs JVM reference: NULL vector -> dropped, NULL
+    element -> dropped (fold poisons to NULL), NaN element -> KEPT (NaN
+    cosine compares greater than any threshold), zero vector -> dropped
+    (try_divide NULL)."""
     nan = float("nan")
     df = spark.createDataFrame(
         [
@@ -399,51 +383,59 @@ def test_embed_arrow_verify_null_and_nan_semantics(spark, monkeypatch):
         ],
         "vec_id bigint, embedding array<double>",
     )
-    rows = {}
-    for mode, min_macs in (("jvm", 1 << 62), ("arrow", 0)):
-        monkeypatch.setattr(dedup, "_EMBED_VERIFY_ARROW_MIN_MACS", min_macs)
-        rows[mode] = sorted(
-            (r["id_a"], r["id_b"])
-            for r in dedup.embedding_cosine_dups_blocked(
-                df, threshold=0.9
-            ).collect()
-        )
-        assert dedup._LAST_EMBED_VERIFY["use_arrow"] == (mode == "arrow")
-    assert rows["jvm"] == rows["arrow"]
-    assert (0, 1) in rows["jvm"]
-    assert all(4 in p for p in rows["jvm"] if p != (0, 1))
+    got = sorted(
+        map(_pair_key, dedup.embedding_cosine_dups_blocked(df, threshold=0.9).collect())
+    )
+    ref = sorted(map(_pair_key, dedup.embedding_cosine_dups(df, threshold=0.9).collect()))
+    assert got == ref
+    pairs = [p[:2] for p in got]
+    assert (0, 1) in pairs
+    assert all(4 in p for p in pairs if p != (0, 1))
     # NULL vector / NULL element never pair (fold poisons to NULL). The
     # zero vector drops against finite partners (denominator exactly 0 ->
     # try_divide NULL) but KEEPS (4, 5): its denominator against the NaN
     # vector is NaN·0 = NaN, and a NaN cosine passes any threshold.
-    assert not any(2 in p or 3 in p for p in rows["jvm"])
-    assert [p for p in rows["jvm"] if 5 in p] == [(4, 5)]
+    assert not any(2 in p or 3 in p for p in pairs)
+    assert [p for p in pairs if 5 in p] == [(4, 5)]
 
 
-@pytest.mark.slow  # ~25 s dual-path differential; opt-in (r11, see pytest.ini)
-def test_semantic_batched_verify_matches_jvm(spark, sf_dir):
-    """r11: semantic_dedup_stats(batched_verify=True) is integer-identical
-    to the JVM pair join — including on a corpus with planted exact
-    duplicates and a cluster-spanning ragged/NULL mix."""
-    from etl_asana_spark.operators.similarity import kmeans_lloyd
+def _naive_semantic_stats(vecs, threshold):
+    """The naive within-cluster self-join + count / countDistinct(id_b)
+    that semantic_dedup_stats must equal: cluster -> (n_members,
+    n_dup_pairs, n_to_drop)."""
+    from etl_asana_spark.functions import vector
 
-    emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    assigned = kmeans_lloyd(emb, k=16, n_iter=2).select("vec_id", "cluster")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).join(assigned, "vec_id")
-    a = sorted(
-        tuple(r) for r in dedup.semantic_dedup_stats(vecs, 0.28).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in dedup.semantic_dedup_stats(
-            vecs, 0.28, batched_verify=True
-        ).collect()
-    )
-    assert a == b and a
-    # degenerate mix: ragged lengths only pair within equal lengths, NULL
-    # vectors and NULL elements drop, NaN keeps — all inside one cluster.
+    a = vecs.select("cluster", F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
+    b = vecs.select("cluster", F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
+    pairs = {
+        r["cluster"]: (r["n_dup_pairs"], r["n_to_drop"])
+        for r in a.join(b, "cluster")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(vector.cosine("va", "vb") >= threshold)
+        .groupBy("cluster")
+        .agg(
+            F.count("*").alias("n_dup_pairs"),
+            F.countDistinct("id_b").alias("n_to_drop"),
+        )
+        .collect()
+    }
+    return {
+        r["cluster"]: (r["n"], *pairs.get(r["cluster"], (0, 0)))
+        for r in vecs.groupBy("cluster").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def _semantic_stats(vecs, threshold):
+    return {
+        r["cluster"]: (r["n_members"], r["n_dup_pairs"], r["n_to_drop"])
+        for r in dedup.semantic_dedup_stats(vecs, threshold).collect()
+    }
+
+
+def test_semantic_dedup_stats_degenerate_mix_equals_naive(spark):
+    """Ragged lengths only pair within equal lengths, NULL vectors and
+    NULL elements drop, NaN keeps — all inside one cluster — and the
+    stats equal the naive self-join's."""
     nan = float("nan")
     mix = spark.createDataFrame(
         [
@@ -454,14 +446,47 @@ def test_semantic_batched_verify_matches_jvm(spark, sf_dir):
         ],
         "vec_id bigint, v array<double>, cluster int",
     )
-    a = sorted(tuple(r) for r in dedup.semantic_dedup_stats(mix, 0.9).collect())
-    b = sorted(
-        tuple(r)
-        for r in dedup.semantic_dedup_stats(
-            mix, 0.9, batched_verify=True
-        ).collect()
-    )
-    assert a == b and a
+    got = _semantic_stats(mix, 0.9)
+    assert got == _naive_semantic_stats(mix, 0.9)
+    # (0,1) (2,3) (0,6) (1,6): the NaN row pairs with both 2-wide rows
+    assert got == {7: (7, 4, 3)}
+
+
+def test_dedup_verify_string_ids_and_mixed_widths(spark):
+    """String ids and mixed widths (0 included) through the one verify
+    kernel: the blocked embed pairs equal the all-pairs reference, and
+    with a cluster column the SemDeDup stats equal the naive self-join.
+    Ids order as Spark orders strings (byte order: "Z" < "a" < "é")."""
+    rows = [
+        ("a", [1.0, 0.0], 0),
+        ("é", [1.0, 0.0], 0),          # exact duplicate of "a"
+        ("Z", [0.99, 0.01], 0),
+        ("b", [0.0, 1.0], 0),
+        ("n", [0.0, 0.0], 0),           # zero vector: zero denominator, dropped
+        ("c", [1.0, 0.0, 0.0], 1),
+        ("d", [0.98, 0.02, 0.0], 1),
+        ("e", [], 1),                   # width 0: zero norm, never pairs
+        ("f", [], 1),
+        ("g", [2.0], 2),
+        ("h", [3.0], 2),
+        ("i", [-1.0], 2),
+        ("j", [2.0, None], 2),          # NULL element: dropped
+        ("k", None, 2),                 # NULL vector: dropped
+        ("m", [1.0, 0.0], 1),           # same width as "a", other cluster
+    ]
+    df = spark.createDataFrame(rows, "vec_id string, v array<double>, cluster int")
+    emb = df.select("vec_id", F.col("v").alias("embedding"))
+    for thr in (-0.5, 0.9):
+        got = sorted(
+            map(_pair_key, dedup.embedding_cosine_dups_blocked(emb, threshold=thr).collect())
+        )
+        ref = sorted(map(_pair_key, dedup.embedding_cosine_dups(emb, threshold=thr).collect()))
+        assert got == ref, thr
+        assert got
+        stats = _semantic_stats(df, thr)
+        assert stats == _naive_semantic_stats(df, thr), thr
+    assert ("a", "é") in {p[:2] for p in got} and ("Z", "a") in {p[:2] for p in got}
+    assert not any({"e", "f", "n"} & set(p[:2]) for p in got)
 
 
 def test_embed_dedup_plan_has_no_nested_loop(spark, sf_dir):
@@ -1273,7 +1298,6 @@ def test_semantic_dedup_stats_equal_naive_enumeration(spark, sf_dir):
     count / countDistinct(id_b) — on the raw corpus AND with planted
     byte-identical duplicates (the shape that made the naive form
     quadratic in duplicate multiplicity)."""
-    from etl_asana_spark.functions import vector
     from etl_asana_spark.operators.similarity import kmeans_lloyd
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
@@ -1287,27 +1311,9 @@ def test_semantic_dedup_stats_equal_naive_enumeration(spark, sf_dir):
         vecs = corpus.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         ).join(assigned, "vec_id")
-        a = vecs.select("cluster", F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-        b = vecs.select("cluster", F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-        naive = (
-            a.join(b, "cluster")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cos", vector.cosine("va", "vb"))
-            .filter(F.col("cos") >= 0.28)
-            .groupBy("cluster")
-            .agg(
-                F.count("*").alias("n_dup_pairs"),
-                F.countDistinct("id_b").alias("n_to_drop"),
-            )
-        )
-        naive_by_cluster = {
-            r["cluster"]: (r["n_dup_pairs"], r["n_to_drop"]) for r in naive.collect()
-        }
-        got = dedup.semantic_dedup_stats(vecs, threshold=0.28).collect()
+        got = _semantic_stats(vecs, 0.28)
         assert got
-        for r in got:
-            exp = naive_by_cluster.get(r["cluster"], (0, 0))
-            assert (r["n_dup_pairs"], r["n_to_drop"]) == exp, r["cluster"]
+        assert got == _naive_semantic_stats(vecs, 0.28)
 
 
 @pytest.mark.slow  # ~14 s all-pairs recall battery; opt-in (r11, see pytest.ini)
@@ -1457,7 +1463,7 @@ def test_embed_dedup_blocked_adversarial_vectors(spark):
 
 def test_embed_dedup_blocked_empty_and_singleton(spark):
     """Empty corpus and a single vector: no crash, empty pair set (the
-    bounded cell collect returns zero cells; dim falls back to 0)."""
+    bounded cell collect returns zero cells, the verify gets no edges)."""
     empty = spark.createDataFrame([], "vec_id int, embedding array<float>")
     assert dedup.embedding_cosine_dups_blocked(empty).collect() == []
     one = spark.createDataFrame([(1, [1.0, 2.0])], "vec_id int, embedding array<float>")
@@ -1540,12 +1546,11 @@ def test_png_resize_real_path_emits_valid_resampled_pngs(spark, sf_dir):
 
 @pytest.mark.slow  # ~45 s ragged-width battery; opt-in (r11, see pytest.ini)
 def test_embed_dedup_blocked_handles_mixed_width_vectors(spark):
-    """Round-4 review find: the unrolled verify dot took its width from
-    the FIRST collected cell, so a mixed-width corpus computed truncated
-    or NULL-poisoned cosines depending on nondeterministic collect order.
-    The unroll now engages only for homogeneous-width corpora; ragged ones
-    keep the HOF fold, whose unequal-length pairs get the same NULL
-    cosine (dropped) as the all-pairs oracle."""
+    """Round-4 review find: a verify that took one corpus-wide width
+    computed truncated or NULL-poisoned cosines on a mixed-width corpus.
+    The verify blocks rows by vector length, so unequal-length pairs never
+    match — the NULL cosine (dropped) the all-pairs oracle's zip_with
+    gives them."""
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [0.99, 0.01, 0.0]),
