@@ -9,11 +9,13 @@ same shuffle cost as dropDuplicates, deterministic result.
 
 Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
 
-- MinHash LSH   — Jaccard near-dups; banding turns O(n²) into a shuffle on
-                  hash buckets (pyspark.ml MinHashLSH, fixed seed).
-- SimHash       — 64-bit weighted-bit signature; candidate pairs via 16-bit
-                  band equality, verified by Hamming distance. Pure Catalyst
-                  expressions (xxhash64 + bit ops), no ml dependency.
+- MinHash LSH   — Jaccard near-dups; five fixed LCG permutations over
+                  Rabin-Karp shingle hashes, banding turns O(n²) into a
+                  shuffle on (slot, min) keys, exact Jaccard verify
+                  (``minhash_portable_pairs``).
+- SimHash       — 40-bit weighted-bit signature over the same shingle
+                  folds; candidate pairs via 10-bit band equality, verified
+                  by Hamming distance (``simhash_portable_pairs``).
 - n-gram Jaccard— exact set Jaccard with shared-shingle blocking: only pairs
                   sharing ≥1 shingle are ever materialized.
 - embedding cos — near-dups in embedding space; the registered path is
@@ -25,6 +27,9 @@ Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
                   NULL/NaN/length semantics, so the answer set is the
                   all-pairs one. The plain all-pairs form is kept as the
                   small-scale reference the tests compare against.
+
+Every fuzzy family has ONE implementation, built from fixed published
+constants, so DuckDB replays it step for step (the q_dedup_* oracles).
 """
 
 from __future__ import annotations
@@ -73,25 +78,18 @@ def upsert_last_modified_wins(
 def unshingleable_count(
     docs: DataFrame, shingle_n: int = 3, text_col: str = "text"
 ) -> int:
-    """Count docs too short to shingle (< ``shingle_n`` whitespace tokens).
+    """Count docs too short to shingle (< ``shingle_n`` whitespace-run
+    tokens, ``_run_split_size``).
 
-    ``minhash_lsh_pairs`` / ``simhash_signatures`` silently EXCLUDE such
-    docs from pairing (no feature set → cannot collide); call this to
-    detect a corpus dominated by unshingleable docs, where the fuzzy-dedup
-    families would quietly return near-empty pair sets. NULL text counts
-    as unshingleable (it is likewise excluded from pairing)."""
-    # filter('' ) matches RegexTokenizer's minTokenLength=1: a leading-
-    # whitespace doc must not count a phantom empty token.
+    :func:`minhash_portable_signatures` drops such docs and
+    :func:`simhash_portable_signatures` gives them a NULL signature, so
+    ``minhash_portable_pairs`` and ``simhash_portable_pairs`` silently
+    EXCLUDE them from pairing; call this to detect a corpus dominated by
+    unshingleable docs, where those families would quietly return
+    near-empty pair sets. NULL text counts as unshingleable (it is
+    likewise excluded from pairing)."""
     return docs.filter(
-        F.col(text_col).isNull()
-        | (
-            F.size(
-                F.filter(
-                    F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
-                )
-            )
-            < shingle_n
-        )
+        F.col(text_col).isNull() | (_run_split_size(text_col) < shingle_n)
     ).count()
 
 
@@ -175,7 +173,7 @@ def _collapsed_pairs(
     ``vec``; ``emit_intra`` mirrors the naive form's threshold boundary
     (identical texts sit AT self-distance, and whether the naive filter
     emits them there is family-specific — strict ``<`` for MinHash's
-    ``approxSimilarityJoin``, inclusive for the Hamming/Jaccard filters).
+    distance filter, inclusive for the Hamming/Jaccard filters).
     The review of the original four hand-expanded copies found exactly the
     drift this prevents: three copies had the boundary guard, minhash
     didn't."""
@@ -193,109 +191,13 @@ def _collapsed_pairs(
     return cross.unionByName(intra)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 5,
-    num_features: int = 1 << 18,
-    shingle_n: int = 3,
-    seed: int = 42,
-    collapse: bool = True,
-) -> DataFrame:
-    """Near-duplicate pairs by MinHash LSH over hashed SHINGLE sets —
-    shingle → minhash → band, the canonical web-scale text-dedup shape.
-
-    Returns (id_a, id_b, jaccard_dist) with id_a < id_b and
-    jaccard_dist < 1 - threshold (the ``approxSimilarityJoin`` candidate
-    filter is strict). Banding keeps the join linear in
-    colliding candidates, and shingling is what keeps the collision rate
-    honest: Jaccard over word-VOCABULARY sets (the naive featurization)
-    degenerates on a shared-vocabulary corpus — measured here, 8.5M
-    candidate pairs from 5 000 docs (68% of all pairs) at sf0.1, i.e. a
-    quadratic blowup smuggled through a linear-shaped operator. Jaccard
-    over ``shingle_n``-word shingle sets keeps only true near-dup text.
-    Docs too short to shingle (< ``shingle_n`` words) have no feature set
-    and cannot pair — use :func:`unshingleable_count` to measure how many
-    docs a given corpus silently excludes.
-
-    ``collapse=True`` (the default) runs the LSH pipeline over one
-    REPRESENTATIVE per distinct text and expands rep pairs back to member
-    pairs by join — bit-identical output (features/hashes depend only on
-    the text, so copies collide with exactly the pairs their rep does, at
-    distance 0 within a group), but the bucket joins stay linear in
-    DISTINCT texts. Without it, a duplicate-heavy corpus (the normal case
-    for web crawl) makes every LSH bucket quadratic in copy multiplicity —
-    measured by the round-4 ``scale_rehearsal`` 30×-duplication run: 160×
-    cost for 30× data (636 s), vs output-linear after collapse.
-    ``collapse=False`` keeps the naive formulation as the differential
-    oracle for tests.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, RegexTokenizer
-
-    if collapse:
-        # Identical texts have Jaccard distance exactly 0 and always share
-        # every LSH bucket — but approxSimilarityJoin's candidate filter is
-        # STRICT (dist < 1 - threshold, verified against the installed
-        # spark-mllib bytecode), so the naive form emits the within-group
-        # pairs iff jaccard_threshold < 1.0.
-        return _collapsed_pairs(
-            docs, id_col, text_col,
-            naive_fn=lambda reps: minhash_lsh_pairs(
-                reps, id_col, text_col, jaccard_threshold, num_hash_tables,
-                num_features, shingle_n, seed, collapse=False,
-            ),
-            pairable=_run_split_size("vec") >= shingle_n,
-            payload=F.lit(0.0), payload_name="jaccard_dist",
-            emit_intra=jaccard_threshold < 1.0,
-        )
-
-    # RegexTokenizer on whitespace RUNS (plain Tokenizer splits on single
-    # "\\s" and keeps interior empty tokens, so "a  b" would grow a
-    # phantom shingle and diverge from unshingleable_count's run-split
-    # diagnostic).
-    tok = RegexTokenizer(inputCol=text_col, outputCol="__toks", pattern=r"\s+")
-    ng = NGram(n=shingle_n, inputCol="__toks", outputCol="__shingles")
-    tf = HashingTF(
-        inputCol="__shingles", outputCol="__features",
-        numFeatures=num_features, binary=True,
-    )
-    # NULL text is outside the pairing domain, like docs too short to
-    # shingle (ML Tokenizer throws on NULL input).
-    shingled = ng.transform(
-        tok.transform(
-            docs.select(id_col, text_col).filter(F.col(text_col).isNotNull())
-        )
-    )
-    featurized = tf.transform(
-        shingled.filter(F.size("__shingles") > 0)  # MinHash needs ≥1 feature
-    )
-    lsh = MinHashLSH(
-        inputCol="__features", outputCol="__hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(featurized)
-    pairs = model.approxSimilarityJoin(
-        featurized, featurized, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-
-
 #: Portable-MinHash constants (engine-neutral, reproducible in SQL).
 #: P is the Mersenne prime 2^31-1: with shingle hashes reduced mod P and
 #: coefficients < P, every product in h_i(x) = (a_i·x + b_i) mod P stays
 #: below 2^62 — exact in BIGINT on both engines, no 128-bit arithmetic.
 #: The (a, b) rows are the classic LCG multiplier/increment constants
 #: (glibc, MSVC, Borland, SunOS, VAX) — arbitrary but published, fixed,
-#: and engine-independent; one permutation per MLlib hash table mirrored.
+#: and engine-independent; five permutations, one per band slot.
 _MINHASH_P = 2147483647
 _MINHASH_COEFFS = (
     (1103515245, 12345),
@@ -417,33 +319,48 @@ def minhash_portable_pairs(
     shingle_n: int = 3,
     collapse: bool = True,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with an ENGINE-NEUTRAL hash family — the
-    SQL-oracle-checkable twin of :func:`minhash_lsh_pairs` (same upgrade
-    path as the round-5 poly_hash fingerprint: the registered key runs
-    this; the xxhash64/MLlib pipeline stays the library fast path).
+    """Near-duplicate pairs by MinHash LSH over SHINGLE sets — shingle →
+    minhash → band, the canonical web-scale text-dedup shape — with an
+    ENGINE-NEUTRAL hash family, so the q_dedup_minhash oracle can check
+    every pair.
+
+    Returns (id_a, id_b, jaccard_dist) with id_a < id_b. Shingling is what
+    keeps the collision rate honest: Jaccard over word-VOCABULARY sets
+    degenerates on a shared-vocabulary corpus (measured: 68% of all doc
+    pairs at sf0.1), while Jaccard over ``shingle_n``-word shingle sets
+    keeps only true near-dup text. Docs too short to shingle have no
+    signature and cannot pair — :func:`unshingleable_count` measures how
+    many a corpus silently excludes.
 
     Shingle base hashes are Rabin-Karp ``poly_hash mod P`` (P = 2^31-1);
     the five permutations are ``(a_i·x + b_i) mod P`` with fixed published
     constants; a doc's signature is the five mins over its DISTINCT
-    shingle-hash set. Candidates share ≥1 signature slot (five equi-joins,
-    the OR-amplification MLlib's ``numHashTables=5`` performs); the exact
+    shingle-hash set. Candidates share ≥1 signature slot (five equi-joins:
+    OR-amplification over five one-row bands); the exact
     Jaccard verify runs MAP-SIDE on each candidate row via
     ``array_intersect`` of the carried hash sets — no verification
     shuffle. DuckDB replays every step (the q_dedup_minhash oracle), so
     the output is hash-checkable: the division inter/union sees identical
     integers on both engines.
 
-    Semantics match the xxhash64 family: whitespace-RUN tokenization
-    (boundary empties dropped — ``_run_split_size`` is the shared
-    diagnostic), pairs with jaccard_dist STRICTLY below 1 - threshold
-    (``approxSimilarityJoin``'s filter), identical texts always candidates
-    (equal signatures). A base-hash collision (two distinct shingles
+    Semantics: whitespace-RUN tokenization (boundary empties dropped —
+    ``_run_split_size`` is the shared diagnostic), pairs with jaccard_dist
+    STRICTLY below 1 - threshold, identical texts always candidates (equal
+    signatures). A base-hash collision (two distinct shingles
     colliding mod P, ~n²/2^32 per doc pair) perturbs the ESTIMATE exactly
     like any MinHash collision and identically on both engines — parity
     is unaffected. Scale shape: signatures are one numpy pass per Arrow
     batch (:func:`minhash_portable_signatures`; no explode until banding),
     banding shuffles five (slot, value) keys per doc, linear in distinct
     texts under ``collapse=True``.
+
+    ``collapse=True`` (the default) pairs one REPRESENTATIVE per distinct
+    text and expands rep pairs back to member pairs by join — bit-identical
+    output, since signatures depend only on the text. Without it a
+    duplicate-heavy corpus makes every band bucket quadratic in copy
+    multiplicity (the round-4 ``scale_rehearsal`` 30×-duplication run cost
+    160× for 30× data). ``collapse=False`` keeps the naive formulation as
+    the differential oracle for tests.
     """
     if collapse:
         return _collapsed_pairs(
@@ -513,85 +430,25 @@ def minhash_portable_pairs(
     )
 
 
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash over 3-token SHINGLE hashes, entirely in Catalyst
-    expressions.
-
-    bit_i(sig) = 1 iff Σ_shingles (bit_i(h) ? +1 : −1) ≥ 0, where h is the
-    rolling combine xxhash64(h_j, h_{j+1}, h_{j+2}) of three consecutive
-    token hashes (aligned zip_withs — no per-element array indexing, which
-    interpreted HOF eval would re-evaluate quadratically). Duplicate
-    shingles weight naturally by frequency. Shingles, not tokens: summing
-    per-TOKEN hash bits converges on any shared-vocabulary corpus (measured
-    here: 32 k Hamming≤8 pairs from 5 000 docs vs the true ~200-pair
-    near-dup tail). Docs with fewer than 3 tokens have no shingles and get
-    a NULL signature — they cannot pair (same contract as MinHash; measure
-    the exclusion with :func:`unshingleable_count`).
-
-    Written as ONE aggregate carrying all 64 bit-counters with a finish
-    lambda packing the sign bits: interpreted higher-order-function eval
-    re-evaluates a referenced sub-expression per reference, so the
-    64-separate-aggregates formulation costs 64 shingle-array builds per
-    row; this one costs one.
-    """
-    # filter('') — split keeps leading/trailing empty tokens on padded
-    # text, which would both grow phantom shingles AND diverge from
-    # unshingleable_count / minhash's whitespace-RUN tokenization (a
-    # ' x y' doc must be unshingleable by every family's count).
-    # Token-hash array hoisted into its own projection like the portable
-    # twin (r06): six inline references to the tokenize+hash transform
-    # cost ~2× at sf0.1, measured bit-identical after the hoist.
-    th_expr = (
-        f"transform(filter(split({text_col}, '\\\\s+'), t -> t != ''),"
-        " t -> xxhash64(t))"
-    )
-    shingle_hashes = """
-        slice(
-          zip_with(
-            zip_with(__th, slice(__th, 2, size(__th)), (a, b) -> xxhash64(a, b)),
-            slice(__th, 3, size(__th)),
-            (ab, c) -> xxhash64(ab, c)),
-          1, size(__th) - 2)
-    """
-    sig = F.expr(
-        f"""
-        CASE WHEN size(__th) >= 3 THEN
-          aggregate(
-            CAST(({shingle_hashes}) AS ARRAY<BIGINT>),
-            array_repeat(0, 64),
-            (acc, h) -> zip_with(acc, sequence(0, 63),
-                        (c, i) -> c + IF((shiftright(h, i) & 1L) = 1L, 1, -1)),
-            acc -> aggregate(
-                     zip_with(acc, sequence(0, 63),
-                              (v, i) -> IF(v >= 0, shiftleft(1L, i), 0L)),
-                     0L, (a, b) -> a | b))
-        ELSE CAST(NULL AS BIGINT) END
-        """
-    )
-    return docs.select(id_col, F.expr(th_expr).alias("__th")).select(
-        id_col, sig.alias("simhash")
-    )
-
-
 def simhash_portable_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """40-bit SimHash over poly-hash shingle hashes — the ENGINE-NEUTRAL
-    twin of :func:`simhash_signatures` (which stays the 64-bit xxhash64
-    library fast path).
+    """40-bit SimHash over 3-token SHINGLE hashes with an ENGINE-NEUTRAL
+    hash family, so the q_dedup_simhash oracle can check every signature.
 
     Token hashes are Rabin-Karp ``poly_hash`` folds; a shingle hash folds
     its three token hashes with the same (·131 mod 2^40) step — every
     intermediate < 2^47, exact in BIGINT on both engines, so DuckDB can
     replay the signature bit-for-bit (the q_dedup_simhash oracle). The
     signature width follows the hash width: 40 vote counters, sign bits
-    packed into one BIGINT. Same domain rule as the 64-bit form (< 3
-    run-split tokens → NULL signature, cannot pair) and the same frequency
-    weighting (duplicate shingles vote per occurrence).
+    packed into one BIGINT. Docs with < 3 run-split tokens (and NULL text)
+    get a NULL signature and cannot pair (measure the exclusion with
+    :func:`unshingleable_count`); duplicate shingles vote per occurrence.
+    Shingles, not tokens: summing per-TOKEN hash bits converges on any
+    shared-vocabulary corpus (measured: 32 k Hamming ≤ 8 pairs from 5 000
+    docs vs the true ~200-pair near-dup tail).
 
     Tokenization is JVM codegen; the token folds (:func:`_codepoint_folds`),
     shingle folds and 40 vote counters per shingle are one numpy pass per
@@ -659,14 +516,19 @@ def simhash_portable_pairs(
     max_hamming: int = 8,
     collapse: bool = True,
 ) -> DataFrame:
-    """:func:`simhash_pairs` over the portable 40-bit signatures: 4×10-bit
-    band candidates (pigeonhole: Hamming ≤ 3 always shares a band — same
-    guarantee as the 64-bit family's 4×16), Hamming verification via
-    ``bit_count(xor)``, linear in distinct texts under ``collapse=True``.
-    Registered as q_dedup_simhash since round 6 so the key carries a full
-    DuckDB oracle; thresholds read against the 40-bit space (the default
-    max_hamming=8 is looser at width 40 than at 64 — more of the corpus
-    counts as near-dup, which the precision property test bounds)."""
+    """Near-dup pairs over :func:`simhash_portable_signatures`: 4×10-bit
+    band candidates (pigeonhole: Hamming ≤ 3 always shares a band, so
+    recall is exact for d ≤ 3 and probabilistic above), Hamming
+    verification via ``bit_count(xor)``. Registered as q_dedup_simhash;
+    thresholds read against the 40-bit space (the default max_hamming=8
+    counts more of the corpus as near-dup than it would at width 64, which
+    the precision property test bounds).
+
+    ``collapse=True`` (the default) pairs one representative per distinct
+    text and expands by join, linear in distinct texts (identical texts:
+    Hamming 0, emitted when the doc can shingle and ``max_hamming >= 0``);
+    ``collapse=False`` keeps the naive formulation as the differential
+    oracle."""
     if collapse:
         return _collapsed_pairs(
             docs, id_col, text_col,
@@ -719,80 +581,6 @@ def simhash_portable_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    collapse: bool = True,
-) -> DataFrame:
-    """Near-dup pairs: SimHash banding (4×16-bit) for candidates, Hamming
-    verification on candidates. Pigeonhole guarantee: any pair with Hamming
-    distance ≤ 3 must agree on a full band, so recall is exact for d ≤ 3 and
-    probabilistic for 4..max_hamming (raise the band count for tighter
-    guarantees). Candidate generation is a shuffle on band values — linear
-    in DISTINCT texts under ``collapse=True`` (the default): signatures
-    depend only on the text, so byte-identical copies are collapsed to one
-    representative before banding and rep pairs expand back by join
-    (identical texts: Hamming 0, always emitted when the doc can shingle).
-    Same bit-identical-output argument and the same measured motivation as
-    :func:`minhash_lsh_pairs`; ``collapse=False`` keeps the naive
-    formulation as the differential oracle.
-    """
-    if collapse:
-        return _collapsed_pairs(
-            docs, id_col, text_col,
-            naive_fn=lambda reps: simhash_pairs(
-                reps, id_col, text_col, max_hamming, collapse=False
-            ),
-            # signature exists ⇔ ≥ 3 run-split tokens (simhash_signatures'
-            # CASE guard); Hamming(sig, sig) = 0 ≤ any sane max_hamming.
-            pairable=_run_split_size("vec") >= 3,
-            payload=F.lit(0).cast("int"), payload_name="hamming",
-            emit_intra=max_hamming >= 0,
-        )
-    sigs = simhash_signatures(docs, id_col, text_col).filter(
-        F.col("simhash").isNotNull()  # unshingleable docs cannot pair
-    )
-    bands = sigs.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftrightunsigned("simhash", 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF).cast("long"))
-                        .alias("band_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "simhash", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select(
-        "id_a", "id_b", hamming.alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -812,7 +600,7 @@ def ngram_jaccard_pairs(
     identical texts have Jaccard exactly 1.0 and pair iff they have ≥ 1
     shingle) — the shared-shingle join otherwise goes quadratic in copy
     multiplicity on a duplicate-heavy corpus, the same measured class as
-    :func:`minhash_lsh_pairs`. ``collapse=False`` is the differential
+    :func:`minhash_portable_pairs`. ``collapse=False`` is the differential
     oracle.
     """
     from .text import shingles
@@ -1789,7 +1577,7 @@ def prefix_filter_jaccard_pairs(
     ``collapse=True`` (default) collapses byte-identical texts first —
     copies would otherwise pair each other through their rare prefix
     shingles, quadratic in copy multiplicity (the same measured class as
-    :func:`minhash_lsh_pairs`). Same bit-identical-output argument: the
+    :func:`minhash_portable_pairs`). Same bit-identical-output argument: the
     ranking/prefix/verify all depend only on the text, with one
     refinement — corpus document frequency is counted over DISTINCT texts,
     which only changes candidate PRUNING order, never the verified answer

@@ -6,16 +6,19 @@ Three tiers, increasingly sub-linear:
   scan, TakeOrderedAndProject. The baseline every approximate method is
   recall-checked against. At 100 TB this is one full scan per query — fine
   for batch scoring, wrong for interactive lookup.
-- ``ann_brp_lsh`` — BucketedRandomProjectionLSH (pyspark.ml): hash vectors
-  into random-hyperplane buckets; probe only colliding buckets. Sub-linear
-  candidate generation, tunable recall via bucketLength/numHashTables.
-- ``ivf_topk`` — inverted-file index: KMeans coarse quantizer partitions the
-  corpus; queries probe the ``nprobe`` nearest centroids only. The classic
-  FAISS-style scale path: centroid assignment is a broadcast join, each probe
-  reads ~nprobe/k of the data (partition pruning if written bucketed by
-  centroid).
+- ``ann_portable_topk`` — quantized sign-projection LSH: hash vectors into
+  hyperplane buckets; probe only colliding buckets. Sub-linear candidate
+  generation, exact cosine on the candidates.
+- ``ivf_portable_topk`` — inverted-file index: the deterministic Lloyd
+  quantizer (``kmeans_lloyd``) partitions the corpus; queries probe the
+  ``nprobe`` nearest centroids only. The classic FAISS-style scale path:
+  centroid assignment is a broadcast join, each probe reads ~nprobe/k of
+  the data.
 
-Determinism: fixed seeds everywhere (testdata convention seed=42).
+``pca_power_reduce`` is the dimensionality reduction that precedes ANN
+indexing at scale. Determinism: every approximate method here is a pure
+function of the data built from fixed published constants, so DuckDB
+replays it (the q_sim_ann, q_sim_ivf and q_emb_pca oracles).
 """
 
 from __future__ import annotations
@@ -24,8 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
-
-EMBEDDING_DIM_HINT = 64  # testdata embeddings are 64-dim float32
 
 
 def cosine_topk(
@@ -134,150 +135,6 @@ def cosine_topk_batched(
     )
 
 
-def ann_brp_lsh(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via random-hyperplane bucketing (Euclidean LSH).
-
-    Euclidean distance on L2-NORMALIZED vectors is monotone in cosine
-    (‖a−b‖² = 2−2cos), so nearest-by-L2 ≡ nearest-by-cosine; the LSH model
-    therefore indexes normalized vectors and results are recall-checked
-    against :func:`cosine_topk` in tests.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    from ..functions.vector import l2_normalize
-
-    base = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        id_col, array_to_vector(l2_normalize(vec_col)).alias("features")
-    )
-    if base.isEmpty():
-        # LSH fit requires at least one row; an empty corpus (zeroed-out
-        # slice) must yield an empty result, not an MLlib fit error. The
-        # isEmpty probe is a limit-1 scan — metadata-cheap at any scale.
-        return embeddings.sparkSession.createDataFrame(
-            [], f"query_id bigint, {id_col} bigint, cos_approx double"
-        )
-    probes = query.filter(F.col("query_vec").isNotNull()).select(
-        "query_id", array_to_vector(l2_normalize("query_vec")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(base)
-    # approxSimilarityJoin emits candidate pairs within the distance
-    # threshold 2.0 (the max possible for unit vectors), ranked per query.
-    pairs = model.approxSimilarityJoin(
-        model.transform(probes), model.transform(base), 2.0, distCol="dist"
-    ).select(
-        F.col("datasetA.query_id").alias("query_id"),
-        F.col(f"datasetB.{id_col}").alias(id_col),
-        (1 - F.col("dist") * F.col("dist") / 2).alias("cos_approx"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_approx"), F.asc(id_col))
-    return (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k.
-
-    Build: KMeans(seed) coarse centroids; every vector assigned to its
-    nearest centroid (one broadcast join — centroids are tiny by
-    construction). Probe: each query scores only vectors in its ``nprobe``
-    nearest cells. Expected work ≈ nprobe/n_centroids of brute force.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    clean = embeddings.filter(F.col(vec_col).isNotNull())
-    featurized = clean.select(
-        id_col, vec_col, array_to_vector(vec_col).alias("features")
-    )
-    query = query.filter(F.col("query_vec").isNotNull())
-    # KMeans cannot fit more centroids than rows (and needs at least one);
-    # the limit(n).count() probe reads at most n_centroids rows — bounded
-    # work at any corpus size. A tiny slice degrades to fewer cells (same
-    # answers, less pruning), an empty one to an empty result.
-    n_avail = featurized.limit(n_centroids).count()
-    if n_avail == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"query_id bigint, {id_col} bigint, cos double"
-        )
-    if n_avail < 2:
-        # MLlib KMeans requires k >= 2; a sub-2-row corpus has no cells to
-        # invert, so IVF degenerates to the exact brute force (trivial at
-        # this size, identical answers). Brute-force the NULL-FILTERED
-        # frame — the normal path never scores NULL vectors, so the
-        # degenerate path must not leak them into the top-k either.
-        return cosine_topk(clean, query, k=k, id_col=id_col, vec_col=vec_col)
-    n_centroids = min(n_centroids, n_avail)
-    nprobe = min(nprobe, n_centroids)
-    km = KMeans(k=n_centroids, seed=seed, featuresCol="features")
-    model = km.fit(featurized)
-    assigned = model.transform(featurized).select(
-        id_col, vec_col, F.col("prediction").alias("cell")
-    )
-
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent_df = embeddings.sparkSession.createDataFrame(
-        centroids, "cell int, centroid array<double>"
-    )
-    # nprobe nearest cells per query (tiny: |queries| × n_centroids).
-    from pyspark.sql import Window
-
-    q_cells = query.crossJoin(F.broadcast(cent_df)).select(
-        "query_id",
-        "query_vec",
-        "cell",
-        cosine("query_vec", "centroid").alias("cell_cos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cell_cos"), F.asc("cell"))
-    probe_cells = (
-        q_cells.withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
-    # Score only the probed cells' members.
-    candidates = assigned.join(F.broadcast(probe_cells), "cell").select(
-        "query_id", id_col, cosine(vec_col, "query_vec").alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        candidates.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-
-
 #: Portable sign-projection LSH constants (engine-neutral): hyperplane
 #: entries are ±1 decided by bit 16 of an LCG over the (table, dim) index —
 #: arbitrary but fixed, published constants, reproducible in pure SQL.
@@ -325,18 +182,18 @@ def ann_portable_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k via DETERMINISTIC quantized sign projections — the
-    SQL-oracle-checkable twin of :func:`ann_brp_lsh` (which stays the MLlib
-    library path; its JVM-seeded gaussian hyperplanes have no SQL twin).
+    """Approximate top-k via DETERMINISTIC quantized sign projections, so
+    the q_sim_ann oracle can replay every bucket (a JVM-seeded gaussian
+    hyperplane has no SQL twin).
 
-    Same shape as BucketedRandomProjectionLSH at the same parameters
-    (3 tables, bucket length 2.0): per table, bucket =
+    Euclidean LSH on normalized vectors (3 tables, bucket length 2.0):
+    per table, bucket =
     floor(⟨x/‖x‖, w⟩ / L) with w a ±1 hyperplane whose entries come from
     an LCG over (table, dim) — a pure integer function both engines
     evaluate identically — and candidates share the query's bucket in ANY
     table. Candidates are then scored with EXACT cosine and ranked
-    (cos desc, id) — identical semantics to approxSimilarityJoin on
-    normalized vectors, where 1 − dist²/2 IS the cosine. Soundness of the
+    (cos desc, id); on normalized vectors 1 − dist²/2 IS the cosine, so
+    nearest-by-L2 ≡ nearest-by-cosine. Soundness of the
     oracle (floor-bucket margins, top-k rank gaps vs summation-order
     drift) is probed by scripts/margin_probe.py; on this corpus margins
     are ≥1.3e-4 vs ~1e-15 drift. Uniform random embeddings are the
@@ -418,9 +275,9 @@ def ivf_portable_topk(
     vec_col: str = "embedding",
     model_key: str | None = None,
 ) -> DataFrame:
-    """IVF top-k with the DETERMINISTIC Lloyd quantizer — the
-    SQL-oracle-checkable twin of :func:`ivf_topk` (MLlib KMeans stays the
-    library path; its seeded init has no SQL twin).
+    """IVF (inverted-file) top-k with the DETERMINISTIC Lloyd quantizer, so
+    the q_sim_ivf oracle can replay the whole probe-and-score pipeline (a
+    seeded random k-means init has no SQL twin).
 
     The coarse quantizer is :func:`kmeans_lloyd` at (k=16, 2 iters) — the
     exact configuration q_dedup_semantic already margin-probes — so the
@@ -428,9 +285,9 @@ def ivf_portable_topk(
     by centroid cosine to the query (ties by cluster id), scores only the
     ``nprobe`` probed cells' members with exact cosine, and takes top-k.
     Ranking margins (cell boundary at nprobe, member boundary at k) are
-    probed by scripts/margin_probe.py. Same scale shape as ivf_topk:
-    centroid state is k·dim driver-side, probing is a broadcast join,
-    scoring touches only probed members."""
+    probed by scripts/margin_probe.py. Scale shape: centroid state is
+    k·dim driver-side, probing is a broadcast join, scoring touches only
+    probed members — expected work ≈ nprobe/n_centroids of brute force."""
     from ..functions.vector import cosine
 
     assigned, cents = kmeans_lloyd(
@@ -470,48 +327,6 @@ def ivf_portable_topk(
     )
 
 
-def pca_reduce(
-    embeddings: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distributed PCA projection of an embedding column to ``k`` dims.
-
-    The Gramian/covariance accumulation is the distributed part (one pass
-    over the data, map-side partial sums); the eigendecomposition runs
-    driver-side on the d×d matrix — trivial for embedding widths (d=64
-    here, d≤4096 in practice) no matter how many rows. The projection is a
-    per-row matmul against the broadcast components. The standard scale
-    move before ANN indexing: IVF/LSH on 8–32 PCA dims costs a fraction of
-    full-width scoring while preserving neighborhoods.
-    """
-    from pyspark.ml.feature import PCA as MLPCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feat = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        id_col, array_to_vector(vec_col).alias("features")
-    )
-    # The covariance of fewer than 2 rows has no eigenbasis (MLlib refuses
-    # with "RowMatrix.computeCovariance called on matrix with only 1
-    # rows"). Empty in -> empty out; a single row keeps its id with a NULL
-    # projection (row-count parity for pipelines that join the reduction
-    # back). The limit-2 probe is bounded work at any corpus size.
-    n_avail = feat.limit(2).count()
-    if n_avail == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{id_col} bigint, reduced array<double>"
-        )
-    if n_avail == 1:
-        return feat.select(
-            id_col, F.lit(None).cast("array<double>").alias("reduced")
-        )
-    model = MLPCA(k=k, inputCol="features", outputCol="pc").fit(feat)
-    return model.transform(feat).select(
-        id_col, vector_to_array("pc").alias("reduced")
-    )
-
-
 def pca_power_reduce(
     embeddings: DataFrame,
     k: int = 8,
@@ -522,8 +337,8 @@ def pca_power_reduce(
     """Deterministic PCA-style reduction: ``n_iter``-step deflated power
     iteration on the population covariance, components λ̂-sorted.
 
-    The oracle-checkable twin of :func:`pca_reduce` (the same move that
-    made k-means SQL-checkable in round 5): the algorithm is a PURE
+    The engine's one PCA (oracle-checkable by the same move that made
+    k-means SQL-checkable in round 5): the algorithm is a PURE
     FUNCTION of the data — fixed basis-vector inits, a fixed iteration
     count, Rayleigh-quotient deflation, zero-norm guard keeps the previous
     vector — so DuckDB can replay it CTE-for-CTE
@@ -535,8 +350,6 @@ def pca_power_reduce(
     its Rayleigh quotient exactly, so sorting components by λ̂ descending
     (ties by init index; gaps ≥3e-5 on this corpus vs ~2e-15 cross-engine
     drift, margin-probed) restores the decreasing-variance contract.
-    ``pca_reduce`` (MLlib/LAPACK) stays the library path when a converged
-    eigenbasis matters and external checkability does not.
 
     Scale shape: the data-sized work is ONE pass — one numpy syrk per
     Arrow batch (mapInArrow) accumulates each partition's moments, so the

@@ -2,7 +2,7 @@
 plus language-ID / quality / fingerprinting from the north-star mandate).
 
 Everything here is built-in Catalyst expressions (split/filter/transform/
-aggregate/xxhash64) — no Python in the hot path, so these run at full scan
+aggregate) — no Python in the hot path, so these run at full scan
 speed over a 100 TB documents table.
 """
 
@@ -109,11 +109,6 @@ def quality_features(col: Column | str) -> dict[str, Column]:
     }
 
 
-def shingle_hashes(tokens_col: str, n: int = 3) -> Column:
-    """xxhash64 of each word n-gram (array<long>) — rolling-hash stream."""
-    return F.transform(shingles(tokens_col, n), lambda s: F.xxhash64(s))
-
-
 def poly_hash(col: Column | str, base: int = 131, mod: int = 1 << 40) -> Column:
     """Engine-neutral polynomial rolling hash over the string's code points
     (``h → (h·base + codepoint) mod 2⁴⁰``), the textbook Rabin-Karp form.
@@ -122,22 +117,11 @@ def poly_hash(col: Column | str, base: int = 131, mod: int = 1 << 40) -> Column:
     ``xxhash64`` — is exactly reproducible in DuckDB (``list_reduce`` +
     ``unicode``), which is what lets the fingerprint key carry a full SQL
     oracle. The modulus keeps every intermediate below 2⁴⁷ so ANSI
-    overflow checks can never fire. Prefer :func:`doc_fingerprint`'s
-    JVM-native ``xxhash64`` when cross-engine equality is not required —
-    it is one codegen call per value instead of a per-character fold."""
+    overflow checks can never fire. The cost is a per-character fold where
+    ``F.xxhash64`` is one codegen call per value; a caller that needs no
+    cross-engine equality (a join or grouping key) can use that instead."""
     return F.aggregate(
         F.split(_c(col), ""),
         F.lit(0).cast("long"),
         lambda a, c: (a * F.lit(base) + F.ascii(c)) % F.lit(mod),
     )
-
-
-def doc_fingerprint(text_col: Column | str, tokens_col: str, n: int = 3) -> dict[str, Column]:
-    """Document fingerprints (rolling-hash family): full-text 64-bit hash,
-    plus min/max over the shingle-hash stream (1-permutation MinHash)."""
-    hashes = shingle_hashes(tokens_col, n)
-    return {
-        "text_hash": F.xxhash64(_c(text_col)),
-        "min_shingle_hash": F.array_min(hashes),
-        "max_shingle_hash": F.array_max(hashes),
-    }

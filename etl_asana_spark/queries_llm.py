@@ -3,8 +3,8 @@
 Dedup families, similarity search, text analysis, embedding math, multimodal
 plumbing — every key registered with a DuckDB SQL oracle: exact relational
 semantics directly; the hash/sketch/index families (MinHash LSH, SimHash,
-ANN, IVF, CMS, fingerprints) via deterministic engine-neutral twins (round
-6); the multimodal decode keys via committed dual-implementation golden
+ANN, IVF, CMS, fingerprints) via deterministic engine-neutral constructions
+(round 6); the multimodal decode keys via committed dual-implementation golden
 fixtures with independence guards (round 7, see _MM_*_FIXTURE). Property
 tests live in tests/test_llm_ops.py, oracle-independence evidence in
 tests/test_multimodal_oracle.py.
@@ -115,10 +115,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes mod 2^31-1 and five fixed LCG permutations instead of MLlib's
     JVM-seeded MinHashLSH — which DuckDB replays hash-for-hash
     (``_minhash_oracle_sql``; the same upgrade path as
-    q_text_fingerprint's xxhash64→poly_hash in round 5).
-    ``minhash_lsh_pairs`` (MLlib, xxhash64) stays the library fast path;
-    its precision remains property-checked vs exact shingle Jaccard in
-    tests, and the two families' candidate recall is compared there too."""
+    q_text_fingerprint's xxhash64→poly_hash in round 5). It is the
+    engine's only MinHash; its precision is property-checked vs exact
+    shingle Jaccard in tests."""
     t = load_tables(spark, sf_dir)
     return dedup.minhash_portable_pairs(t["documents"], jaccard_threshold=0.5)
 
@@ -186,9 +185,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered key runs ``simhash_portable_pairs`` — 40-bit signatures
     over Rabin-Karp poly-hash shingle folds instead of xxhash64 — which
     DuckDB replays bit-for-bit (``_simhash_oracle_sql``; same upgrade
-    path as q_dedup_minhash this round and q_text_fingerprint in r5).
-    ``simhash_pairs`` (64-bit xxhash64) stays the library fast path;
-    Hamming invariants for both families remain property-tested."""
+    path as q_dedup_minhash this round and q_text_fingerprint in r5). It
+    is the engine's only SimHash; its Hamming invariants are
+    property-tested."""
     t = load_tables(spark, sf_dir)
     return dedup.simhash_portable_pairs(t["documents"], max_hamming=8)
 
@@ -398,8 +397,8 @@ def q_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered key runs ``ann_portable_topk`` — deterministic ±1-LCG
     hyperplanes instead of MLlib's JVM-seeded gaussians, same table
     count/bucket length — which DuckDB replays projection-for-projection
-    (``_ann_oracle_sql``). ``ann_brp_lsh`` (MLlib) stays the library
-    path; recall vs exact top-k remains property-tested for both.
+    (``_ann_oracle_sql``). It is the engine's only ANN; recall vs exact
+    top-k is property-tested.
     Soundness (floor-bucket margins, rank gaps vs drift) is probed by
     scripts/margin_probe.py."""
     t = load_tables(spark, sf_dir)
@@ -541,12 +540,11 @@ def q_emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is a pure deterministic function of the data, replayed
     CTE-for-CTE by the oracle (``_pca_power_cte_sql``; same upgrade path
     as q_text_fingerprint's xxhash64→poly_hash and q_emb_kmeans' Lloyd
-    CTE in round 5). ``pca_reduce`` (MLlib/LAPACK, solver-specific
-    eigenbasis) remains the library path. Decreasing projected variance
-    holds by construction (components are λ̂-sorted; the projected
-    variance of a unit direction IS its Rayleigh quotient) and stays
-    property-tested in tests/test_llm_ops.py; numeric soundness of the
-    oracle (fixed-point margins vs cross-engine drift, λ̂-sort gaps) is
+    CTE in round 5). It is the engine's only PCA. Decreasing projected
+    variance holds by construction (components are λ̂-sorted; the
+    projected variance of a unit direction IS its Rayleigh quotient) and
+    stays property-tested in tests/test_llm_ops.py; numeric soundness of
+    the oracle (fixed-point margins vs cross-engine drift, λ̂-sort gaps) is
     probed by scripts/margin_probe.py.
 
     ``reduced`` is serialized to a fixed-point '|'-joined string at the
@@ -791,8 +789,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-oracle-checked since round 5: the round-4 version hashed with
     ``xxhash64`` (JVM-only, no DuckDB twin → rows-only); the registered key
     now uses the engine-neutral Rabin-Karp fold (operators.text.poly_hash),
-    which DuckDB replays character-for-character. The xxhash64 family
-    remains the library fast path (operators.text.doc_fingerprint)."""
+    which DuckDB replays character-for-character."""
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select(
         "doc_id", "text", text.ws_tokens("text").alias("toks")
@@ -1961,8 +1958,8 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch deterministic ``kmeans_lloyd`` — the same fit the
     q_dedup_semantic oracle already replays via the Lloyd-fixpoint CTE —
     so the full probe-and-score pipeline is DuckDB-replayable
-    (``_ivf_oracle_sql``). ``ivf_topk`` (MLlib KMeans, seeded init) stays
-    the library path. Uniform-random vectors remain IVF's worst case
+    (``_ivf_oracle_sql``). It is the engine's only IVF. Uniform-random
+    vectors remain IVF's worst case
     (neighbors scatter across cells); recall vs exact top-k is
     property-tested, and ranking-boundary margins are probed by
     scripts/margin_probe.py."""

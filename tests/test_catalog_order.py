@@ -269,6 +269,46 @@ def test_package_reads_only_deployment_env_settings():
     assert names == {"CPUS", "DRIVER_MEM", "SCRATCH_BASE"}
 
 
+def test_package_imports_no_pyspark_ml():
+    """Every similarity family has one implementation, the deterministic
+    one DuckDB replays; MLlib (``pyspark.ml``) models are seeded in the
+    JVM and have no SQL twin, so no module or function may import them."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent
+
+    def is_ml(name):
+        return name == "pyspark.ml" or name.startswith("pyspark.ml.")
+
+    hits = set()
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.scope = [rel]
+
+        def _scoped(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_FunctionDef = visit_AsyncFunctionDef = visit_ClassDef = _scoped
+
+        def visit_Import(self, node):
+            if any(is_ml(a.name) for a in node.names):
+                hits.add("::".join(self.scope))
+
+        def visit_ImportFrom(self, node):
+            if node.level == 0 and is_ml(node.module or ""):
+                hits.add("::".join(self.scope))
+
+    for path in pkg.rglob("*.py"):
+        Finder(str(path.relative_to(pkg))).visit(
+            ast.parse(path.read_text(encoding="utf-8"))
+        )
+    assert not hits, f"pyspark.ml imported by: {sorted(hits)}"
+
+
 def test_corrupt_oracle_generations_warns_not_silently_disables(tmp_path):
     """r06 advice: a typo'd hand edit of oracle_generations.json must warn
     loudly instead of silently disabling the re-queue fix."""

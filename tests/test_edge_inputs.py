@@ -17,8 +17,9 @@ from etl_asana_spark.operators.dedup import (
     connected_components,
     dedup_clusters,
     dedup_exact,
-    minhash_lsh_pairs,
+    minhash_portable_pairs,
     ngram_jaccard_pairs,
+    simhash_portable_pairs,
 )
 from etl_asana_spark.operators.joins import asof_join
 
@@ -62,12 +63,10 @@ def test_dedup_exact_empty_and_singleton(spark):
 
 
 def test_fuzzy_pair_generators_on_empty_corpus(spark):
-    from etl_asana_spark.operators.dedup import simhash_pairs
-
     docs = _empty_docs(spark)
     assert ngram_jaccard_pairs(docs, n=3, threshold=0.1).collect() == []
-    assert minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect() == []
-    assert simhash_pairs(docs).collect() == []
+    assert minhash_portable_pairs(docs, jaccard_threshold=0.5).collect() == []
+    assert simhash_portable_pairs(docs).collect() == []
 
 
 def test_connected_components_empty_edges(spark):

@@ -1886,24 +1886,14 @@ def test_random_text_collapse_parity(spark, seed):
     )
 
     family = rng.choice(
-        ["minhash", "minhash_portable", "simhash", "simhash_portable",
-         "ngram", "prefix", "clusters"]
+        ["minhash_portable", "simhash_portable", "ngram", "prefix", "clusters"]
     )
-    if family == "minhash":
-        kw = dict(
-            jaccard_threshold=rng.choice([0.2, 0.5, 0.9, 1.0]),
-            shingle_n=rng.choice([2, 3]),
-        )
-        fn, cols = _dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"]
-    elif family == "minhash_portable":
+    if family == "minhash_portable":
         kw = dict(
             jaccard_threshold=rng.choice([0.2, 0.5, 0.9, 1.0]),
             shingle_n=rng.choice([2, 3]),
         )
         fn, cols = _dedup.minhash_portable_pairs, ["id_a", "id_b", "jaccard_dist"]
-    elif family == "simhash":
-        kw = dict(max_hamming=rng.choice([-1, 0, 4, 12]))
-        fn, cols = _dedup.simhash_pairs, ["id_a", "id_b", "hamming"]
     elif family == "simhash_portable":
         kw = dict(max_hamming=rng.choice([-1, 0, 4, 12]))
         fn, cols = _dedup.simhash_portable_pairs, ["id_a", "id_b", "hamming"]

@@ -178,57 +178,6 @@ def test_simhash_signatures_and_pairs_match_references(spark, sf_dir, duck):
         assert not problems, (label, problems)
 
 
-def test_minhash_pairs_are_true_near_dups(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(t["documents"], jaccard_threshold=0.5).collect()
-
-    def shingle_set(text):
-        toks = text.lower().split()
-        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-
-    docs = {
-        r["doc_id"]: shingle_set(r["text"])
-        for r in t["documents"].select("doc_id", "text").collect()
-    }
-    for row in pairs:
-        a, b = docs[row["id_a"]], docs[row["id_b"]]
-        true_j = len(a & b) / len(a | b)
-        # LSH distance is computed on hashed shingle sets; allow
-        # hash-collision slack around the 0.5 similarity threshold.
-        assert true_j >= 0.4, (row, true_j)
-        assert row["id_a"] < row["id_b"]
-    # And the pair set must be a near-dup TAIL, not a vocabulary clique:
-    # the pre-shingling featurization returned 68% of all doc pairs here.
-    n_docs = t["documents"].count()
-    assert len(pairs) < 0.02 * n_docs * (n_docs - 1) / 2
-
-
-def test_simhash_deterministic_and_metric(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    s1 = dedup.simhash_signatures(t["documents"]).collect()
-    s2 = dedup.simhash_signatures(t["documents"]).collect()
-    assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
-    # identical text ⇒ identical signature
-    dup = t["documents"].select("doc_id", F.lit("alpha beta gamma").alias("text"))
-    sigs = {r["simhash"] for r in dedup.simhash_signatures(dup).collect()}
-    assert len(sigs) == 1
-    # a doc too short to shingle has no signature and can never pair
-    short = spark.createDataFrame(
-        [(1, "hello"), (2, "two words"), (3, "three whole tokens")],
-        "doc_id bigint, text string",
-    )
-    by_id = {r["doc_id"]: r["simhash"] for r in dedup.simhash_signatures(short).collect()}
-    assert by_id[1] is None and by_id[2] is None and by_id[3] is not None
-    assert dedup.simhash_pairs(short).collect() == []
-    pairs = dedup.simhash_pairs(t["documents"], max_hamming=8).collect()
-    for row in pairs:
-        assert 0 <= row["hamming"] <= 8
-    # near-dup TAIL, not a vocabulary clique (the per-token featurization
-    # returned 13 pairs/doc on this corpus)
-    n_docs = t["documents"].count()
-    assert len(pairs) < 0.02 * n_docs * (n_docs - 1) / 2
-
-
 def test_fingerprint_deterministic(spark, sf_dir):
     fn = catalog.queries()["q_text_fingerprint"]
     a = sorted(map(tuple, fn(spark, sf_dir).collect()))
@@ -1286,7 +1235,9 @@ def test_unshingleable_count_measures_exclusion(spark):
     assert dedup.unshingleable_count(docs, shingle_n=3) == 2
     assert dedup.unshingleable_count(docs, shingle_n=5) == 4
     # and the excluded docs indeed produce NULL simhash signatures
-    sigs = dedup.simhash_signatures(docs).toPandas().set_index("doc_id")
+    sigs = (
+        dedup.simhash_portable_signatures(docs).toPandas().set_index("doc_id")
+    )
     assert sigs.loc[1, "simhash"] is None or sigs.loc[1, "simhash"] != sigs.loc[1, "simhash"]
     assert sigs.loc[3, "simhash"] == sigs.loc[3, "simhash"]
 
@@ -1593,9 +1544,10 @@ def test_semantic_dedup_stats_split_identical_vectors_across_clusters(spark):
 
 
 def test_ivf_degenerate_path_excludes_null_vectors(spark):
-    """Round-4 review find: the sub-2-row IVF fallback brute-forced the
+    """Round-4 review find: a sub-2-row IVF corpus brute-forced the
     UNFILTERED frame, leaking NULL-vector rows (outside the operator's
-    domain) into the top-k with NULL cos."""
+    domain) into the top-k with NULL cos. ivf_portable_topk on one
+    non-NULL vector (fewer rows than cells) must return just that row."""
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, None)],
         "vec_id bigint, embedding array<float>",
@@ -1603,7 +1555,7 @@ def test_ivf_degenerate_path_excludes_null_vectors(spark):
     q = spark.createDataFrame(
         [(7, [1.0, 0.0])], "query_id bigint, query_vec array<float>"
     )
-    out = similarity.ivf_topk(emb, q, k=3).collect()
+    out = similarity.ivf_portable_topk(emb, q, k=3).collect()
     assert [(r["query_id"], r["vec_id"]) for r in out] == [(7, 1)]
 
 
@@ -1625,7 +1577,7 @@ def test_unshingleable_count_matches_minhash_exclusions(spark):
     dup = spark.createDataFrame(
         [(1, "alpha  beta"), (2, "alpha  beta")], "doc_id bigint, text string"
     )
-    assert dedup.minhash_lsh_pairs(dup, jaccard_threshold=0.5).collect() == []
+    assert dedup.minhash_portable_pairs(dup, jaccard_threshold=0.5).collect() == []
 
 
 def test_png_decode_normalizes_corruption_to_valueerror():
@@ -1667,8 +1619,8 @@ def test_fixed_point_join_degenerate_tokens(spark):
 @pytest.mark.slow  # ~17 s duplicate battery; opt-in (r11, see pytest.ini)
 def test_text_dedup_collapse_equals_naive_on_duplicate_heavy_corpus(spark):
     """The exact-duplicate collapse (collapse=True, the production default)
-    must be bit-identical to the naive formulation for all three text
-    fuzzy-dedup families — on a corpus that stresses every edge the
+    must be bit-identical to the naive formulation for every text
+    fuzzy-dedup family — on a corpus that stresses every edge the
     collapse reasons about: copy multiplicities 1..6, near-dup clusters,
     empty / whitespace-only / sub-shingle texts, and a NULL text.
 
@@ -1700,9 +1652,7 @@ def test_text_dedup_collapse_equals_naive_on_duplicate_heavy_corpus(spark):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     for fn, cols, kw in [
-        (dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"], {}),
         (dedup.minhash_portable_pairs, ["id_a", "id_b", "jaccard_dist"], {}),
-        (dedup.simhash_pairs, ["id_a", "id_b", "hamming"], {}),
         (dedup.simhash_portable_pairs, ["id_a", "id_b", "hamming"], {}),
         (dedup.ngram_jaccard_pairs, ["doc_a", "doc_b", "jaccard"],
          dict(threshold=0.5)),
@@ -1724,16 +1674,16 @@ def test_text_dedup_collapse_equals_naive_on_duplicate_heavy_corpus(spark):
 @pytest.mark.slow  # ~18 s boundary battery; opt-in (r11, see pytest.ini)
 def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
     """Collapse≡naive must hold AT the self-distance boundary, where the
-    families' naive filters differ in strictness: approxSimilarityJoin
-    keeps candidates with dist STRICTLY below 1-threshold (verified
-    against spark-mllib 4.1.2 bytecode), so at jaccard_threshold=1.0 the
-    naive minhash form emits NO pairs even for byte-identical docs — the
-    review of the hand-expanded collapse branches found minhash emitting
-    its within-group pairs unconditionally there (the other three copies
-    had the guard; now all four share _collapsed_pairs and pin the
-    boundary in emit_intra). The Jaccard families' filter is INCLUSIVE
-    (jaccard >= threshold): identical docs still pair at threshold=1.0
-    and stop pairing above it; simhash stops at max_hamming < 0."""
+    families' naive filters differ in strictness: MinHash keeps pairs
+    with jaccard_dist STRICTLY below 1-threshold, so at
+    jaccard_threshold=1.0 the naive minhash form emits NO pairs even for
+    byte-identical docs — the review of the hand-expanded collapse
+    branches found minhash emitting its within-group pairs
+    unconditionally there (the other copies had the guard; now every
+    family shares _collapsed_pairs and pins the boundary in emit_intra).
+    The Jaccard families' filter is INCLUSIVE (jaccard >= threshold):
+    identical docs still pair at threshold=1.0 and stop pairing above it;
+    simhash stops at max_hamming < 0."""
     from etl_asana_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -1750,9 +1700,9 @@ def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     cases = [
-        (dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"],
+        (dedup.minhash_portable_pairs, ["id_a", "id_b", "jaccard_dist"],
          dict(jaccard_threshold=1.0)),
-        (dedup.simhash_pairs, ["id_a", "id_b", "hamming"],
+        (dedup.simhash_portable_pairs, ["id_a", "id_b", "hamming"],
          dict(max_hamming=-1)),
         (dedup.ngram_jaccard_pairs, ["doc_a", "doc_b", "jaccard"],
          dict(threshold=1.0)),
@@ -1778,7 +1728,7 @@ def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
             docs, threshold=1.0), ["doc_a", "doc_b"])) > 0
     )
     # ... while the strict minhash boundary emits nothing there.
-    assert canon(dedup.minhash_lsh_pairs(
+    assert canon(dedup.minhash_portable_pairs(
         docs, jaccard_threshold=1.0), ["id_a", "id_b"]) == []
 
 
@@ -1942,11 +1892,12 @@ def test_lloyd_cte_oracle_is_dimension_independent():
 
 
 def test_minhash_portable_pairs_are_true_near_dups(spark, sf_dir):
-    """The r06 registered q_dedup_minhash (portable poly_hash family) must
-    keep the xxhash64 family's precision contract: every emitted pair is a
-    true shingle-set near-dup (collision slack around the 0.5 threshold),
+    """The registered q_dedup_minhash (portable poly_hash family) keeps
+    the MinHash precision contract: every emitted pair is a true
+    shingle-set near-dup (collision slack around the 0.5 threshold),
     ordered id_a < id_b, and the pair set stays a near-dup TAIL rather
-    than a vocabulary clique."""
+    than a vocabulary clique (the pre-shingling featurization returned 68%
+    of all doc pairs here)."""
     t = load_tables(spark, sf_dir)
     pairs = catalog.queries()["q_dedup_minhash"](spark, sf_dir).collect()
     assert pairs  # the corpus plants a near-dup tail; empty = lost recall
@@ -1970,8 +1921,8 @@ def test_minhash_portable_pairs_are_true_near_dups(spark, sf_dir):
 
 
 def test_simhash_portable_signature_and_pair_invariants(spark, sf_dir):
-    """The r06 registered q_dedup_simhash (portable 40-bit poly-hash
-    family) keeps the 64-bit family's contracts: deterministic signatures
+    """The registered q_dedup_simhash (portable 40-bit poly-hash family)
+    keeps the SimHash contracts: deterministic signatures
     in [0, 2^40), identical text -> identical signature, sub-shingle docs
     get NULL and never pair, emitted Hamming within [0, 8], and the pair
     set is a near-dup tail, not a vocabulary clique."""
