@@ -44,5 +44,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per oracle-checkable query key."""
+    """DuckDB-runnable ANSI SQL oracle for every query key."""
     return _catalog.oracle_sql(ordering="verification-rotation")

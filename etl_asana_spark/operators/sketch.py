@@ -11,19 +11,18 @@ a few hundred KB), so the sketch broadcasts. Guarantees: estimates NEVER
 undercount (hash collisions only add), and overcount ≤ εN with
 ε ≈ e/width at failure probability e^-depth — both asserted in tests.
 
-Hashes: the default is ``xxhash64(value, i)`` — deterministic across
-runs/partitions so builds are reproducible, but JVM-only.
-``portable=True`` (r06) swaps in the LCG row family
-``((a_i·(x mod P) + b_i) mod P) mod width`` over INTEGER keys — exact in
-BIGINT and replayable in DuckDB, which is what gives q_agg_cms_topk a full
-SQL oracle. Same guarantees either way (pairwise-independence-style
-hashing is all CMS needs; the ε/δ bounds are asserted for both in tests).
+Hashes: one family, the LCG rows ``((a_i·(x mod P) + b_i) mod P) mod width``
+over INTEGER keys — deterministic across runs/partitions, exact in BIGINT
+and replayable in DuckDB, which is what gives q_agg_cms_topk a full SQL
+oracle (pairwise-independence-style hashing is all CMS needs; the ε/δ
+bounds are asserted in tests). A non-integer key column is rejected.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 #: Portable integer-hash rows (shared LCG constants; P = 2^31-1 keeps
 #: every product < 2^62). Single-sourced into the q_agg_cms_topk oracle.
@@ -36,8 +35,7 @@ from pyspark.sql import functions as F
 #: keys). For wider domains, fold the high bits first (e.g. ``key XOR
 #: (key >> 31)``) on BOTH engines — the SQL twins in queries_events.py /
 #: queries_core.py embed the same ``x`` expression and must change in
-#: lockstep — or use the non-portable xxhash64 path, which hashes the
-#: full 64 bits.
+#: lockstep.
 CMS_P = 2147483647
 CMS_COEFFS = (
     (1103515245, 12345),
@@ -47,9 +45,7 @@ CMS_COEFFS = (
 )
 
 
-def _bucket(col: Column, i: int, width: int, portable: bool) -> Column:
-    if not portable:
-        return F.pmod(F.xxhash64(col, F.lit(i)), F.lit(width))
+def _bucket(col: Column, i: int, width: int) -> Column:
     a, b = CMS_COEFFS[i]
     x = F.pmod(col.cast("long"), F.lit(CMS_P).cast("long"))
     return F.pmod(
@@ -59,15 +55,20 @@ def _bucket(col: Column, i: int, width: int, portable: bool) -> Column:
     )
 
 
-def _pairs(col: Column, depth: int, width: int, portable: bool = False) -> Column:
-    if portable and depth > len(CMS_COEFFS):
-        raise ValueError(f"portable CMS supports depth <= {len(CMS_COEFFS)}")
+def _pairs(df: DataFrame, col: str, depth: int, width: int) -> Column:
+    if not isinstance(df.schema[col].dataType, IntegralType):
+        raise ValueError(
+            f"count-min sketch keys must be an integer column; "
+            f"{col} is {df.schema[col].dataType.simpleString()}"
+        )
+    if depth > len(CMS_COEFFS):
+        raise ValueError(f"count-min sketch supports depth <= {len(CMS_COEFFS)}")
     return F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("i"),
-                    _bucket(col, i, width, portable).alias("bucket"),
+                    _bucket(F.col(col), i, width).alias("bucket"),
                 )
                 for i in range(depth)
             ]
@@ -76,16 +77,14 @@ def _pairs(col: Column, depth: int, width: int, portable: bool = False) -> Colum
 
 
 def cms_build(
-    df: DataFrame, col: str, *, depth: int = 4, width: int = 8192,
-    portable: bool = False,
+    df: DataFrame, col: str, *, depth: int = 4, width: int = 8192
 ) -> DataFrame:
-    """Sketch table (i, bucket, cnt) for the values of ``col``.
-    ``portable=True`` hashes with the integer LCG family (NULL keys are
-    outside the sketch domain there — a NULL bucket counts nothing and
-    matches nothing, mirrored by the SQL oracle's IS NOT NULL)."""
-    base = df.filter(F.col(col).isNotNull()) if portable else df
+    """Sketch table (i, bucket, cnt) for the values of the integer column
+    ``col``. NULL keys are outside the sketch domain — a NULL bucket counts
+    nothing and matches nothing, mirrored by the SQL oracle's IS NOT NULL."""
     return (
-        base.select(_pairs(F.col(col), depth, width, portable).alias("p"))
+        df.filter(F.col(col).isNotNull())
+        .select(_pairs(df, col, depth, width).alias("p"))
         .groupBy(F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -106,12 +105,11 @@ def cms_estimate(
     *,
     depth: int = 4,
     width: int = 8192,
-    portable: bool = False,
 ) -> DataFrame:
     """Point estimates for ``keys[col]``: min over the depth counters.
     The sketch side is tiny — broadcast it, never shuffle the keys."""
     probes = keys.select(
-        F.col(col), _pairs(F.col(col), depth, width, portable).alias("p")
+        F.col(col), _pairs(keys, col, depth, width).alias("p")
     ).select(col, F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
     return (
         probes.join(F.broadcast(sketch), ["i", "bucket"], "left")

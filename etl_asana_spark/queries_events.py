@@ -271,16 +271,15 @@ def q_agg_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     key without rescanning, and daily sketches merge into weekly by
     counter-sum (cms_merge) — same rollup shape as q_agg_hll_rollup.
 
-    SQL-oracle-checked since round 6 (previously rows-only): the
-    registered key builds with ``portable=True`` — the integer LCG hash
-    family instead of xxhash64 — which DuckDB replays counter-for-counter
-    (``_cms_oracle_sql``). The xxhash64 build stays the library default;
-    the never-undercounts and εN overcount guarantees are asserted for
-    both hash families in tests/test_llm_ops.py."""
+    SQL-oracle-checked since round 6 (previously rows-only): the sketch
+    hashes with the integer LCG family, which DuckDB replays
+    counter-for-counter (``_cms_oracle_sql``). The never-undercounts and
+    εN overcount guarantees and the merge property are asserted in
+    tests/test_llm_ops.py."""
     from .operators import sketch
 
     ev = load_tables(spark, sf_dir)["events"]
-    cms = sketch.cms_build(ev, "user_id", portable=True)
+    cms = sketch.cms_build(ev, "user_id")
     exact_top = (
         ev.groupBy("user_id")
         .agg(F.count("*").alias("n_events"))
@@ -288,9 +287,7 @@ def q_agg_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
     )
     return exact_top.join(
-        sketch.cms_estimate(
-            cms, exact_top.select("user_id"), "user_id", portable=True
-        ),
+        sketch.cms_estimate(cms, exact_top.select("user_id"), "user_id"),
         "user_id",
     ).select("user_id", "n_events", "cms_estimate")
 

@@ -8,14 +8,14 @@ Differences from scripts/sweep.py (the strict local mirror):
   partitions, no nanosAsLong/UTC settings). The registry must self-apply every
   runtime conf it needs; a key that only passes under sweep.py's tuned session
   would be red at the external gate.
-- keys run through ``__spark_entry__`` (the literal driver import surface),
-  not ``catalog`` directly.
+- the smoke check and the key order come from ``__spark_entry__`` (the
+  literal driver import surface).
 - ``--prefix N`` runs only the first N rotation-ordered keys — the projected
   budgeted prefix the external gate will verify next round. Pre-verifying that
   exact prefix is the round's first closing gate (VERDICT r04 next-round #1).
 
-Comparison logic is shared with sweep.py (driver-style canon + kind-strict
-frames_match) so a pass here means the same thing it means there.
+Each key is judged by ``testing.check_query``, the comparator sweep.py and
+the tests use, so a pass here means the same thing it means there.
 
 Exits non-zero on any failure.
 """
@@ -26,9 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
-
-from sweep import canon, frames_match  # noqa: E402
 
 
 def main() -> int:
@@ -53,7 +50,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod  # noqa: E402
 
-    from etl_asana_spark.testing import duckdb_connect  # noqa: E402
+    from etl_asana_spark.testing import check_query, duckdb_connect  # noqa: E402
 
     smoke = entry_mod.entry(spark)
     n_smoke = smoke.count()
@@ -62,9 +59,7 @@ def main() -> int:
         print("FAIL entry() returned no rows")
         return 1
 
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    keys = list(qs)
+    keys = list(entry_mod.queries())
     if prefix is not None:
         keys = keys[:prefix]
     con = duckdb_connect(sf_dir)
@@ -74,27 +69,16 @@ def main() -> int:
     for i, key in enumerate(keys):
         t0 = time.perf_counter()
         try:
-            pdf = qs[key](spark, sf_dir).toPandas()
-            sql = oracles.get(key)
-            if sql is None:
-                canon(pdf)  # the driver canonicalizes rows-only frames too
-                problem = None
-                status = f"rows-only ({len(pdf)} rows)"
-                if len(pdf) == 0 and key != "q_join_anti":
-                    problem = "0 rows from a rows-only key"
-            else:
-                problem = frames_match(pdf, con.execute(sql).fetchdf())
-                status = f"ok ({len(pdf)} rows)"
+            problems = check_query(spark, con, key, sf_dir)
         except Exception as exc:  # noqa: BLE001
-            problem = f"{type(exc).__name__}: {exc}"
-            status = "error"
+            problems = [f"{type(exc).__name__}: {exc}"]
         dt = time.perf_counter() - t0
         total_t += dt
-        if problem:
+        if problems:
             n_fail += 1
-            print(f"FAIL [{i:3d}] {key:32s} {dt:6.2f}s  {problem}")
+            print(f"FAIL [{i:3d}] {key:32s} {dt:6.2f}s  {'; '.join(problems)}")
         else:
-            print(f"PASS [{i:3d}] {key:32s} {dt:6.2f}s  {status}")
+            print(f"PASS [{i:3d}] {key:32s} {dt:6.2f}s")
     print(f"\n{len(keys)} keys, {n_fail} failures, {total_t:.1f}s total")
     return 1 if n_fail else 0
 

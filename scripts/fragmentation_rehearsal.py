@@ -18,10 +18,10 @@ Each table is rewritten as a DIRECTORY ``{name}.parquet/`` of N seeded
 row-slice part files (N scaled to table size; part boundaries are odd on
 purpose). With ``--shuffle`` the rows are first permuted by a seeded
 ``random.Random`` shuffle, so both hazards compound. Logical schema and the
-multiset of rows are preserved EXACTLY — so every SQL-checked key's
+multiset of rows are preserved EXACTLY — so every key's
 hash-compare against the DuckDB oracle (which reads the same fragmented
 directory via a glob, see ``testing.duckdb_connect``) is a true invariance
-check, and rows-only keys still pass driver-style canonicalization.
+check.
 
 The rewritten dir's basename is never the gate-scale name, so sweep's cost
 snapshot is untouched.
@@ -38,10 +38,9 @@ import subprocess
 import sys
 import tempfile
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from etl_asana_spark.registry import TABLE_NAMES  # noqa: E402
 
 
 def _n_parts(num_rows: int) -> int:
@@ -54,7 +53,7 @@ def rewrite(src: str, dst: str, *, shuffle: bool, seed: int = 4242) -> None:
     import pyarrow.parquet as pq
 
     os.makedirs(dst, exist_ok=True)
-    for name in TABLES:
+    for name in TABLE_NAMES:
         t = pq.read_table(f"{src}/{name}.parquet")
         # Cross-process-stable seed: tuple.__hash__ salts str hashing per
         # process (PYTHONHASHSEED), which made a failing layout impossible to

@@ -16,10 +16,9 @@ physical knob at once:
 
 Then the FULL catalog runs against the rewritten directory via
 ``scripts/sweep.py`` — both Spark and the DuckDB oracle read the same
-rewritten files, so every SQL-checked key's hash compare is a true
-layout-invariance check, and rows-only keys still pass driver-style
-canonicalization. The rewritten dir's basename is never the gate-scale name,
-so sweep's cost snapshot is untouched.
+rewritten files, so every key's hash compare is a true layout-invariance
+check. The rewritten dir's basename is never the gate-scale name, so sweep's
+cost snapshot is untouched.
 
 Usage:  python scripts/layout_rehearsal.py [src_sf_dir] [--keep]
 """
@@ -33,10 +32,9 @@ import subprocess
 import sys
 import tempfile
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from etl_asana_spark.registry import TABLE_NAMES  # noqa: E402
 
 
 def rewrite(src: str, dst: str, seed: int = 42) -> None:
@@ -44,7 +42,7 @@ def rewrite(src: str, dst: str, seed: int = 42) -> None:
 
     rng = random.Random(seed)
     os.makedirs(dst, exist_ok=True)
-    for name in TABLES:
+    for name in TABLE_NAMES:
         t = pq.read_table(f"{src}/{name}.parquet")
         cols = list(t.column_names)
         rng.shuffle(cols)

@@ -18,8 +18,8 @@ carry-over) in numpy for both registered configs and reports:
 
 Round-5 measurements: assignment margins ≥ 5.6e-7 and cosine margins
 ≥ 5.1e-6 at both gate scales — 8-9 orders of magnitude above drift. If a
-future testdata regeneration shrinks these below ~1e-9, demote the two keys
-back to rows-only before the gate sees them.
+future testdata regeneration shrinks these below ~1e-9, rework the two keys'
+oracles (every key must keep one) before the gate sees them.
 """
 
 from __future__ import annotations
@@ -285,7 +285,7 @@ def main() -> int:
     ok = all([probe(d) for d in dirs])
     print(
         "margins",
-        "SAFE" if ok else "TOO SMALL — demote the affected keys to rows-only",
+        "SAFE" if ok else "TOO SMALL — rework the affected keys' oracles",
     )
     return 0 if ok else 1
 

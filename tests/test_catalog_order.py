@@ -194,6 +194,28 @@ def test_unknown_ordering_rejected():
         catalog.queries(ordering="nope")
 
 
+def test_register_requires_an_oracle():
+    # Every key is judged against its DuckDB oracle; a key without one
+    # cannot be registered.
+    import pytest
+
+    with pytest.raises(TypeError):
+        catalog.register("k")
+
+
+def test_load_all_raises_on_missing_query_module(monkeypatch):
+    # A query module that fails to import must fail loudly: skipping it
+    # would silently drop every key it registers from the gate.
+    import pytest
+
+    monkeypatch.setattr(
+        catalog, "_QUERY_MODULES",
+        (*catalog._QUERY_MODULES, "etl_asana_spark.queries_missing"),
+    )
+    with pytest.raises(ModuleNotFoundError):
+        catalog.load_all()
+
+
 def test_generation_snapshot_covers_catalog():
     # Every registered key must have a generation: a key missing from the
     # snapshot silently queues last (gen 999), which is only correct for

@@ -950,6 +950,19 @@ def test_cms_merge_equals_single_build(spark, sf_dir):
     assert a == b
 
 
+def test_cms_rejects_non_integer_keys(spark):
+    """The LCG hash rows are defined over integers: a string or double key
+    column is refused, never silently cast."""
+    from etl_asana_spark.operators import sketch
+
+    df = spark.createDataFrame([("a", 1.5)], "s string, d double")
+    for col in ("s", "d"):
+        with pytest.raises(ValueError, match="integer"):
+            sketch.cms_build(df, col)
+        with pytest.raises(ValueError, match="integer"):
+            sketch.cms_estimate(df, df, col)
+
+
 def test_inverted_index_invariants(spark, sf_dir):
     """df ≤ tf, postings sorted/unique/capped at 20, df ≥ the declared floor."""
     rows = catalog.queries()["q_text_inverted_index"](spark, sf_dir).collect()

@@ -7,8 +7,9 @@ a bug as "expected":
 1. **Freshness** — a pure-Python replay of the kernels over the CURRENT
    testdata parquet must reproduce the committed fixture rows exactly
    (catches testdata regeneration and kernel drift before the gate does).
-2. **Gate parity** — the registered queries hash-match their oracles under
-   the driver-shaped comparison at the test sf_dir.
+2. **Gate parity** — the registered queries hash-match their oracles
+   through ``testing.check_query`` at the test sf_dir
+   (``tests/test_parity.py::test_parity[q_multimodal*]``).
 3. **Independence** — DuckDB recomputes the luma signatures byte-by-byte
    from the documents table alone (hex-extracted pixel bytes, ITU-R 601
    luma, column-bucket means) and must agree with the fixture's fixed-point
@@ -20,21 +21,12 @@ from __future__ import annotations
 
 import importlib.util
 import json
-import sys
 from pathlib import Path
 
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 FIXTURES = REPO / "fixtures"
-
-MM_KEYS = (
-    "q_multimodal",
-    "q_multimodal_resize",
-    "q_multimodal_frames",
-    "q_multimodal_audio",
-)
-
 
 def _regen_module():
     spec = importlib.util.spec_from_file_location(
@@ -76,24 +68,6 @@ def test_committed_fixtures_fresh_for_current_testdata(sf_dir):
         f"{len(stale)} fixture rows stale vs current testdata "
         f"(run scripts/regen_multimodal_expected.py): {stale[:5]}"
     )
-
-
-def test_multimodal_keys_hash_match_their_oracles(spark, sf_dir, duck):
-    """The gate check itself, locally: driver-shaped frames_match over all
-    three keys at the test sf_dir."""
-    sys.path.insert(0, str(REPO / "scripts"))
-    from sweep import frames_match
-
-    from etl_asana_spark import catalog
-
-    qs, oracles = catalog.queries(), catalog.oracle_sql()
-    for key in MM_KEYS:
-        assert key in oracles, f"{key} lost its oracle"
-        problem = frames_match(
-            qs[key](spark, sf_dir).toPandas(),
-            duck.execute(oracles[key]).fetchdf(),
-        )
-        assert problem is None, f"{key}: {problem}"
 
 
 def test_oracle_joins_guard_against_stale_fixture(duck, sf_dir):
@@ -253,8 +227,8 @@ def test_kernels_match_pure_python_on_hostile_unicode_corpus(spark, tmp_path):
 
 # ---------------------------------------------------------------------------
 # Audio tier (r07): the same three evidence layers for q_multimodal_audio.
-# Freshness and gate parity ride the shared tests above (the audio fixture
-# and key are in their loops); below are the audio-specific independence
+# Freshness rides the shared test above (the audio fixture is in its loop)
+# and gate parity rides test_parity; below are the audio-specific independence
 # and stale-guard checks.
 # ---------------------------------------------------------------------------
 

@@ -1,7 +1,6 @@
 """Mirror of the driver's t2 gate: every catalog key vs its DuckDB oracle.
 
-Oracle-less keys get the driver's weaker check (query runs, schema stable,
-rows collected). Runs at sf0.001 by default; PARITY_SF_DIR bumps the scale.
+Runs at sf0.001 by default; PARITY_SF_DIR bumps the scale.
 """
 
 from __future__ import annotations
@@ -32,26 +31,6 @@ def test_entry_smoke(spark):
 def test_every_query_has_callable_and_key_coverage():
     qs = catalog.queries()
     oracles = catalog.oracle_sql()
-    assert set(oracles) <= set(qs), "oracle without query"
+    assert set(oracles) == set(qs), "every key registers exactly one oracle"
     for key, fn in qs.items():
         assert callable(fn), key
-
-
-def test_every_rows_only_key_documents_why():
-    """An oracle-less key gets only the driver's weak rows-only check, so
-    the docstring must say WHY no SQL oracle exists (sketch estimate,
-    seeded projection, binary decode, ...). Keeps the rows-only set an
-    explicit, justified list — a new key can't silently skip the oracle."""
-    import re
-
-    catalog.load_all()
-    markers = ("rows-only", "rows only", "no oracle", "no sql oracle",
-               "no duckdb", "engine-specific")
-    missing = []
-    for key, fn in catalog._QUERIES.items():
-        if key in catalog._ORACLES:
-            continue
-        doc = re.sub(r"\s+", " ", (fn.__doc__ or "")).replace("- ", "-").lower()
-        if not any(m in doc for m in markers):
-            missing.append(key)
-    assert not missing, f"rows-only keys without a documented rationale: {missing}"

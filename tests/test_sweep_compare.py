@@ -1,4 +1,5 @@
-"""Pin scripts/sweep.py's driver-shaped strict compare (no Spark needed).
+"""Pin ``testing.compare_frames``, the one driver-shaped strict compare
+(no Spark needed), plus scripts/sweep.py's argument parsing.
 
 The external gate hashes canonicalized result frames, so its notion of
 equality is stricter than numeric ==: an int64 column and a float64 column
@@ -16,6 +17,8 @@ import os
 import pandas as pd
 import pytest
 
+from etl_asana_spark.testing import compare_frames
+
 
 @pytest.fixture(scope="module")
 def sweep():
@@ -30,61 +33,79 @@ def sweep():
     return mod
 
 
-def test_int_vs_float_column_drift_fails(sweep):
+def test_int_vs_float_column_drift_fails():
     """The exact r02 failure shape: equal values, int64 vs float64 dtype."""
     a = pd.DataFrame({"day": ["d1"], "cum": pd.array([134], dtype="int64")})
     b = pd.DataFrame({"day": ["d1"], "cum": pd.array([134.0], dtype="float64")})
-    assert sweep.frames_match(a, b) is not None
-    assert sweep.frames_match(b, a) is not None
+    assert compare_frames(a, b)
+    assert compare_frames(b, a)
 
 
-def test_int_width_does_not_matter(sweep):
+def test_int_width_does_not_matter():
     """int32 vs int64 print identically → must compare equal (nation keys)."""
     a = pd.DataFrame({"x": pd.array([1, 2], dtype="int32")})
     b = pd.DataFrame({"x": pd.array([1, 2], dtype="int64")})
-    assert sweep.frames_match(a, b) is None
+    assert compare_frames(a, b) == []
 
 
-def test_object_column_cell_kinds_checked(sweep):
+def test_object_column_cell_kinds_checked():
     """Mixed/object columns get per-cell kind checks: a Python int cell is
     not equal to a float cell even when == says so."""
     a = pd.DataFrame({"x": pd.Series([1, None], dtype="object")})
     b = pd.DataFrame({"x": [1.0, float("nan")]})
-    assert sweep.frames_match(a, b) is not None
+    assert compare_frames(a, b)
 
 
-def test_matching_frames_pass_with_nulls_and_row_order(sweep):
-    """Equality is order-insensitive (canon sorts) and NaN==NaN within a
-    float column; column order is irrelevant."""
+def test_matching_frames_pass_with_nulls_and_row_order():
+    """Equality is order-insensitive (rows are sorted) and NaN==NaN within
+    a float column; column order is irrelevant."""
     a = pd.DataFrame({"k": [2, 1], "v": [float("nan"), 1.5]})
     b = pd.DataFrame({"v": [1.5, float("nan")], "k": [1, 2]})
-    assert sweep.frames_match(a, b) is None
+    assert compare_frames(a, b) == []
 
 
-def test_value_mismatch_still_caught(sweep):
+def test_value_mismatch_still_caught():
     a = pd.DataFrame({"x": [1.5]})
     b = pd.DataFrame({"x": [1.500001]})
-    assert sweep.frames_match(a, b) is not None
+    assert compare_frames(a, b)
 
 
-def test_array_cells_raise_like_the_driver_hasher(sweep):
-    """ndarray/list cells must blow up in canon (sort_values), exactly like
-    the driver's hasher did on round-1 q_agg_collect — the sweep treats the
-    exception as a FAIL, so a key returning array columns fails locally."""
-    import numpy as np
+def test_sub_microsecond_timestamp_drift_fails():
+    """Timestamps compare as exact instants: 500 ns apart is a different
+    value to the driver's hash, so no truncation to µs may hide it."""
+    a = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01 00:00:00.000000500"])})
+    b = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01 00:00:00"])})
+    assert compare_frames(a, b)
+    assert compare_frames(b, a)
 
-    a = pd.DataFrame({"x": [np.array([1, 2]), np.array([3])]})
-    with pytest.raises(Exception):
-        sweep.canon(a)
+
+def test_tz_aware_vs_naive_timestamp_fails():
+    """A tz-aware column and a naive one print differently, so the same
+    wall-clock values must not compare equal by dropping the tz."""
+    naive = pd.to_datetime(["2024-01-01 12:00:00"])
+    a = pd.DataFrame({"ts": naive.tz_localize("UTC")})
+    b = pd.DataFrame({"ts": naive})
+    assert compare_frames(a, b)
+    assert compare_frames(b, a)
+
+
+def test_equal_valued_rows_align_by_value_not_text():
+    """Rows are sorted by value: ``-0.0`` ties ``0.0``, so the next column
+    orders them and the two frames line up. A ``str()`` sort put
+    ``'-0.0'`` first and compared ``'b'`` against ``'a'``."""
+    a = pd.DataFrame({"x": [-0.0, 0.0], "y": ["b", "a"]})
+    b = pd.DataFrame({"x": [0.0, -0.0], "y": ["b", "a"]})
+    assert compare_frames(a, b) == []
+    assert compare_frames(b, a) == []
 
 
 def test_check_query_rejects_uncanonicalizable_rows_only_output(spark):
-    """Round-4 regression (the r03 q_multimodal gate red): a ROWS-ONLY key
-    whose frame holds ndarray/list cells must fail ``testing.check_query``
-    — the driver canonicalizes every key's frame before hashing, and the
+    """Round-4 regression (the r03 q_multimodal gate red): a key whose
+    frame holds ndarray/list cells must fail ``testing.check_query`` —
+    the driver canonicalizes every key's frame before hashing, and the
     old rows-only path skipped exactly that check locally. Inject a
     throwaway catalog key returning an array column and assert the guard
-    names the crash."""
+    names the crash before any oracle is looked up."""
     from pyspark.sql import functions as F
 
     from etl_asana_spark import catalog
