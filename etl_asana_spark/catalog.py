@@ -72,21 +72,18 @@ def load_all() -> None:
 
 def _driver_check_history(
     root: str | None = None,
-) -> tuple[dict[str, int], set[str], set[str]]:
-    """Per key: latest driver round that PASSED it, the keys whose most
-    recent driver check FAILED, and the keys that have EVER passed a full
-    SQL value-hash check (vs only the weaker rows-only ``no_oracle``
-    record — the distinction the rotation uses to put first-ever-SQL keys
-    ahead of mere oracle refreshes, r07).
+) -> tuple[dict[str, int], set[str]]:
+    """Per key: latest driver round that PASSED it, and the keys whose most
+    recent driver check FAILED.
 
     The driver's per-round correctness gate verifies a PREFIX of the catalog
     (round 1 checked exactly the first 50 of 195 keys — a count/time budget),
     so the key order we return decides which operators ever get externally
     verified. We read the driver's own ``CORRECTNESS_r*.json`` records and
-    treat a key as verified-in-round-N when it was checked there and did not
-    mismatch (a rows-only ``no_oracle`` record counts; an error or a False
-    match flag does not). A key whose LATEST check failed goes in the failed
-    set — those must re-enter the next round's prefix so the fix is
+    treat a key as verified-in-round-N when its record there matched rows
+    and did not mismatch the hash (an error, a False match flag or a
+    rows-only ``no_oracle`` record does not count: every key has an oracle
+    now). A key whose LATEST check failed goes in the failed set — those must re-enter the next round's prefix so the fix is
     externally proven (a failed key that merely rejoined the never-verified
     pool would sort mid-pack by cost and could wait rounds for re-check; the
     r02 ``q_cumulative_uniques`` red landed at position 94 that way).
@@ -94,7 +91,6 @@ def _driver_check_history(
     passed: dict[str, int] = {}
     checked: dict[str, int] = {}  # latest round each key was checked at all
     latest_ok: dict[str, bool] = {}
-    hash_passed: set[str] = set()  # keys with ≥1 full SQL value-hash pass
     # ``root`` lets tests pin synthetic CORRECTNESS fixtures instead of the
     # live repo-root artifacts (which the driver mutates every round).
     repo_root = root or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -111,20 +107,17 @@ def _driver_check_history(
         for key, rec in report.items():
             if not isinstance(rec, dict):
                 continue
-            err = rec.get("err")
             ok = (
                 rec.get("rows_match") is True
                 and rec.get("hash_match") is not False
-            ) or (err == "no_oracle" and rec.get("spark_rows") is not None)
+            )
             if ok:
                 passed[key] = max(passed.get(key, 0), rnd)
-                if err != "no_oracle" and rec.get("hash_match") is True:
-                    hash_passed.add(key)
             if rnd >= checked.get(key, 0):
                 checked[key] = rnd
                 latest_ok[key] = ok
     failed = {k for k, ok in latest_ok.items() if not ok}
-    return passed, failed, hash_passed
+    return passed, failed
 
 
 def _key_costs() -> dict[str, float]:
@@ -163,11 +156,10 @@ def _oracle_generations(root: str | None = None) -> dict[str, int]:
     arrived (or materially changed) AFTER the key had already been
     gate-checked (``scripts/oracle_generations.json``).
 
-    Why this exists (r05 verdict item 1): ``_driver_check_history`` counts a
-    rows-only ``no_oracle`` record as *passed*, so a key that was
-    gate-checked rows-only in round N and gained a full SQL oracle in round
-    M > N would keep its round-N "passed" position in the rotation and the
-    new oracle could wait many rounds for driver-side hash evidence. Keys
+    Why this exists (r05 verdict item 1): a key that passed the gate in
+    round N and whose oracle changed in round M > N would keep its round-N
+    "passed" position in the rotation, and the new oracle could wait many
+    rounds for driver-side hash evidence. Keys
     listed here with a generation NEWER than their last driver pass are
     re-queued with the never-verified pool (their stronger check has never
     run externally). Curated by hand when an oracle is added or semantically
@@ -220,16 +212,13 @@ def _rotated(keys: list[str]) -> list[str]:
     (``scripts/key_costs.json``) and key registration generations
     (``scripts/key_generations.json``) and sorts keys whose LATEST driver
     check failed first of all (the fix must be externally re-proven next
-    round), then never-verified keys — rows-only → oracle UPGRADES first
-    (their stronger check has zero external evidence of any SQL form,
-    unlike a re-queued oracle edit whose key already hash-passed an
-    earlier form; r07), then oldest generation first, then cheapest —
-    then previously-passed keys oldest-round first. A key whose
+    round), then never-verified keys — oldest generation first, then
+    cheapest — then previously-passed keys oldest-round first. A key whose
     oracle is NEWER than its last driver pass
     (``scripts/oracle_generations.json``) counts as never-verified: its
-    strongest check has no external evidence yet, so an oracle upgrade
-    re-queues the key instead of letting it coast on a stale rows-only
-    pass. Coverage thus
+    current check has no external evidence yet, so an oracle change
+    re-queues the key instead of letting it coast on a stale pass.
+    Coverage thus
     ACCUMULATES across rounds: every round's prefix is spent on the keys
     with the least external evidence, a failure re-sorts to the very front
     for re-verification, and a newly added key queues BEHIND every key that
@@ -242,7 +231,7 @@ def _rotated(keys: list[str]) -> list[str]:
     registration order (SURVEY §7 milestone order); pass
     ``ordering="registration"`` to reproduce a registration-order run.
     """
-    passed, failed, hash_passed = _driver_check_history()
+    passed, failed = _driver_check_history()
     costs = _key_costs()
     gens = _key_generations()
     oracle_gens = _oracle_generations()
@@ -254,24 +243,10 @@ def _rotated(keys: list[str]) -> list[str]:
         # the pass predates the check the key would get today.
         return -1 if oracle_gens.get(k, 0) > rnd else rnd
 
-    def _subtier(k: str, primary: int) -> int:
-        # Within the never-verified pool only (r07): a key whose ONLY pass
-        # evidence is the weak rows-only record and which NOW has a SQL
-        # oracle (a rows-only → oracle upgrade) has ZERO hash evidence
-        # ever — it outranks keys re-queued for a mere oracle edit, which
-        # already hash-passed an earlier form. Keys never checked at all
-        # stay in the ordinary subtier so registration-generation
-        # precedence (rule 3) still governs them.
-        if primary != -1:
-            return 0
-        first_ever_sql = k in passed and k not in hash_passed
-        return 0 if first_ever_sql else 1
-
     def _key(k: str) -> tuple:
         primary = -2 if k in failed else _pass_round(k)
         return (
             primary,
-            _subtier(k, primary),
             gens.get(k, 999),
             costs.get(k, 2.0),
             order[k],

@@ -137,13 +137,6 @@ def dsum_wide(col: Column | str) -> Column:
     return F.sum(_units_dec(col)).cast("double") / F.lit(_SCALE)
 
 
-def davg_wide(col: Column | str) -> Column:
-    """Order-independent AVG via the wide accumulator."""
-    return (
-        F.sum(_units_dec(col)).cast("double") / F.lit(_SCALE) / F.count(_c(col))
-    ).cast("double")
-
-
 def sql_dsum(expr: str) -> str:
     """SQL mirror of ``dsum``. Every step is exact-by-construction in both
     dialects: DuckDB's ``floor`` returns DOUBLE so the BIGINT cast
@@ -179,11 +172,6 @@ def sql_dsum_wide(expr: str) -> str:
         f"(CAST(SUM(CAST(floor(CAST(({expr}) AS DOUBLE) * 1000000.0 + 0.5)"
         " AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0)"
     )
-
-
-def sql_davg_wide(expr: str) -> str:
-    """SQL mirror of ``davg_wide``."""
-    return f"CAST({sql_dsum_wide(expr)} / COUNT({expr}) AS DOUBLE)"
 
 
 def fixed_point_join(col: Column | str, scale: int = 1_000_000) -> Column:

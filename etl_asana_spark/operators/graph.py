@@ -20,21 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: Truncate plan lineage every N supersteps: without this, each iteration
-#: nests the previous plan and Catalyst analysis goes super-linear — the
-#: classic iterative-DataFrame failure mode (and at cluster scale the same
-#: checkpoint bounds recovery cost after executor loss).
-#: Materialize + truncate lineage EVERY superstep. Each superstep references
-#: the previous rank vector in two subtrees (edge contributions AND dangling
-#: mass), so without per-step materialization Catalyst re-derives ranks_t
-#: once per reference — the recomputation tree grows geometrically between
-#: checkpoints (measured round 3: 5 supersteps at sf0.01 cost 11+ s with
-#: cadence 2, under 5 s with cadence 1). The rank vector is n_nodes rows —
-#: tiny next to the recomputation it prevents — and per-superstep
-#: checkpointing is the standard Pregel discipline anyway.
-_CHECKPOINT_EVERY = 1
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -94,7 +79,18 @@ def pagerank(
             )
             .select("id", "outdeg", "rank")
         )
-        if (it + 1) % _CHECKPOINT_EVERY == 0 and it + 1 < iterations:
+        if it + 1 < iterations:
+            # Materialize + truncate lineage EVERY superstep. Each superstep
+            # references the previous rank vector in two subtrees (edge
+            # contributions AND dangling mass), so without per-step
+            # materialization Catalyst re-derives ranks_t once per reference
+            # — the recomputation tree grows geometrically between
+            # checkpoints (measured round 3: 5 supersteps at sf0.01 cost
+            # 11+ s with cadence 2, under 5 s with cadence 1), and each
+            # iteration nesting the previous plan makes analysis super-
+            # linear. The rank vector is n_nodes rows — tiny next to the
+            # recomputation it prevents — and per-superstep checkpointing
+            # is the standard Pregel discipline anyway.
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("id", "rank")
 
@@ -203,17 +199,18 @@ def pagerank_units(
                 )
             )
         ranks = stepped.select("id", "outdeg", "u")
-        if (it + 1) % _CHECKPOINT_EVERY == 0 and it + 1 < iterations:
-            # eager=False when dangling-free (r10): each superstep then
-            # references the previous rank vector exactly ONCE (the
-            # contribs join — the dangling subtree, the second reference,
-            # is gone), so the lazy checkpoint still computes every
-            # intermediate exactly once but the whole recurrence executes
-            # as ONE submitted job instead of one blocking job per
-            # superstep. The plan is truncated at checkpoint-creation time
-            # either way (LogicalRDD), so optimizer growth stays bounded.
-            # The dangling path keeps eager=True: its two same-job
-            # references to a lazily-cached RDD can race partition
-            # computation between the contribs and dmass stages.
+        if it + 1 < iterations:
+            # Per-superstep checkpoint, as in pagerank. eager=False when
+            # dangling-free (r10): each superstep then references the
+            # previous rank vector exactly ONCE (the contribs join — the
+            # dangling subtree, the second reference, is gone), so the
+            # lazy checkpoint still computes every intermediate exactly
+            # once but the whole recurrence executes as ONE submitted job
+            # instead of one blocking job per superstep. The plan is
+            # truncated at checkpoint-creation time either way
+            # (LogicalRDD), so optimizer growth stays bounded. The
+            # dangling path keeps eager=True: its two same-job references
+            # to a lazily-cached RDD can race partition computation
+            # between the contribs and dmass stages.
             ranks = ranks.localCheckpoint(eager=not dangling_free)
     return ranks.select("id", F.col("u").alias("rank_units"))

@@ -5,41 +5,40 @@ struct, exactly as a 100 TB training pipeline carries them (payload bytes
 co-located with row metadata in parquet; heavy decode work happens in
 Arrow-batched Python, not the JVM).
 
-The image decode kernels dispatch in tiers (r4 structure, r7 breadth):
+Every decode kernel has one implementation per media format, and each is
+a pure-stdlib codec, so the kernels run identically in every environment
+(no optional PIL/PyAV import can swap in a different decoder) and the
+golden fixtures that encode these codecs check the code production runs.
+The image kernels dispatch on the payload signature:
 
-1. **PIL** (optional import) — the production path for arbitrary formats.
-2. **Pure-stdlib PNG** (:mod:`.png_codec`, always available) — a REAL
-   decoder (zlib inflate, scanline unfiltering, pixel math) for 8-bit
-   grey/RGB/RGBA PNGs; with :func:`attach_png_payload` generating real PNG
-   fixtures, the decode → feature-extract → resize pipeline executes
-   genuinely end-to-end even in this PIL-less container.
-3. **Pure-stdlib baseline JPEG** (:mod:`.jpeg_codec`, round 7) — a REAL
-   decoder (Annex-K Huffman entropy decode, dequantization, 8×8 IDCT,
-   chroma upsampling, YCbCr→RGB) for baseline sequential-DCT streams up
-   to 2×2 sampling, incl. restart intervals; progressive/12-bit/CMYK
-   raise and fall through.
-4. **Deterministic stub** — for non-image payloads (the original text-byte
+1. **PNG** (:mod:`.png_codec`) — a REAL decoder (zlib inflate, scanline
+   unfiltering, pixel math) for 8-bit grey/RGB/RGBA PNGs; with
+   :func:`attach_png_payload` generating real PNG fixtures, the decode →
+   feature-extract → resize pipeline executes genuinely end-to-end.
+2. **Baseline JPEG** (:mod:`.jpeg_codec`, round 7) — a REAL decoder
+   (Annex-K Huffman entropy decode, dequantization, 8×8 IDCT, chroma
+   upsampling, YCbCr→RGB) for baseline sequential-DCT streams up to 2×2
+   sampling, incl. restart intervals; progressive/12-bit/CMYK raise and
+   fall through.
+3. **Deterministic stub** — for non-image payloads (the original text-byte
    fixtures) and formats outside the real paths; preserves every Spark
    aspect of the contract (schema, batch iteration, partitioning, UDF
    signature).
 
 Audio (round 7) has NO fake tier at all: RIFF/WAVE payloads take the real
-stdlib decode (:mod:`.wav_codec`, ``wave`` + ``struct``), and anything
-else is read as headerless raw u8 PCM — itself a real minimal audio
-interpretation (:func:`extract_audio_features`).
+decode (:func:`.wav_codec.decode_wav` — PCM16 and IMA-ADPCM), and anything
+else, including a WAV container that decoder rejects, is read as
+headerless raw u8 PCM — itself a real minimal audio interpretation
+(:func:`extract_audio_features`).
 
-Frame sampling (r07): PyAV when importable (arbitrary codecs) → the
-pure-stdlib MJPEG-AVI demux (:mod:`.avi_codec` + :mod:`.jpeg_codec` — AVI
-is RIFF and each '00dc' chunk is a complete baseline JPEG, so this tier
-is a REAL demux-and-decode) → deterministic payload slices for modern
-codecs, which genuinely need ffmpeg.
+Frame sampling (r07): the pure-stdlib MJPEG-AVI demux (:mod:`.avi_codec`
++ :mod:`.jpeg_codec` — AVI is RIFF and each '00dc' chunk is a complete
+baseline JPEG, so this tier is a REAL demux-and-decode) → deterministic
+payload slices for modern codecs, which genuinely need ffmpeg.
 """
 
 from __future__ import annotations
 
-import importlib
-import struct
-import wave
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -48,17 +47,6 @@ from pyspark.sql import functions as F
 from ..fsutil import local_input_bytes, volume_partitions
 from . import avi_codec, jpeg_codec, png_codec, wav_codec
 
-
-def _optional(name: str):
-    """Import ``name`` if present, else None — kernel dispatch helper.
-
-    Resolved at call time (inside the Arrow-batch functions, i.e. on the
-    EXECUTOR) so a cluster where workers have PIL but the driver doesn't —
-    or vice versa — behaves per-process, and tests can inject fakes."""
-    try:
-        return importlib.import_module(name)
-    except ImportError:
-        return None
 
 #: Compressed input bytes one Python decode task should own. Below this,
 #: a task's fixed cost (scheduling + Arrow channel setup + worker dispatch,
@@ -140,6 +128,51 @@ def attach_binary_payload(
     )
 
 
+def _attach_payload(
+    docs: DataFrame, id_col: str, text_col: str, mime: str, fields: str,
+    encode,
+) -> DataFrame:
+    """The one payload generator behind every ``attach_*_payload``: a
+    mapInPandas over (id, text) that skips NULL text (no content, no
+    payload — the NULL-domain rule) and turns each other row into
+    ``(doc_id, payload, media_meta)`` through ``encode(doc_id, text) ->
+    (payload, meta)``. ``media_meta`` is ``struct<mime, n_bytes, fields>``:
+    ``mime`` and ``n_bytes = len(payload)`` are filled in here, ``meta``
+    supplies ``fields`` (a struct field list such as ``"width:int,
+    height:int"``)."""
+    import pandas as pd
+
+    schema = (
+        "doc_id long, payload binary, media_meta "
+        f"struct<mime:string, n_bytes:bigint, {fields}>"
+    )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                if text is None:
+                    continue
+                payload, meta = encode(doc_id, text)
+                rows.append(
+                    {
+                        "doc_id": doc_id,
+                        "payload": payload,
+                        "media_meta": {
+                            "mime": mime, "n_bytes": len(payload), **meta
+                        },
+                    }
+                )
+            if rows:
+                yield pd.DataFrame(rows)
+
+    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
+
+
+#: ``media_meta`` fields of the image and video payloads.
+_IMAGE_FIELDS = "width:int, height:int"
+
+
 def attach_png_payload(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -150,41 +183,18 @@ def attach_png_payload(
 
     Same output contract as :func:`attach_binary_payload`, but the
     payloads parse as genuine images — so :func:`extract_features` /
-    :func:`resize_media` run their REAL decode kernels in any environment
-    (PIL where present, :mod:`.png_codec` otherwise)."""
-    import pandas as pd
+    :func:`resize_media` run their REAL decode kernels (:mod:`.png_codec`)."""
 
-    schema = (
-        "doc_id long, payload binary, media_meta "
-        "struct<mime:string, n_bytes:bigint, width:int, height:int>"
+    def encode(doc_id, text):
+        w, h, pix = _synth_pixels(text)
+        payload = png_codec.encode_png(
+            w, h, pix, color_type=2, filter_type=int(doc_id) % 5
+        )
+        return payload, {"width": w, "height": h}
+
+    return _attach_payload(
+        docs, id_col, text_col, "image/png", _IMAGE_FIELDS, encode
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue  # no content, no payload (NULL-domain rule)
-                w, h, pix = _synth_pixels(text)
-                payload = png_codec.encode_png(
-                    w, h, pix, color_type=2, filter_type=int(doc_id) % 5
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "media_meta": {
-                            "mime": "image/png",
-                            "n_bytes": len(payload),
-                            "width": w,
-                            "height": h,
-                        },
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
 def attach_jpeg_payload(
@@ -198,39 +208,17 @@ def attach_jpeg_payload(
     (so the two formats carry identical source images), encoded by the
     pure-stdlib :mod:`.jpeg_codec` (4:4:4, or 4:2:0 with ``subsample``).
     Same output contract as :func:`attach_binary_payload`."""
-    import pandas as pd
 
-    schema = (
-        "doc_id long, payload binary, media_meta "
-        "struct<mime:string, n_bytes:bigint, width:int, height:int>"
+    def encode(doc_id, text):
+        w, h, pix = _synth_pixels(text)
+        payload = jpeg_codec.encode_jpeg(
+            w, h, pix, bpp=3, quality=90, subsample=subsample
+        )
+        return payload, {"width": w, "height": h}
+
+    return _attach_payload(
+        docs, id_col, text_col, "image/jpeg", _IMAGE_FIELDS, encode
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue  # no content, no payload (NULL-domain rule)
-                w, h, pix = _synth_pixels(text)
-                payload = jpeg_codec.encode_jpeg(
-                    w, h, pix, bpp=3, quality=90, subsample=subsample
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "media_meta": {
-                            "mime": "image/jpeg",
-                            "n_bytes": len(payload),
-                            "width": w,
-                            "height": h,
-                        },
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
 def attach_avi_payload(
@@ -245,68 +233,29 @@ def attach_avi_payload(
     phase-shifted per frame (frame i starts at byte offset i), JPEG-encoded
     by :mod:`.jpeg_codec` and muxed by :mod:`.avi_codec`. Same output
     contract as :func:`attach_binary_payload` with video-typed metadata."""
-    import pandas as pd
-
     if n_frames < 1:
         # Guard here, not in the executor loop: with zero frames the dims
         # would be unbound at the mux call and the batch would die with
         # UnboundLocalError instead of a clean error (r07 review finding).
         raise ValueError("n_frames must be >= 1")
 
-    schema = (
-        "doc_id long, payload binary, media_meta "
-        "struct<mime:string, n_bytes:bigint, width:int, height:int>"
+    def encode(doc_id, text):
+        frames = []
+        for i in range(n_frames):
+            w, h, pix = _synth_pixels(text, phase=i)
+            frames.append(jpeg_codec.encode_jpeg(w, h, pix, bpp=3, quality=90))
+        payload = avi_codec.encode_mjpeg_avi(frames, w, h, fps=5)
+        return payload, {"width": w, "height": h}
+
+    return _attach_payload(
+        docs, id_col, text_col, "video/x-msvideo", _IMAGE_FIELDS, encode
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue  # no content, no payload (NULL-domain rule)
-                frames = []
-                for i in range(n_frames):
-                    w, h, pix = _synth_pixels(text, phase=i)
-                    frames.append(
-                        jpeg_codec.encode_jpeg(w, h, pix, bpp=3, quality=90)
-                    )
-                payload = avi_codec.encode_mjpeg_avi(frames, w, h, fps=5)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "media_meta": {
-                            "mime": "video/x-msvideo",
-                            "n_bytes": len(payload),
-                            "width": w,
-                            "height": h,
-                        },
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
-
-
-def _decode_payload_real(payload: bytes, pil_image) -> tuple[int, int, list[float]]:
-    """REAL decode kernel (used when PIL is importable and the bytes parse):
-    decodes the image, downsamples to an 8-value grayscale intensity
-    signature — same (width, height, feat[8]) contract as the stub."""
-    import io
-
-    img = pil_image.open(io.BytesIO(payload))
-    img.load()
-    w, h = img.size
-    gray = img.convert("L").resize((8, 1))
-    feats = [float(v) / 255.0 for v in list(gray.getdata())]
-    return w, h, feats
 
 
 def _decode_payload_stub(payload: bytes) -> tuple[int, int, list[float]]:
     """STUB decode kernel — deterministic fake standing in for a real
-    image/audio decoder when PIL is absent (this container) or the payload
-    is not real media (the synthetic text-byte fixtures).
+    image decoder when the payload is neither a PNG nor a baseline JPEG
+    the stdlib codecs decode (e.g. the synthetic text-byte fixtures).
 
     Returns (width, height, feature_vector). The fake derives 8 'features'
     from byte statistics so tests get stable, content-sensitive values.
@@ -324,17 +273,9 @@ def _decode_payload_stub(payload: bytes) -> tuple[int, int, list[float]]:
 
 
 def _decode_payload(payload: bytes) -> tuple[int, int, list[float]]:
-    """Kernel dispatch (see module docstring): PIL when importable → the
-    pure-stdlib PNG decoder on a PNG signature → the pure-stdlib baseline
-    JPEG decoder on an SOI signature (r07) → deterministic stub. The
-    stdlib tiers mean PNG and baseline-JPEG payloads take a REAL decode
-    path in every environment, including this PIL-less container."""
-    pil = _optional("PIL.Image")
-    if pil is not None and payload:
-        try:
-            return _decode_payload_real(payload, pil)
-        except Exception:  # not parseable media → next tier
-            pass
+    """Kernel dispatch (see module docstring): the pure-stdlib PNG decoder
+    on a PNG signature → the pure-stdlib baseline JPEG decoder on an SOI
+    signature (r07) → deterministic stub."""
     if payload and png_codec.is_png(payload):
         try:
             w, h, bpp, pix = png_codec.decode_png(payload)
@@ -409,66 +350,46 @@ def attach_wav_payload(
 ) -> DataFrame:
     """Materialize REAL RIFF/WAVE payloads from the documents table: each
     doc's UTF-8 bytes become a deterministic PCM16 mono waveform (stdlib
-    ``wave`` container; rate cycles 8/12/16 kHz by doc_id) — the audio
+    ``wave`` writer; rate cycles 8/12/16 kHz by doc_id) — the audio
     analogue of :func:`attach_png_payload`, same output contract as
     :func:`attach_binary_payload` with audio-typed metadata."""
-    import pandas as pd
 
-    schema = (
-        "doc_id long, payload binary, media_meta "
-        "struct<mime:string, n_bytes:bigint, sample_rate:int, n_samples:int>"
+    def encode(doc_id, text):
+        raw = text.encode("utf-8") or b"\x00"
+        n_samples, rate = wav_codec.synth_params(len(raw), int(doc_id))
+        payload = wav_codec.encode_wav(
+            rate, wav_codec.pcm16_from_bytes(raw, n_samples)
+        )
+        return payload, {"sample_rate": rate, "n_samples": n_samples}
+
+    return _attach_payload(
+        docs, id_col, text_col, "audio/wav",
+        "sample_rate:int, n_samples:int", encode,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue  # no content, no payload (NULL-domain rule)
-                raw = text.encode("utf-8") or b"\x00"
-                n_samples, rate = wav_codec.synth_params(len(raw), int(doc_id))
-                payload = wav_codec.encode_wav(
-                    rate, wav_codec.pcm16_from_bytes(raw, n_samples)
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "media_meta": {
-                            "mime": "audio/wav",
-                            "n_bytes": len(payload),
-                            "sample_rate": rate,
-                            "n_samples": n_samples,
-                        },
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
 def _audio_read(payload: bytes) -> tuple[str, int, list[int]]:
     """One payload → (media_type, sample_rate, samples). RIFF/WAVE bytes
-    take the REAL stdlib decode; anything else — including a WAV container
-    the decoder rejects — is read as headerless unsigned-8-bit raw PCM at
-    8 kHz, itself a real (if minimal) audio interpretation. The fallback
-    catches ONLY the decode contract's malformed-container classes (r07
-    advice: a bare Exception also masked genuine programming errors —
-    TypeError etc. — as raw-PCM readings; those must surface)."""
+    take the REAL decode (:func:`.wav_codec.decode_wav`); anything else —
+    including a WAV container the decoder rejects — is read as headerless
+    unsigned-8-bit raw PCM at 8 kHz, itself a real (if minimal) audio
+    interpretation. The fallback catches ONLY ``ValueError``, the decode
+    contract's one rejection class (r07 advice: a bare Exception also
+    masked genuine programming errors — TypeError etc. — as raw-PCM
+    readings; those must surface)."""
     if wav_codec.is_wav(payload):
         try:
             rate, samples = wav_codec.decode_wav(payload)
             return "audio/wav", rate, samples
-        except (wave.Error, ValueError, struct.error, EOFError):
+        except ValueError:
             pass
     return "audio/pcm-u8", 8000, [(b - 128) * 256 for b in payload]
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """Arrow-batched audio decode + integer feature extraction
-    (mapInPandas): RIFF/WAVE payloads take the REAL stdlib decode
-    (chunk-walk + PCM16 unpack); anything else is interpreted as headerless
+    (mapInPandas): RIFF/WAVE payloads take the REAL decode (RIFF chunk
+    walk + PCM16 unpack or IMA-ADPCM blocks); anything else is interpreted as headerless
     unsigned-8-bit raw PCM at 8 kHz — itself a real (if minimal) audio
     reading, so this kernel has no fake tier at all. Same distributed shape
     as :func:`extract_features`: decode parallelism is partition count, no
@@ -513,10 +434,11 @@ RESIZED_SCHEMA = (
 
 def resize_media(media: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
     """Resize kernel over binary payloads (mapInPandas, binary in → binary
-    out). The STUB 'resize' deterministically re-scales the byte length by
-    the pixel ratio (so size-dependent downstream behavior is realistic);
-    a real deployment replaces the kernel with PIL ``Image.resize`` /
-    ``thumbnail`` and the Spark contract (RESIZED_SCHEMA) is unchanged.
+    out). PNG and baseline-JPEG payloads are decoded, nearest-neighbor
+    resampled and re-encoded in their own format by the stdlib codecs;
+    anything else takes the STUB 'resize', which deterministically
+    re-scales the byte length by the pixel ratio (so size-dependent
+    downstream behavior is realistic).
 
     Plumbing notes that DO carry to 100 TB: payload-out schemas keep the
     data columnar end-to-end (no driver round-trip), and resize parallelism
@@ -524,21 +446,7 @@ def resize_media(media: DataFrame, target_w: int = 224, target_h: int = 224) -> 
     """
     import pandas as pd
 
-    def _resize_real(payload: bytes, pil) -> bytes | None:
-        """PIL path: decode → resize → re-encode PNG; None if not media."""
-        import io
-
-        try:
-            img = pil.open(io.BytesIO(payload))
-            img.load()
-        except Exception:
-            return None
-        buf = io.BytesIO()
-        img.resize((target_w, target_h)).save(buf, format="PNG")
-        return buf.getvalue()
-
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil = _optional("PIL.Image")
         for pdf in batches:
             rows = []
             for doc_id, payload, meta in zip(
@@ -549,10 +457,10 @@ def resize_media(media: DataFrame, target_w: int = 224, target_h: int = 224) -> 
                     # to decode — skip the row, never crash the batch.
                     continue
                 payload = bytes(payload)
-                out = _resize_real(payload, pil) if (pil and payload) else None
-                if out is None and payload and png_codec.is_png(payload):
-                    # Pure-stdlib tier: decode → nearest-neighbor resample
-                    # → re-encode (see module docstring).
+                out = None
+                if payload and png_codec.is_png(payload):
+                    # PNG tier: decode → nearest-neighbor resample →
+                    # re-encode (see module docstring).
                     try:
                         w, h, bpp, pix = png_codec.decode_png(payload)
                         out = png_codec.encode_png(
@@ -566,7 +474,7 @@ def resize_media(media: DataFrame, target_w: int = 224, target_h: int = 224) -> 
                     except ValueError:
                         out = None
                 if out is None and payload and jpeg_codec.is_jpeg(payload):
-                    # Pure-stdlib JPEG tier (r07): decode → nearest-neighbor
+                    # JPEG tier (r07): decode → nearest-neighbor
                     # resample → re-encode JPEG (format-preserving).
                     try:
                         w, h, bpp, pix = jpeg_codec.decode_jpeg(payload)
@@ -607,12 +515,11 @@ FRAME_SCHEMA = "doc_id long, frame_idx int, frame binary, frame_bytes long"
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame sampling over 'video' payloads: each input row yields
-    ``n_frames`` evenly-spaced frame rows. Tier dispatch (r07): PyAV when
-    importable (arbitrary codecs) → pure-stdlib MJPEG-AVI demux
-    (:mod:`.avi_codec` — AVI is RIFF, each '00dc' chunk a complete JPEG
-    that :mod:`.jpeg_codec` decodes for real) → deterministic payload
-    slices for containers outside both real paths (modern codecs
-    genuinely need ffmpeg). The one-to-many Arrow-batch shape (a single
+    ``n_frames`` evenly-spaced frame rows. Tier dispatch (r07): the
+    pure-stdlib MJPEG-AVI demux (:mod:`.avi_codec` — AVI is RIFF, each
+    '00dc' chunk a complete JPEG that :mod:`.jpeg_codec` decodes for real)
+    → deterministic payload slices for containers outside that path
+    (modern codecs genuinely need ffmpeg). The one-to-many Arrow-batch shape (a single
     ``mapInPandas`` emitting more rows than it reads) is the real
     contract — the fan-out happens executor-side with no explode of
     pre-materialized arrays and no driver involvement.
@@ -630,36 +537,16 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
         and last frame are always sampled (r07 advice: the old
         ``max(n_avail // n_frames, 1)`` stride was front-biased — for 10
         frames and n_frames=4 it picked 0,2,4,6 and never saw the tail of
-        the clip). For n_frames == 1 the single sample is the first frame.
-        Shared by BOTH real tiers so they stay pick-identical."""
+        the clip). For n_frames == 1 the single sample is the first frame."""
         if n_frames == 1:
             return [0]
         return [i * (n_avail - 1) // (n_frames - 1) for i in range(n_frames)]
 
-    def _frames_real(payload: bytes, av) -> list[bytes] | None:
-        """PyAV path: demux, take ``n_frames`` evenly-spaced video frames
-        (inclusive spread — first and last always sampled), emit raw RGB
-        bytes; None when the payload is not a real container."""
-        import io
-
-        try:
-            with av.open(io.BytesIO(payload)) as container:
-                decoded = [f for f in container.decode(video=0)]
-        except Exception:
-            return None
-        if not decoded:
-            return None
-        picked = [decoded[i] for i in _spread(len(decoded))]
-        return [f.to_ndarray(format="rgb24").tobytes() for f in picked]
-
     def _frames_mjpeg_avi(payload: bytes) -> list[bytes] | None:
-        """Stdlib path: real RIFF demux + per-frame JPEG decode. Emits raw
-        rgb24 bytes — the same frame REPRESENTATION (layout, length,
-        semantics) as the PyAV tier, so downstream schema/consumers are
-        tier-agnostic; pixel VALUES may differ from libavcodec's by its
-        integer-IDCT/swscale rounding, as with any two conforming JPEG
-        decoders (r07 review findings; grayscale frames replicate to
-        rgb24 for the same representation reason)."""
+        """Real RIFF demux + per-frame JPEG decode, or None when the
+        payload is outside this path. Emits raw rgb24 bytes — grayscale
+        frames replicate to rgb24 — so every decoded frame has one layout
+        (r07 review findings)."""
         if not avi_codec.is_avi(payload):
             return None
         try:
@@ -680,7 +567,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
         return out
 
     def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        av = _optional("av")
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -689,9 +575,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                 payload = bytes(payload)
                 if not payload:
                     raise NotImplementedError("empty payload: stub undefined")
-                frames = _frames_real(payload, av) if av else None
-                if frames is None:
-                    frames = _frames_mjpeg_avi(payload)
+                frames = _frames_mjpeg_avi(payload)
                 if frames is None:  # stub: deterministic payload slices
                     step = max(len(payload) // n_frames, 1)
                     frames = [

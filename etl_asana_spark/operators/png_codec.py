@@ -1,25 +1,20 @@
 """Pure-stdlib PNG codec (RFC 2083 / ISO 15948) — the dependency-free real
 decode path for the multimodal kernels (SURVEY §2.12 #75).
 
-This container has no PIL/av, so until round 4 the multimodal kernels could
-only ever execute their deterministic stubs. PNG, however, needs nothing
-beyond ``zlib`` + ``struct``: 8-bit greyscale/RGB/RGBA images with the five
-standard scanline filters decode in ~60 lines. With this module the
-dispatch chain becomes PIL (when present) → pure-Python PNG (always
-available) → stub, and the repo's own fixtures can be REAL images — the
-decode → feature-extract → resize pipeline then runs genuinely end-to-end
+PNG needs nothing beyond ``zlib`` + ``struct``: 8-bit greyscale/RGB/RGBA
+images with the five standard scanline filters decode in ~60 lines. This
+module is the multimodal kernels' one PNG decoder (dispatch: PNG →
+baseline JPEG → stub), and the repo's own fixtures are REAL images — the
+decode → feature-extract → resize pipeline runs genuinely end-to-end
 (real bytes, real inflate, real unfiltering, real pixel math) in any
 environment.
 
 Scope: fixture/fallback grade, deliberately. 8-bit depth, color types 0
 (grey), 2 (RGB), 6 (RGBA), no interlacing, no palette — the subset the
-encoder below emits and real pipelines' thumbnails overwhelmingly use. A
-production cluster still wants PIL/turbojpeg for JPEG and speed; the
-contract (decode → (width, height, pixel rows)) is identical either way.
+encoder below emits and real pipelines' thumbnails overwhelmingly use.
 
 Per-byte Python loops are acceptable here because payloads are small
-fixtures and the work runs executor-side inside Arrow batches; the hot
-path at 100 TB is the PIL branch.
+fixtures and the work runs executor-side inside Arrow batches.
 """
 
 from __future__ import annotations
@@ -203,7 +198,7 @@ def luma_signature(
     width: int, height: int, bpp: int, pixels: bytes, buckets: int = 8
 ) -> list[float]:
     """8-bucket horizontal luminance signature in [0, 1] — the same
-    (width, height, feat[buckets]) contract as the PIL decode kernel:
+    (width, height, feat[buckets]) contract as the stub decode kernel:
     greyscale conversion (ITU-R 601 luma for RGB/RGBA) then column-bucket
     means."""
     stride = width * bpp

@@ -1,12 +1,15 @@
-"""Pure-stdlib WAV (RIFF/WAVE PCM) encode/decode + integer audio features.
+"""Pure-stdlib WAV (RIFF/WAVE) encode/decode + integer audio features.
 
 The audio analogue of :mod:`.png_codec` (SURVEY §2.12 #75 "multimodal"):
-WAV/PCM is the one first-class training-audio container that decodes from
-the Python standard library (``wave`` + ``struct``), so — unlike video,
-where no stdlib decode exists and the stub tier is honest — the audio
-decode path can be REAL in this dependency-less container. Payloads are
-genuine RIFF/WAVE files (44-byte header, PCM16 mono frames) that any
-external tool parses.
+WAV is the one first-class training-audio container simple enough to
+parse with ``struct`` alone, so — unlike video, where modern codecs need
+ffmpeg and the stub tier is honest — the audio decode path is REAL in
+this dependency-less container. :func:`decode_wav` is the only reader:
+one RIFF chunk walk, then PCM16 mono frames or IMA-ADPCM blocks, and a
+``ValueError`` for anything else. :func:`encode_wav` writes PCM16 through
+the stdlib ``wave`` writer, so the round-trip tests check this parser
+against an independent writer. Payloads are genuine RIFF/WAVE files
+(44-byte header, PCM16 mono frames) that any external tool parses.
 
 Feature math is ALL-INTEGER by design: energy = Σ s², zero crossings,
 peak = max|s|, duration_ms = ⌊n·1000/rate⌋ are exact integers, so the
@@ -20,9 +23,7 @@ No reference file to cite: /root/reference is an empty snapshot (SURVEY
 
 from __future__ import annotations
 
-import functools
 import io
-import os
 import struct
 import wave
 
@@ -32,6 +33,10 @@ N_SAMPLES_BASE = 128
 N_SAMPLES_MOD = 241
 RATES = (8000, 12000, 16000)
 
+#: fmt-chunk wFormatTag values this codec decodes.
+WAVE_FORMAT_PCM = 0x0001
+WAVE_FORMAT_IMA_ADPCM = 0x0011
+
 
 def is_wav(payload: bytes) -> bool:
     """RIFF container with a WAVE form type — the dispatch signature."""
@@ -40,6 +45,22 @@ def is_wav(payload: bytes) -> bool:
         and payload[:4] == b"RIFF"
         and payload[8:12] == b"WAVE"
     )
+
+
+def _walk_riff_chunks(payload: bytes):
+    """Yield (fourcc, body) for each top-level subchunk of a RIFF/WAVE
+    payload — the one container walk of this module. The walk stops at
+    ``min(len(payload), 8 + RIFF size)``: bytes past the RIFF chunk are not
+    part of the file. A truncated final chunk yields the bytes present;
+    a truncated chunk header ends the walk. Chunks are word-aligned."""
+    (riff_size,) = struct.unpack("<I", payload[4:8])
+    end = min(len(payload), 8 + riff_size)
+    pos = 12  # past RIFF<size>WAVE
+    while pos + 8 <= end:
+        fourcc = payload[pos : pos + 4]
+        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
+        yield fourcc, payload[pos + 8 : min(pos + 8 + size, end)]
+        pos += 8 + size + (size & 1)
 
 
 def pcm16_from_bytes(raw: bytes, n_samples: int) -> list[int]:
@@ -85,108 +106,55 @@ def encode_wav(sample_rate: int, samples: list[int]) -> bytes:
 
 
 def decode_wav(payload: bytes) -> tuple[int, list[int]]:
-    """(sample_rate, samples) from RIFF/WAVE bytes — a REAL parse: the
-    stdlib reader walks the chunk structure; struct unpacks the PCM frames.
-    IMA-ADPCM containers (wFormatTag 0x11 — a real compressed-audio codec
-    the stdlib reader rejects) take the from-scratch decoder below (r08:
-    widens the real audio tier the same way MJPEG-AVI widened video).
-    Raises ``wave.Error``/``ValueError`` on non-WAV or otherwise
-    unsupported input (callers dispatch to the raw-PCM fallback)."""
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as r:
-            if r.getsampwidth() != 2 or r.getnchannels() != 1:
-                raise ValueError(
-                    f"unsupported WAV layout: width={r.getsampwidth()} "
-                    f"channels={r.getnchannels()} (PCM16 mono only)"
-                )
-            rate = r.getframerate()
-            if rate <= 0:
-                # A parseable container with fmt rate 0 would put a zero
-                # divisor into every duration formula downstream; reject it
-                # here so callers' never-crash dispatch falls back to the
-                # raw-PCM reading (r07 review finding).
-                raise ValueError(f"non-positive WAV sample rate: {rate}")
-            n = r.getnframes()
-            frames = r.readframes(n)
-        return rate, list(struct.unpack(f"<{len(frames) // 2}h", frames))
-    except wave.Error:
-        # The stdlib reader only speaks PCM; a well-formed RIFF/WAVE whose
-        # fmt tag is IMA-ADPCM is still REAL audio — decode it here. Any
-        # other wave.Error (truncated/garbage container, other codecs)
-        # re-raises for the callers' fallback dispatch.
-        if is_wav(payload) and _fmt_tag(payload) == WAVE_FORMAT_IMA_ADPCM:
-            return decode_ima_adpcm(payload)
-        raise
-    except RuntimeError as exc:
-        # the stdlib parser raises a BARE RuntimeError on out-of-range seeks
-        # inside truncated/mutated containers (wave._Chunk.seek) — a
-        # malformed-container condition, not a programming error. Translate
-        # it into the decode contract's ValueError so the callers' narrowed
-        # dispatch (r07 advice) keeps real bugs loud while mutated payloads
-        # still fall to the raw-PCM tier (found by the r08 ADPCM fuzz
-        # extension, which routes every mutated container through
-        # _audio_read). ONLY the stdlib Chunk.seek condition translates:
-        # RecursionError (a RuntimeError subclass) and any RuntimeError
-        # raised outside the stdlib container parser are genuine bugs and
-        # stay loud (r08 advice — verified by walking the traceback's
-        # origin frame; the Chunk class lives in wave.py since 3.11).
-        if isinstance(exc, RecursionError) or not _raised_from_chunk(exc):
-            raise
-        raise ValueError(f"malformed RIFF chunk structure: {exc!r}") from exc
+    """(sample_rate, samples) from RIFF/WAVE bytes — a REAL parse: one walk
+    over the RIFF chunks (:func:`_walk_riff_chunks`), then dispatch on the
+    fmt chunk's wFormatTag. PCM (0x0001) must be 16-bit mono and its data
+    chunk unpacks as little-endian int16 frames; IMA-ADPCM (0x0011, r08)
+    decodes block by block (see below). The first fmt and the first data
+    chunk count, in any order; a 'fact' chunk caps the ADPCM sample count.
 
-
-@functools.lru_cache(maxsize=1)
-def _stdlib_parser_files() -> tuple[str, ...]:
-    """Absolute paths of the ACTUAL imported stdlib RIFF parser:
-    ``wave.__file__``, which defines the Chunk class itself since 3.11.
-    Resolved from the live module — not a basename — so a third-party
-    module that happens to be called wave.py can never match (r09 advice:
-    the basename check kept a bug-masking filename axis open). Both the
-    ``__file__`` and its source/bytecode twin (importlib cache mapping)
-    count: in a sourceless or frozen deployment ``__file__`` is the
-    ``.pyc`` while a frame's ``co_filename`` is the compile-time ``.py``
-    path — without the twin the check would silently stop translating
-    (r10 review). lru_cached: the path is invariant for the process
-    lifetime and the fuzz path routes every mutated container through
-    this classification."""
-    mod_file = getattr(wave, "__file__", None)
-    if not mod_file:
-        return ()
-    files = [os.path.realpath(mod_file)]
-    try:
-        import importlib.util as _ilu
-
-        twin = (
-            _ilu.source_from_cache(mod_file)
-            if mod_file.endswith((".pyc", ".pyo"))
-            else _ilu.cache_from_source(mod_file)
-        )
-        files.append(os.path.realpath(twin))
-    except (ValueError, ImportError):
-        pass
-    return tuple(files)
-
-
-def _raised_from_chunk(exc: BaseException) -> bool:
-    """True iff the exception is the stdlib RIFF parser's out-of-range-seek
-    signal: a BARE (no-args) RuntimeError whose innermost frame is the
-    ``seek`` method defined in the imported ``wave`` module's file. The
-    frame's ``co_filename`` is compared against that module's resolved
-    ``__file__`` paths — never a basename — so a seek in any OTHER module,
-    whatever its filename, stays loud; requiring the empty args additionally keeps argumented
-    RuntimeErrors raised inside the parser itself loud (r09 advice)."""
-    if exc.args:
-        return False
-    tb = exc.__traceback__
-    while tb is not None and tb.tb_next is not None:
-        tb = tb.tb_next
-    if tb is None:
-        return False
-    code = tb.tb_frame.f_code
-    return (
-        code.co_name == "seek"
-        and os.path.realpath(code.co_filename) in _stdlib_parser_files()
+    Contract: raises ``ValueError`` — and nothing else — on every input it
+    does not decode: not RIFF/WAVE, no fmt or data chunk, a fmt chunk
+    under 16 bytes, a zero sample rate, any other format tag or layout,
+    or an odd PCM16 data byte count (callers dispatch to the raw-PCM
+    fallback on it)."""
+    if not is_wav(payload):
+        raise ValueError("not a RIFF/WAVE payload")
+    fmt = data = fact_samples = None
+    for fourcc, body in _walk_riff_chunks(payload):
+        if fourcc == b"fmt " and fmt is None:
+            fmt = body
+        elif fourcc == b"data" and data is None:
+            data = body
+        elif fourcc == b"fact" and len(body) >= 4:
+            (fact_samples,) = struct.unpack("<I", body[:4])
+    if fmt is None or data is None:
+        raise ValueError("WAV missing fmt or data chunk")
+    if len(fmt) < 16:
+        raise ValueError(f"fmt chunk too short: {len(fmt)} bytes")
+    tag, channels, rate, _brate, block_align, bits = struct.unpack(
+        "<HHIIHH", fmt[:16]
     )
+    if rate == 0:
+        # A zero rate would put a zero divisor into every duration formula
+        # downstream (r07 review finding).
+        raise ValueError("zero WAV sample rate")
+    if tag == WAVE_FORMAT_PCM:
+        # (bits + 7) // 8 is the container's byte width per sample, so a
+        # 12-bit stream stored in 16-bit words reads as PCM16.
+        if channels != 1 or (bits + 7) // 8 != 2:
+            raise ValueError(
+                f"unsupported WAV layout: bits={bits} channels={channels} "
+                "(PCM16 mono only)"
+            )
+        if len(data) % 2:
+            raise ValueError(f"odd PCM16 data byte count: {len(data)}")
+        return rate, list(struct.unpack(f"<{len(data) // 2}h", data))
+    if tag == WAVE_FORMAT_IMA_ADPCM:
+        return rate, _decode_ima_adpcm(
+            fmt, data, fact_samples, channels, block_align, bits
+        )
+    raise ValueError(f"unsupported wFormatTag 0x{tag:04X}")
 
 
 def audio_signature(samples: list[int]) -> tuple[int, int, int]:
@@ -223,8 +191,6 @@ def audio_signature(samples: list[int]) -> tuple[int, int, int]:
 # tests against the per-sample step bound, not a vague SNR).
 # ---------------------------------------------------------------------------
 
-WAVE_FORMAT_IMA_ADPCM = 0x0011
-
 #: IMA step-size table (89 entries) and index-adjust table — public
 #: constants from the IMA recommended practices.
 IMA_STEP_TABLE = (
@@ -237,28 +203,6 @@ IMA_STEP_TABLE = (
     16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
 )
 IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _walk_riff_chunks(payload: bytes):
-    """Yield (fourcc, body) for each top-level RIFF subchunk — the manual
-    walk the ADPCM path needs because the stdlib reader refuses the file
-    before exposing its chunks. Tolerates a truncated final chunk the way
-    the stdlib reader does (yields the bytes present)."""
-    pos = 12  # past RIFF<size>WAVE
-    while pos + 8 <= len(payload):
-        fourcc = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        yield fourcc, body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-
-
-def _fmt_tag(payload: bytes) -> int | None:
-    """The fmt chunk's wFormatTag, or None when no fmt chunk parses."""
-    for fourcc, body in _walk_riff_chunks(payload):
-        if fourcc == b"fmt " and len(body) >= 2:
-            return struct.unpack("<H", body[:2])[0]
-    return None
 
 
 def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
@@ -277,39 +221,23 @@ def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
     return predictor, index
 
 
-def decode_ima_adpcm(payload: bytes) -> tuple[int, list[int]]:
-    """(sample_rate, samples) from a mono IMA-ADPCM RIFF/WAVE payload — a
-    REAL decompression: per block, seed (predictor, index) from the 4-byte
-    header (the predictor is sample 0), then reconstruct one sample per
-    nibble, low nibble first. Honors the 'fact' chunk's total sample count
-    when present (the container's way of marking padding nibbles in the
-    final block). Raises ValueError on anything outside the mono/4-bit
-    scope or on a malformed layout."""
-    fmt = data = None
-    fact_samples = None
-    for fourcc, body in _walk_riff_chunks(payload):
-        if fourcc == b"fmt " and fmt is None:
-            fmt = body
-        elif fourcc == b"data" and data is None:
-            data = body
-        elif fourcc == b"fact" and len(body) >= 4:
-            (fact_samples,) = struct.unpack("<I", body[:4])
-    if fmt is None or data is None:
-        raise ValueError("IMA-ADPCM WAV missing fmt or data chunk")
-    if len(fmt) < 16:
-        raise ValueError("fmt chunk too short")
-    tag, channels, rate, _brate, block_align, bits = struct.unpack(
-        "<HHIIHH", fmt[:16]
-    )
-    if tag != WAVE_FORMAT_IMA_ADPCM:
-        raise ValueError(f"not IMA-ADPCM: wFormatTag=0x{tag:04X}")
+def _decode_ima_adpcm(
+    fmt: bytes, data: bytes, fact_samples: int | None,
+    channels: int, block_align: int, bits: int,
+) -> list[int]:
+    """Samples of a mono IMA-ADPCM data chunk, given the fields
+    :func:`decode_wav` parsed from its fmt chunk — a REAL decompression:
+    per block, seed (predictor, index) from the 4-byte header (the
+    predictor is sample 0), then reconstruct one sample per nibble, low
+    nibble first. Honors the 'fact' chunk's total sample count when
+    present (the container's way of marking padding nibbles in the final
+    block). Raises ValueError on anything outside the mono/4-bit scope or
+    on a malformed layout."""
     if channels != 1 or bits != 4:
         raise ValueError(
             f"unsupported IMA-ADPCM layout: channels={channels} bits={bits} "
             "(mono 4-bit only)"
         )
-    if rate <= 0:
-        raise ValueError(f"non-positive WAV sample rate: {rate}")
     if block_align < 4:
         raise ValueError(f"IMA-ADPCM block_align too small: {block_align}")
     # fmt extension: cbSize (uint16 at 16) then wSamplesPerBlock (uint16 at
@@ -362,7 +290,7 @@ def decode_ima_adpcm(payload: bytes) -> tuple[int, list[int]]:
                 f"blocks decode to {len(samples)}"
             )
         samples = samples[:fact_samples]
-    return rate, samples
+    return samples
 
 
 def encode_ima_adpcm(

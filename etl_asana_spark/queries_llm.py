@@ -879,8 +879,8 @@ _MM_AUDIO_FIXTURE = str(FIXTURES_DIR / "multimodal_expected_audio.ndjson")
 def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#75 Multimodal plumbing: binary payload + metadata struct →
     Arrow-batched decode/feature-extract via mapInPandas (decode kernel
-    dispatches PIL → stdlib PNG codec → deterministic stub; see
-    operators.multimodal). SQL-oracle-checked since round 7: the committed
+    dispatches stdlib PNG codec → baseline JPEG codec → deterministic
+    stub; see operators.multimodal). SQL-oracle-checked since round 7: the committed
     expected-output fixture (see ``_MM_FEATURES_FIXTURE``) carries the
     agreed rows of two independent replays of the deterministic
     text→PNG→decode→luma pipeline, and the oracle's JOIN independently
@@ -898,7 +898,7 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since round 5 the registered fixture is :func:`attach_png_payload` —
     REAL PNG bytes — so the gate exercises the stdlib decode tier
-    end-to-end in this PIL-less container, not the stub (row-count
+    end-to-end, not the stub (row-count
     contract unchanged: one feature row per document). Decode parallelism
     is partition count, so the single-file documents table is repartitioned
     before the Python kernels — to a volume-derived count
@@ -1047,11 +1047,11 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#75 multimodal, audio tier (round 7): REAL RIFF/WAVE payloads
-    (stdlib ``wave`` container, PCM16 mono, deterministic per-doc waveform)
-    → Arrow-batched stdlib decode (chunk-walk + struct PCM unpack) →
-    ALL-INTEGER features (energy = Σs², zero crossings, peak, exact
-    duration). WAV is the one first-class training-audio format that
-    decodes from the stdlib, so — unlike video, where the stub tier is
+    (stdlib ``wave`` writer, PCM16 mono, deterministic per-doc waveform)
+    → Arrow-batched decode (``wav_codec.decode_wav``: RIFF chunk walk +
+    struct PCM unpack) → ALL-INTEGER features (energy = Σs², zero
+    crossings, peak, exact duration). WAV is the one first-class
+    training-audio format that decodes with ``struct`` alone, so — unlike video, where the stub tier is
     honest about the missing ffmpeg binding — the audio path executes a
     genuine decode in this dependency-less container
     (operators/wav_codec.py, operators/multimodal.py

@@ -48,8 +48,10 @@ def q_udf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     # \s would additionally split on \xa0 etc. and silently diverge.
     ws = re.compile(r"\s+", re.ASCII)
 
+    # No type hints: with them PySpark tries to infer a pandas UDF eval
+    # type and warns that it cannot, on every build of this key.
     @F.udf("int")
-    def n_words(text: str) -> int:
+    def n_words(text):
         return len(ws.split(text))
 
     return (

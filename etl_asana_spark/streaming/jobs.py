@@ -21,6 +21,7 @@ from __future__ import annotations
 import contextlib
 import os
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,21 +184,35 @@ def _retry_drain(run_once):
 
 
 #: Phase timings of the most recent bounded drain in this process — written
-#: by ``_run_to_memory`` so the bench can attribute a drain's wall time to
-#: fixed setup (query start: checkpoint dir creation + source listing +
-#: planning) vs micro-batch execution (awaitTermination) vs the engine's own
-#: per-phase durationMs. Diagnostic surface for the r05 q_stream_tumbling
-#: bench regression (55% swing, zero code change): if the swing is real it
-#: shows up here as setup/walCommit time, not addBatch time.
+#: by :func:`_record_drain`, which every bounded drain calls, so the bench can
+#: attribute a drain's wall time to fixed setup (query start: checkpoint dir
+#: creation + source listing + planning) vs micro-batch execution (the wait
+#: for the query to finish) vs the engine's own per-phase durationMs.
+#: Diagnostic surface for the r05 q_stream_tumbling bench regression (55%
+#: swing, zero code change): if the swing is real it shows up here as
+#: setup/walCommit time, not addBatch time.
 LAST_DRAIN_STATS: dict[str, object] = {}
+
+
+def _record_drain(query, t0: float, t_started: float, t_done: float) -> None:
+    """Replace :data:`LAST_DRAIN_STATS` with one finished drain's phases:
+    ``t0`` before ``start()``, ``t_started`` after it, ``t_done`` once the
+    query has processed all its input."""
+    dur = (query.lastProgress or {}).get("durationMs") or {}
+    LAST_DRAIN_STATS.clear()
+    LAST_DRAIN_STATS.update(
+        {
+            "start_s": round(t_started - t0, 4),
+            "await_s": round(t_done - t_started, 4),
+            "last_batch_ms": {k: dur[k] for k in sorted(dur)},
+        }
+    )
 
 
 def _run_to_memory(
     df: DataFrame, mode: str, input_path: str | None = None
 ) -> DataFrame:
     """Run a streaming plan to completion (AvailableNow) into a memory sink."""
-    import time
-
     spark = df.sparkSession
 
     def drain() -> DataFrame:
@@ -214,17 +229,7 @@ def _run_to_memory(
             )
             t_started = time.perf_counter()
             query.awaitTermination()
-        t_done = time.perf_counter()
-        prog = query.lastProgress or {}
-        dur = prog.get("durationMs") or {}
-        LAST_DRAIN_STATS.clear()
-        LAST_DRAIN_STATS.update(
-            {
-                "start_s": round(t_started - t0, 4),
-                "await_s": round(t_done - t_started, 4),
-                "last_batch_ms": {k: dur[k] for k in sorted(dur)},
-            }
-        )
+        _record_drain(query, t0, t_started, time.perf_counter())
         return spark.table(name)
 
     return _retry_drain(drain)
@@ -499,6 +504,7 @@ def upsert_drain(spark: SparkSession, sf_dir: str, ckpt: str, target: str) -> No
         # keep-rule, so replays of a batch cannot change the answer.
         newest.write.mode("append").parquet(target)
 
+    t0 = time.perf_counter()
     with _stream_shuffle(spark, _events_stream_dir(sf_dir)):
         query = (
             ev.writeStream.foreachBatch(upsert)
@@ -506,7 +512,9 @@ def upsert_drain(spark: SparkSession, sf_dir: str, ckpt: str, target: str) -> No
             .trigger(availableNow=True)
             .start()
         )
+        t_started = time.perf_counter()
         query.awaitTermination()
+    _record_drain(query, t0, t_started, time.perf_counter())
 
 
 def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,6 +604,7 @@ def sync_token_source_stream(spark: SparkSession) -> DataFrame:
     # exactly processAllAvailable() on a running query.
     def drain() -> DataFrame:
         name = f"sink_{uuid.uuid4().hex[:12]}"
+        t0 = time.perf_counter()
         with _stream_shuffle(spark, STORIES_FIXTURE):
             query = (
                 agg.writeStream.format("memory")
@@ -604,10 +613,12 @@ def sync_token_source_stream(spark: SparkSession) -> DataFrame:
                 .option("checkpointLocation", fresh_dir("ckpt"))
                 .start()
             )
+            t_started = time.perf_counter()
             try:
                 query.processAllAvailable()
             finally:
                 query.stop()
+        _record_drain(query, t0, t_started, time.perf_counter())
         return spark.table(name)
 
     return _retry_drain(drain)

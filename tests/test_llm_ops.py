@@ -613,10 +613,11 @@ def test_audio_kernel_skips_null_payload_rows(spark):
 
 def test_audio_read_narrow_except_surfaces_real_bugs(monkeypatch):
     """r07 advice: the WAV fallback must catch only the decode contract's
-    malformed-container classes — a TypeError/AttributeError from the
-    decode path is a programming error and must PROPAGATE, never be
-    reinterpreted as raw-PCM audio. Driver-side unit test on the shared
-    per-payload helper (the mapInPandas kernel calls the same function)."""
+    rejection class, ValueError — anything else from the decode path
+    (TypeError, or the EOFError / wave.Error a stdlib reader would raise)
+    is a programming error and must PROPAGATE, never be reinterpreted as
+    raw-PCM audio. Driver-side unit test on the shared per-payload helper
+    (the mapInPandas kernel calls the same function)."""
     import wave
 
     import pytest
@@ -626,69 +627,53 @@ def test_audio_read_narrow_except_surfaces_real_bugs(monkeypatch):
 
     payload = wav_codec.encode_wav(8000, [1, -2, 3])
 
-    def boom(_p):
-        raise TypeError("a genuine bug, not a malformed container")
+    def raising(exc):
+        return lambda _p: (_ for _ in ()).throw(exc)
 
-    monkeypatch.setattr(mm.wav_codec, "decode_wav", boom)
-    with pytest.raises(TypeError):
-        mm._audio_read(payload)
+    for exc in (TypeError("a genuine bug"), EOFError("bad"),
+                wave.Error("bad")):
+        monkeypatch.setattr(mm.wav_codec, "decode_wav", raising(exc))
+        with pytest.raises(type(exc)):
+            mm._audio_read(payload)
 
-    # Contract classes still take the raw-PCM fallback.
-    for exc in (wave.Error("bad"), ValueError("bad"), EOFError("bad")):
-        monkeypatch.setattr(
-            mm.wav_codec, "decode_wav",
-            lambda _p, e=exc: (_ for _ in ()).throw(e),
-        )
-        mtype, rate, samples = mm._audio_read(payload)
-        assert (mtype, rate) == ("audio/pcm-u8", 8000)
-        assert samples == [(b - 128) * 256 for b in payload]
+    # The contract class still takes the raw-PCM fallback.
+    monkeypatch.setattr(mm.wav_codec, "decode_wav", raising(ValueError("bad")))
+    mtype, rate, samples = mm._audio_read(payload)
+    assert (mtype, rate) == ("audio/pcm-u8", 8000)
+    assert samples == [(b - 128) * 256 for b in payload]
 
 
 def test_multimodal_kernel_dispatch_prefers_real_decoder(monkeypatch):
-    """Kernel dispatch (round-3 optional-import path): when a PIL-shaped
-    module is importable, _decode_payload routes to the real kernel; when
-    the decode raises (non-media bytes) or the module is absent, it falls
-    back to the deterministic stub. Driver-side unit test — no Spark."""
+    """Kernel dispatch: a PNG payload decodes through the stdlib
+    ``png_codec`` even when a ``PIL.Image`` module is importable (here one
+    whose ``open`` records the call and raises), and non-media bytes take
+    the deterministic stub. PIL is never consulted. Driver-side unit test
+    — no Spark."""
     import sys
     import types
 
     from etl_asana_spark.operators import multimodal as mm
+    from etl_asana_spark.operators import png_codec
 
-    # No PIL (this container): stub result.
-    stub = mm._decode_payload_stub(b"hello world")
-    assert mm._decode_payload(b"hello world") == stub
+    opened = []
 
-    class _FakeImg:
-        size = (640, 480)
-
-        def load(self):
-            pass
-
-        def convert(self, mode):
-            return self
-
-        def resize(self, wh):
-            return self
-
-        def getdata(self):
-            return [0, 32, 64, 96, 128, 160, 192, 255]
-
-    fake = types.ModuleType("PIL.Image")
-    fake.open = lambda buf: _FakeImg()
-    monkeypatch.setitem(sys.modules, "PIL.Image", fake)
-    w, h, feats = mm._decode_payload(b"pretend-jpeg-bytes")
-    assert (w, h) == (640, 480)
-    assert len(feats) == 8 and feats[-1] == 1.0
-
-    # A "PIL" whose open() rejects the bytes → stub fallback, not an error.
-    broken = types.ModuleType("PIL.Image")
-
-    def _raise(buf):
+    def _open(buf):
+        opened.append(buf)
         raise OSError("cannot identify image file")
 
-    broken.open = _raise
-    monkeypatch.setitem(sys.modules, "PIL.Image", broken)
+    pil = types.ModuleType("PIL.Image")
+    pil.open = _open
+    monkeypatch.setitem(sys.modules, "PIL.Image", pil)
+
+    pix = bytes(range(5 * 4 * 3))
+    payload = png_codec.encode_png(5, 4, pix, color_type=2)
+    assert mm._decode_payload(payload) == (
+        5, 4, png_codec.luma_signature(5, 4, 3, pix)
+    )
+
+    stub = mm._decode_payload_stub(b"hello world")
     assert mm._decode_payload(b"hello world") == stub
+    assert opened == []
 
 
 def test_connected_components_on_known_graph(spark):

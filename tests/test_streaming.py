@@ -182,6 +182,18 @@ def test_stream_upsert_one_row_per_user(spark, sf_dir):
     assert canonical_rows(got.toPandas()) == canonical_rows(expected.toPandas())
 
 
+def test_upsert_drain_records_drain_stats(spark, sf_dir):
+    """The foreachBatch upsert drain records LAST_DRAIN_STATS like the
+    memory-sink drains do, so a traced q_stream_upsert has drain phases."""
+    from etl_asana_spark.streaming import jobs
+
+    jobs.LAST_DRAIN_STATS.clear()
+    jobs.foreach_batch_upsert(spark, sf_dir)
+    stats = jobs.LAST_DRAIN_STATS
+    assert stats["start_s"] >= 0 and stats["await_s"] >= 0
+    assert "addBatch" in stats["last_batch_ms"]
+
+
 def test_stream_static_join_covers_closed_windows(spark, sf_dir):
     out = catalog.queries()["q_stream_static_join"](spark, sf_dir).toPandas()
     ev = load_tables(spark, sf_dir)["events"]
@@ -262,8 +274,11 @@ def test_sync_token_source_drains_full_feed(spark, sf_dir):
     fixture story exactly once across micro-batches."""
     from etl_asana_spark import catalog
     from etl_asana_spark.sources.fixtures import FIXTURES_DIR
+    from etl_asana_spark.streaming import jobs
 
+    jobs.LAST_DRAIN_STATS.clear()
     out = catalog.queries()["q_stream_source_sync"](spark, sf_dir)
+    assert {"start_s", "await_s", "last_batch_ms"} <= set(jobs.LAST_DRAIN_STATS)
     got = {r["type"]: r["n_stories"] for r in out.collect()}
     import json as _json
 

@@ -10,6 +10,16 @@ from etl_asana_spark import catalog
 from etl_asana_spark.registry import load_tables
 
 
+def test_udf_python_builds_without_warning(spark, sf_dir):
+    """q_udf_python's plain Python UDF builds without PySpark's "Cannot
+    infer the eval type from type hints" UserWarning."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        catalog.queries()["q_udf_python"](spark, sf_dir)
+
+
 def test_ema_matches_pure_python_recurrence(spark, sf_dir):
     """q_win_ema (Arrow-batched pandas ewm) must equal the hand-rolled
     recurrence ema_t = α·x_t + (1−α)·ema_{t−1} for a sampled user."""
