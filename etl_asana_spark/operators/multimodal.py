@@ -39,7 +39,7 @@ payload slices for modern codecs, which genuinely need ffmpeg.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -130,7 +130,7 @@ def attach_binary_payload(
 
 def _attach_payload(
     docs: DataFrame, id_col: str, text_col: str, mime: str, fields: str,
-    encode,
+    encode: Callable[[int, str], tuple[bytes, dict]],
 ) -> DataFrame:
     """The one payload generator behind every ``attach_*_payload``: a
     mapInPandas over (id, text) that skips NULL text (no content, no
