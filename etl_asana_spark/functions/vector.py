@@ -15,19 +15,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def dot(a: Column | str, b: Column | str) -> Column:
     """Σ aᵢ·bᵢ with left-to-right accumulation (deterministic)."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
+    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def norm_sq(a: Column | str) -> Column:
     return F.aggregate(
-        _c(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+        a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
 
 
@@ -50,10 +46,10 @@ def l2_normalize(a: Column | str) -> Column:
     embedding dims in the thousands)."""
     n = l2_norm(a)
     scaled = F.zip_with(
-        _c(a),
-        F.array_repeat(n, F.size(_c(a))),
+        a,
+        F.array_repeat(n, F.size(a)),
         lambda x, nn: x.cast("double") / nn,
     )
-    return F.when(n == 0.0, F.transform(_c(a), lambda x: x.cast("double"))).otherwise(
+    return F.when(n == 0.0, F.transform(a, lambda x: x.cast("double"))).otherwise(
         scaled
     )

@@ -19,9 +19,11 @@ Scope (deliberate, documented):
 Verification strategy (tests/test_jpeg_codec.py): the IDCT agrees with an
 independent numpy cosine-matrix reference to ~1e-9; hand-crafted DC-only
 JPEGs decode to hand-computed pixel values; encoder→decoder round-trips
-bound the per-pixel error by the quantization step; and the kernel
-dispatch in operators/multimodal.py routes real JPEG payloads here in any
-environment (PIL absent included).
+bound the per-pixel error by the quantization step. This module is the
+only JPEG decoder: operators/multimodal.py routes every baseline JPEG
+payload (and each MJPEG frame of an AVI) here. No registered catalog key
+decodes JPEG or AVI payloads today, so these round-trip tests are the
+codec's only check.
 
 Reference-repo note: /root/reference is an empty snapshot (SURVEY §0);
 the binding spec is SURVEY §2.12 and the public JPEG standard.
@@ -659,8 +661,8 @@ def encode_jpeg(
     # Same service envelope as decode_jpeg's cap (r07 review finding #3:
     # an asymmetric bound would let this codec PRODUCE payloads its own
     # decoder rejects, silently downgrading them to the stub tier later).
-    # Pure-Python DCT of a multi-MP image is minutes of CPU either way;
-    # PIL is the production path for real photos.
+    # The cap bounds the pure-Python DCT, whose cost grows with the pixel
+    # count: a multi-MP frame is minutes of CPU in the kernel's hot path.
     if width * height > 4_000_000:
         raise ValueError(
             f"frame too large for this tier: {width}x{height}"

@@ -36,7 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.parity import _ACC, _SCALE, _units_dec
+from ..functions.parity import _ACC, _SCALE, sql_units_wide
 
 __all__ = ["build_state", "merge_state", "finalize_state"]
 
@@ -50,18 +50,18 @@ def _sum(measure: str) -> str:
 
 
 def build_state(
-    df: DataFrame, keys: Sequence[str], measures: dict[str, Column | str]
+    df: DataFrame, keys: Sequence[str], measures: dict[str, str]
 ) -> DataFrame:
-    """Aggregate ``df`` into mergeable partial state.
+    """Aggregate ``df`` into mergeable partial state; each measure is SQL
+    text (a column name or an expression).
 
     Output schema: keys + ``n_rows`` + per measure ``<m>_units``
     (DECIMAL(38,0) fixed-point sum) and ``<m>_cnt`` (non-null count).
     """
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for name, col in measures.items():
-        c = F.col(col) if isinstance(col, str) else col
-        aggs.append(F.sum(_units_dec(c)).alias(_sum(name)))
-        aggs.append(F.count(c).alias(_cnt(name)))
+    for name, expr in measures.items():
+        aggs.append(F.expr(f"SUM({sql_units_wide(expr)})").alias(_sum(name)))
+        aggs.append(F.expr(f"COUNT({expr})").alias(_cnt(name)))
     return df.groupBy(*keys).agg(*aggs)
 
 

@@ -24,18 +24,14 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def ws_tokens(col: Column | str) -> Column:
     """Whitespace tokenization (array<string>)."""
-    return F.split(_c(col), r"\s+")
+    return F.split(col, r"\s+")
 
 
 def bpe_ish_tokens(col: Column | str) -> Column:
     """Regex pre-tokenization approximating BPE input segmentation."""
-    return F.regexp_extract_all(_c(col), F.lit(BPE_ISH_PATTERN), 0)
+    return F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN), 0)
 
 
 def token_count(col: Column | str) -> Column:
@@ -89,11 +85,10 @@ def language_id(col: Column | str) -> Column:
 def quality_features(col: Column | str) -> dict[str, Column]:
     """Quality-scoring features: length, word stats, punctuation and
     stopword ratios. Ratios are double divisions of exact ints (portable)."""
-    text = _c(col)
     toks = ws_tokens(col)
-    n_chars = F.length(text)
+    n_chars = F.length(col)
     n_words = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
+    n_punct = n_chars - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
     n_stop = F.size(
         F.filter(toks, lambda t: t.isin(*[w for ws in STOPWORDS.values() for w in ws]))
     )
@@ -121,7 +116,7 @@ def poly_hash(col: Column | str, base: int = 131, mod: int = 1 << 40) -> Column:
     ``F.xxhash64`` is one codegen call per value; a caller that needs no
     cross-engine equality (a join or grouping key) can use that instead."""
     return F.aggregate(
-        F.split(_c(col), ""),
+        F.split(col, ""),
         F.lit(0).cast("long"),
         lambda a, c: (a * F.lit(base) + F.ascii(c)) % F.lit(mod),
     )

@@ -189,9 +189,7 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_lines"),
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "net_revenue"
-            ),
+            dsum("l_extendedprice * (1 - l_discount)").alias("net_revenue"),
         )
     )
 
@@ -379,12 +377,12 @@ def q_agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial (map-side) + final HashAggregate automatically."""
     t = load_tables(spark, sf_dir)
     li = t["lineitem"].filter(F.col("l_shipdate") <= F.lit("2001-09-01 00:00:00").cast("timestamp"))
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    disc = "l_extendedprice * (1 - l_discount)"
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"),
         dsum("l_extendedprice").alias("sum_base_price"),
         dsum(disc).alias("sum_disc_price"),
-        dsum(disc * (1 + F.col("l_tax"))).alias("sum_charge"),
+        dsum(f"{disc} * (1 + l_tax)").alias("sum_charge"),
         davg("l_quantity").alias("avg_qty"),
         davg("l_extendedprice").alias("avg_price"),
         F.count("*").alias("count_order"),
@@ -661,7 +659,7 @@ def q_agg_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t["orders"].groupBy("o_orderstatus").agg(
         F.count_if(F.col("o_totalprice") > 100000).alias("n_big"),
         F.count_if(urgent).alias("n_urgent"),
-        dsum(F.when(urgent, F.col("o_totalprice")).otherwise(0.0)).alias(
+        dsum("CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0 END").alias(
             "urgent_revenue"
         ),
     )
@@ -1067,7 +1065,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.percentile("l_extendedprice", 0.05), 4).alias("lo"),
         F.round(F.percentile("l_extendedprice", 0.95), 4).alias("hi"),
     )
-    clamped = F.least(F.greatest(F.col("l_extendedprice"), F.col("lo")), F.col("hi"))
+    clamped = "least(greatest(l_extendedprice, lo), hi)"
     return (
         li.join(F.broadcast(bounds), "l_returnflag")
         .groupBy("l_returnflag")

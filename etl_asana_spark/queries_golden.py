@@ -53,7 +53,7 @@ def q_golden_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["lineitem"].filter(F.col("l_shipdate") > cut),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
@@ -91,7 +91,7 @@ def q_golden_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["lineitem"].filter(F.col("l_returnflag") == "R"),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
     )
@@ -231,7 +231,7 @@ def q_golden_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue_delta"),
+            dsum("l_extendedprice * l_discount").alias("revenue_delta"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -256,8 +256,8 @@ def q_golden_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-09-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01 00:00:00").cast("timestamp"))
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo = f"CASE WHEN p_type LIKE 'PROMO%' THEN {rev} ELSE 0 END"
     return (
         li.join(t["part"], F.col("l_partkey") == F.col("p_partkey"))
         .agg(

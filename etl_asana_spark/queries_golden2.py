@@ -26,11 +26,6 @@ from .registry import load_tables
 
 _REV = "l_extendedprice * (1 - l_discount)"
 
-
-def _rev() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 def _ts(s: str) -> F.Column:
     return F.lit(s).cast("timestamp")
 
@@ -78,7 +73,7 @@ def q_golden_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(_REV).alias("revenue"))
     )
 
 
@@ -143,7 +138,7 @@ def q_golden_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust_geo), F.col("c_nationkey") == F.col("cn_key"))
         .filter(direction)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(_REV).alias("revenue"))
     )
 
 
@@ -189,7 +184,6 @@ def q_golden_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_geo = t["nation"].select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    vol = _rev()
     return (
         t["part"].filter(F.col("p_type") == "ECONOMY")
         .join(t["lineitem"], F.col("p_partkey") == F.col("l_partkey"))
@@ -207,8 +201,8 @@ def q_golden_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
-                dsum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
-                / dsum(vol),
+                dsum(f"CASE WHEN supp_nation = 'NATION_3' THEN {_REV} ELSE 0 END")
+                / dsum(_REV),
                 6,
             ).alias("mkt_share")
         )
@@ -239,7 +233,7 @@ def q_golden_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is proxied as 60% of ``p_retailprice`` — the join/agg shape (substring
     part filter driving a 5-way join, two-key agg) is the original's."""
     t = load_tables(spark, sf_dir)
-    amount = _rev() - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
+    amount = f"{_REV} - 0.6 * p_retailprice * l_quantity"
     return (
         t["part"].filter(F.col("p_name").like("%widget%"))
         .join(t["lineitem"], F.col("p_partkey") == F.col("l_partkey"))
@@ -314,7 +308,7 @@ def q_golden_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < _ts("1997-04-01 00:00:00"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(dsum(_rev()).alias("total_rev"))
+        .agg(dsum(_REV).alias("total_rev"))
     )
     best = revenue.agg(F.max("total_rev").alias("best_rev"))
     return (
@@ -394,7 +388,7 @@ def q_golden_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["lineitem"]
         .join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(_REV).alias("revenue"))
     )
 
 
@@ -532,7 +526,7 @@ def q_golden_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["lineitem"]
         .join(F.broadcast(nation_supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(dsum(_rev()).alias("value"))
+        .agg(dsum(_REV).alias("value"))
     )
     thresh = per_part.agg((F.lit(0.001) * dsum("value")).alias("cutoff"))
     return (

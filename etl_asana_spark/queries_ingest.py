@@ -418,8 +418,11 @@ def q_golden_task_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     done = cur.filter(F.col("completed") & F.col("completed_at").isNotNull())
     cts = F.col("completed_at").cast("timestamp")
-    kts = F.col("created_at").cast("timestamp")
-    cycle_hours = (F.unix_timestamp(cts) - F.unix_timestamp(kts)) / F.lit(3600.0)
+    # BIGINT seconds ÷ a DOUBLE: a bare 3600.0 would be a decimal division.
+    cycle_hours = (
+        "(unix_timestamp(CAST(completed_at AS TIMESTAMP))"
+        " - unix_timestamp(CAST(created_at AS TIMESTAMP))) / CAST(3600 AS DOUBLE)"
+    )
     return done.groupBy(F.date_trunc("week", cts).alias("week")).agg(
         F.count("*").alias("n_completed"),
         davg(cycle_hours).alias("avg_cycle_hours"),
@@ -939,7 +942,7 @@ def q_ingest_badlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.groupBy(bucket).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        dsum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total_value"),
+        dsum("coalesce(value, 0.0)").alias("total_value"),
     )
 
 

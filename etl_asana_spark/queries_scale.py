@@ -73,8 +73,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the closed-form combinations are evaluated on the exact sums with
     the identical expression tree on both engines: deterministic at any
     parallelism, and still one shuffle."""
-    x = F.col("l_quantity")
-    y = F.col("l_extendedprice")
+    x, y = "l_quantity", "l_extendedprice"
     m = (
         load_tables(spark, sf_dir)["lineitem"]
         .groupBy("l_returnflag")
@@ -83,9 +82,9 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("double").alias("n"),
             dsum(x).alias("sx"),
             dsum(y).alias("sy"),
-            dsum_wide(x * y).alias("sxy"),
-            dsum_wide(x * x).alias("sxx"),
-            dsum_wide(y * y).alias("syy"),
+            dsum_wide(f"{x} * {y}").alias("sxy"),
+            dsum_wide(f"{x} * {x}").alias("sxx"),
+            dsum_wide(f"{y} * {y}").alias("syy"),
         )
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
@@ -648,15 +647,15 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ry), F.col("v") == F.col("l_discount"))
         .select("r_x", "r_y")
     )
-    x, y = F.col("r_x"), F.col("r_y")
+    x, y = "r_x", "r_y"
     m = ranked.agg(
         F.count("*").alias("n_rows"),
         F.count("*").cast("double").alias("n"),
         dsum(x).alias("sx"),
         dsum(y).alias("sy"),
-        dsum_wide(x * y).alias("sxy"),
-        dsum_wide(x * x).alias("sxx"),
-        dsum_wide(y * y).alias("syy"),
+        dsum_wide(f"{x} * {y}").alias("sxy"),
+        dsum_wide(f"{x} * {x}").alias("sxx"),
+        dsum_wide(f"{y} * {y}").alias("syy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
@@ -907,9 +906,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "revenue"
-            ),
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
     )
 
@@ -1084,11 +1081,10 @@ def q_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree on both engines.
     """
     t = load_tables(spark, sf_dir)
-    bal = F.col("c_acctbal")
     stats = t["customer"].groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(bal).alias("sx"),
-        dsum_wide(bal * bal).alias("sxx"),
+        dsum("c_acctbal").alias("sx"),
+        dsum_wide("c_acctbal * c_acctbal").alias("sxx"),
     )
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     std = F.sqrt((sxx - ((sx * sx) / n)) / (n - F.lit(1.0)))
@@ -1099,6 +1095,6 @@ def q_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             "c_mktsegment",
             "c_acctbal",
-            F.round((bal - (sx / n)) / std, 8).alias("bal_z"),
+            F.round((F.col("c_acctbal") - (sx / n)) / std, 8).alias("bal_z"),
         )
     )

@@ -221,7 +221,7 @@ def test_decimal_to_dsum_parity(spark, duck, dec_dir):
     df = spark.read.parquet(dec_dir)
     got = (
         df.groupBy("grp")
-        .agg(parity.dsum(F.col("amount").cast("double")).alias("dsum_amt"))
+        .agg(parity.dsum("CAST(amount AS DOUBLE)").alias("dsum_amt"))
         .toPandas()
     )
     exp = duck.execute(

@@ -20,7 +20,7 @@ from etl_asana_spark.registry import load_tables
 def _agg(df):
     return df.groupBy("l_returnflag").agg(
         dsum("l_extendedprice").alias("s"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("disc"),
+        dsum("l_extendedprice * (1 - l_discount)").alias("disc"),
         davg("l_quantity").alias("a"),
     )
 
@@ -80,7 +80,7 @@ def test_split_accumulator_equals_wide_decimal(spark):
     the IDENTICAL double as the wide DECIMAL(38,0) single-accumulator form it
     replaced — including negatives (pmod wrap), exact .5 rounding boundaries,
     zero, and values spanning the split modulus."""
-    from etl_asana_spark.functions.parity import _SCALE, _units_dec
+    from etl_asana_spark.functions.parity import dsum_wide
 
     vals = [
         0.0, -0.0, 1.5e-6, -1.5e-6, 0.9999995, -0.9999995,
@@ -88,15 +88,13 @@ def test_split_accumulator_equals_wide_decimal(spark):
         -987654.321098, 5.0000005, -5.0000005, 1e6, -1e6,
     ]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    wide = df.agg(
-        (F.sum(_units_dec("x")).cast("double") / F.lit(_SCALE)).alias("s")
-    ).collect()[0]["s"]
+    wide = df.agg(dsum_wide("x").alias("s")).collect()[0]["s"]
     split = df.agg(dsum("x").alias("s")).collect()[0]["s"]
     assert split == wide  # bit-identical
 
     # and per-row: each single value round-trips identically through both
     for v in vals:
         one = spark.createDataFrame([(v,)], "x double")
-        w = one.agg((F.sum(_units_dec("x")).cast("double") / F.lit(_SCALE)).alias("s")).collect()[0]["s"]
+        w = one.agg(dsum_wide("x").alias("s")).collect()[0]["s"]
         s = one.agg(dsum("x").alias("s")).collect()[0]["s"]
         assert s == w, v

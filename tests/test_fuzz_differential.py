@@ -133,7 +133,7 @@ def _aggs(rng: random.Random) -> list[Agg]:
         Agg("sum_qty", parity.dsum("l_quantity"), parity.sql_dsum("l_quantity")),
         Agg(
             "rev",
-            parity.dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
+            parity.dsum("l_extendedprice * (1 - l_discount)"),
             parity.sql_dsum("l_extendedprice * (1 - l_discount)"),
         ),
         Agg(
