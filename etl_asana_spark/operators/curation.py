@@ -1,4 +1,5 @@
-"""Corpus curation operators: deterministic slicing for training pipelines.
+"""Corpus curation operators: deterministic slicing for training pipelines
+and the benchmark-contamination join.
 
 The catalog's curation queries (q_sample_hash / q_cap_per_source /
 q_mix_corpus) compose these ideas inline; this module exposes the reusable
@@ -12,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .text import shingle_hashes
 
 #: Knuth multiplicative hash modulus/multiplier — portable arithmetic that
 #: any engine (and any auditor with a calculator) can reproduce exactly.
@@ -63,6 +66,26 @@ def hash_split(
         name: df.filter((bucket >= lo) & (bucket < hi))
         for name, lo, hi in split_ranges(fractions)
     }
+
+
+def contaminated_pairs(
+    docs: DataFrame, bench: DataFrame, min_shared: int
+) -> DataFrame:
+    """``(doc_id, bench_id, shared)`` for every corpus doc and benchmark doc
+    sharing at least ``min_shared`` distinct word trigrams.
+
+    ``docs`` carries ``doc_id``/``text`` and ``bench`` carries
+    ``bench_id``/``text``. The join is shingle-blocked: pairs materialize
+    only on shared trigram hashes (:func:`.text.shingle_hashes`), and the
+    benchmark side is broadcast — an eval set is small next to the corpus.
+    """
+    return (
+        shingle_hashes(docs, "doc_id", 3)
+        .join(F.broadcast(shingle_hashes(bench, "bench_id", 3)), "sh")
+        .groupBy("doc_id", "bench_id")
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .filter(F.col("shared") >= min_shared)
+    )
 
 
 PACKED_SCHEMA = (

@@ -16,8 +16,18 @@ Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
 - SimHash       — 40-bit weighted-bit signature over the same shingle
                   folds; candidate pairs via 10-bit band equality, verified
                   by Hamming distance (``simhash_portable_pairs``).
-- n-gram Jaccard— exact set Jaccard with shared-shingle blocking: only pairs
-                  sharing ≥1 shingle are ever materialized.
+- n-gram Jaccard— exact set Jaccard over xxhash64'd word-shingle sets
+                  (``text.shingle_hashes``). One scaffold
+                  (``_exact_jaccard_pairs``: exact-duplicate collapse,
+                  shingle sets, ratio-and-threshold verify) wraps two
+                  candidate cores with the same answer set. Shared-shingle
+                  blocking (``ngram_jaccard_pairs``) pairs docs sharing
+                  ≥1 shingle that pass a length filter; the prefix filter
+                  (``prefix_filter_jaccard_pairs``) pairs them only
+                  through each doc's rarest shingles and counts the
+                  overlap with ``array_intersect``.
+                  ``ngram_dedup_clusters`` runs components over the
+                  blocking pairs of the distinct texts.
 - embedding cos — near-dups in embedding space; the registered path is
                   triangle-inequality cell blocking (exact, BNLJ-free —
                   ``embedding_cosine_dups_blocked``) whose candidate pairs
@@ -34,10 +44,12 @@ constants, so DuckDB replays it step for step (the q_dedup_* oracles).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .text import shingle_hashes, shingles
 
 
 def dedup_exact(
@@ -251,8 +263,6 @@ def minhash_portable_signatures(
     ``(a_i·x + b_i) mod P`` (steps < 2^62, exact int64). DuckDB replays
     every step (the q_dedup_minhash oracle).
     """
-    from .text import shingles
-
     toks = F.filter(
         F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
     )
@@ -581,45 +591,54 @@ def simhash_portable_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def ngram_jaccard_pairs(
+def _jaccard_pairable(n: int) -> Column:
+    """Whether a collapse group's shared text ``vec`` can self-pair in the
+    exact Jaccard families: these tokenize with a plain ``\\s+`` split (no
+    run filter) and shingle via :func:`.text.shingles`, so a text has ≥ 1
+    shingle ⇔ it has ≥ ``n`` split tokens."""
+    return F.size(F.split(F.col("vec"), r"\s+")) >= n
+
+
+def _exact_jaccard_pairs(
+    candidates: Callable[[DataFrame, str, float], DataFrame],
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    collapse: bool = True,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    collapse: bool,
 ) -> DataFrame:
-    """EXACT n-gram-set Jaccard near-dup pairs with shared-shingle blocking.
+    """The scaffold shared by the exact n-gram Jaccard operators: the
+    exact-duplicate collapse, the shingle sets, and the ratio-and-threshold
+    select around one family's candidate core.
 
-    Only pairs sharing at least one shingle are materialized (the blocking
-    join), so cost tracks collision volume, not n². Returns
-    (doc_a, doc_b, jaccard) with jaccard >= threshold.
+    ``candidates(sh, id_col, threshold)`` receives the distinct
+    ``(id_col, sh)`` shingle-hash rows (:func:`.text.shingle_hashes`) and
+    returns one row per candidate pair: ``(doc_a, doc_b, inter, n_a, n_b)``
+    with ``doc_a < doc_b``, the exact intersection size and both set sizes.
+    Every candidate is then verified as ``inter / (n_a + n_b − inter) ≥
+    threshold``, so the core decides only which pairs are ever looked at.
 
-    ``collapse=True`` (default) additionally collapses byte-identical
-    texts before the blocking join (Jaccard depends only on the text;
-    identical texts have Jaccard exactly 1.0 and pair iff they have ≥ 1
-    shingle) — the shared-shingle join otherwise goes quadratic in copy
-    multiplicity on a duplicate-heavy corpus, the same measured class as
-    :func:`minhash_portable_pairs`. ``collapse=False`` is the differential
-    oracle.
+    ``collapse=True`` collapses byte-identical texts first (Jaccard depends
+    only on the text; identical texts have Jaccard exactly 1.0 and pair iff
+    they have ≥ 1 shingle) — without it every candidate join goes
+    quadratic in copy multiplicity on a duplicate-heavy corpus, the same
+    measured class as :func:`minhash_portable_pairs`. The naive form runs
+    over one representative per text; self-Jaccard 1.0 is emitted by the
+    inclusive ``jaccard >= threshold`` filter, which ``emit_intra``
+    mirrors. ``collapse=False`` is the differential oracle.
     """
-    from .text import shingles
-
     if collapse:
         out = _collapsed_pairs(
             docs, id_col, text_col,
-            naive_fn=lambda reps: ngram_jaccard_pairs(
-                reps, id_col, text_col, n, threshold, collapse=False
+            naive_fn=lambda reps: _exact_jaccard_pairs(
+                candidates, reps, id_col, text_col, n, threshold, collapse=False
             ).select(
                 F.col("doc_a").alias("id_a"),
                 F.col("doc_b").alias("id_b"),
                 "jaccard",
             ),
-            # this family tokenizes with a plain split (no run filter)
-            # and shingles via operators.text.shingles — ≥ 1 shingle ⇔
-            # ≥ n split tokens; self-Jaccard is exactly 1.0, emitted by
-            # the naive form's inclusive jaccard >= threshold filter.
-            pairable=F.size(F.split(F.col("vec"), r"\s+")) >= n,
+            pairable=_jaccard_pairable(n),
             payload=F.lit(1.0), payload_name="jaccard",
             emit_intra=threshold <= 1.0,
         )
@@ -628,34 +647,29 @@ def ngram_jaccard_pairs(
             F.col("id_b").alias("doc_b"),
             "jaccard",
         )
+    inter = candidates(shingle_hashes(docs, id_col, n, text_col), id_col, threshold)
+    return inter.select(
+        "doc_a",
+        "doc_b",
+        (
+            F.col("inter").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+        ).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
-    # Shuffle-lean shape (r06): each doc's shingle-set size rides ON the
-    # shingle rows (window count over the distinct's own doc_id-compatible
-    # shuffle) and through the blocking join into the pair aggregate, so the
-    # candidate-pair frame — the big intermediate; 1.1M rows for 241 output
-    # pairs at sf0.1 — is aggregated once and never re-joined against the
-    # per-doc size table (which, being one row per doc, is NOT broadcastable
-    # at corpus scale). The join key is xxhash64 of the shingle: an 8-byte
-    # shuffle key instead of an unbounded string, same collision budget as
-    # the exact-dedup xxhash64 grouping (a false shared shingle needs two
-    # distinct shingles colliding in 2^64; it could only flip a pair whose
-    # true Jaccard sits exactly at the threshold boundary of one shingle).
-    # (r07 notes: hashing BEFORE the distinct means the dedup shuffle moves
-    # 16-byte (id, hash) rows instead of full shingle strings — measured
-    # ~20% off the whole pair build at sf0.1; n_sh then counts distinct
-    # HASHES, the same 2^-64 collision budget as the join key itself. A
-    # map-side array_distinct(shingles(...)) variant that avoids the
-    # distinct+window shuffles entirely was measured 10x SLOWER —
-    # CollapseProject inlines the whole shingle-HOF chain into every
-    # consumer, re-evaluating it per size()/explode() — so the row-level
-    # distinct stays.)
-    sh = (
-        docs.select(id_col, F.split(F.col(text_col), r"\s+").alias("toks"))
-        .select(id_col, F.explode(shingles("toks", n)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("sh"))
-        .distinct()
-        .withColumn("n_sh", F.count("*").over(Window.partitionBy(id_col)))
-    )
+
+def _blocking_candidates(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Shared-shingle blocking: every pair sharing ≥ 1 shingle hash that
+    passes the length filter, counted in one pair aggregate.
+
+    Shuffle-lean shape (r06): each doc's shingle-set size rides ON the
+    shingle rows (window count over the distinct's own doc_id-compatible
+    shuffle) and through the blocking join into the pair aggregate, so the
+    candidate-pair frame — the big intermediate; 1.1M rows for 241 output
+    pairs at sf0.1 — is aggregated once and never re-joined against the
+    per-doc size table (which, being one row per doc, is NOT broadcastable
+    at corpus scale)."""
+    sh = sh.withColumn("n_sh", F.count("*").over(Window.partitionBy(id_col)))
     a, b = sh.alias("a"), sh.alias("b")
     # Length filter (r07, exact): J(A,B) ≥ t ⟹ |A∩B| ≥ t·|A∪B| ≥ t·max
     # and |A∩B| ≤ min, so min(n_a, n_b) ≥ t·max(n_a, n_b) is a necessary
@@ -681,15 +695,134 @@ def ngram_jaccard_pairs(
             F.min("a.n_sh").alias("n_a"),  # constant per doc; min = the value
             F.min("b.n_sh").alias("n_b"),
         )
+    )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+    collapse: bool = True,
+) -> DataFrame:
+    """EXACT n-gram-set Jaccard near-dup pairs with shared-shingle blocking
+    (:func:`_blocking_candidates` inside :func:`_exact_jaccard_pairs`).
+
+    Only pairs sharing at least one shingle are materialized (the blocking
+    join), so cost tracks collision volume, not n². Returns
+    (doc_a, doc_b, jaccard) with jaccard >= threshold. ``collapse=True``
+    (default) collapses byte-identical texts first; ``collapse=False`` is
+    the differential oracle.
+    """
+    return _exact_jaccard_pairs(
+        _blocking_candidates, docs, id_col, text_col, n, threshold, collapse
+    )
+
+
+def _prefix_candidates(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Prefix filtering: pairs whose smaller-id doc's rare-shingle prefix
+    hits the other doc, each with its exact intersection size.
+
+    The df ranking's tie-break is the shingle hash (r10): total and
+    deterministic, and ranking order only changes candidate PRUNING, never
+    the verified answer set."""
+    freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
+    w = Window.partitionBy(id_col).orderBy("df", "sh")
+    ranked = sh.join(freq, "sh").withColumn(
+        "n_sh", F.count("*").over(Window.partitionBy(id_col))
+    ).withColumn("rn", F.row_number().over(w))
+    prefix = ranked.filter(
+        F.col("rn") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    ).select(id_col, "sh")
+
+    cand = (
+        prefix.alias("p")
+        .join(
+            sh.alias("f"),
+            (F.col("p.sh") == F.col("f.sh"))
+            & (F.col(f"p.{id_col}") < F.col(f"f.{id_col}")),
+        )
+        .select(
+            F.col(f"p.{id_col}").alias("doc_a"), F.col(f"f.{id_col}").alias("doc_b")
+        )
+        .distinct()
+    )
+    # Exact verification, PPJoin-style (r10): each doc's distinct shingle
+    # hashes as ONE sorted array row, candidates join that table twice and
+    # count |A∩B| with array_intersect — O(|A|+|B|) per pair. The previous
+    # formulation re-joined candidates against the row-per-shingle table
+    # (cand ⋈ sh on doc_a alone fans every pair out by ~|A| rows before the
+    # (doc_b, sh) match), which the 10× near-dup rehearsal measured
+    # super-linear (13.2× for 10× data, 45× true pairs): the pair×shingle
+    # intermediate is the one frame that grows as candidates × doc length.
+    # Identical answers: arrays hold exactly the distinct hash set the row
+    # form held, and array_intersect counts distinct common elements.
+    arrs = sh.groupBy(id_col).agg(
+        F.array_sort(F.collect_list("sh")).alias("arr"),
+        F.count("*").alias("n_sh"),
+    )
+    return (
+        cand.join(
+            arrs.select(
+                F.col(id_col).alias("doc_a"),
+                F.col("arr").alias("arr_a"),
+                F.col("n_sh").alias("n_a"),
+            ),
+            "doc_a",
+        )
+        .join(
+            arrs.select(
+                F.col(id_col).alias("doc_b"),
+                F.col("arr").alias("arr_b"),
+                F.col("n_sh").alias("n_b"),
+            ),
+            "doc_b",
+        )
         .select(
             "doc_a",
             "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            ).alias("jaccard"),
+            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
+            "n_a",
+            "n_b",
         )
-        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def prefix_filter_jaccard_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+    collapse: bool = True,
+) -> DataFrame:
+    """EXACT Jaccard pairs via prefix filtering (the ssjoin family:
+    AllPairs/PPJoin's length-independent prefix; :func:`_prefix_candidates`
+    inside :func:`_exact_jaccard_pairs`) — same answer as
+    :func:`ngram_jaccard_pairs`, far fewer candidates on skewed shingles.
+
+    If J(A,B) ≥ t then |A∩B| ≥ t·|A|, so B must hit one of A's
+    (|A| − ⌈t·|A|⌉ + 1) globally RAREST shingles — the prefix. Shingles are
+    ranked by corpus document frequency (ties by shingle hash: a total,
+    deterministic order on both sides of the join); only the prefix of the
+    smaller-id doc joins against full shingle sets, and each surviving
+    candidate pair is verified with an exact intersection count. Blocking
+    on every shared shingle pairs docs through their COMMONEST shingle;
+    prefix filtering pairs them only through rare ones — at corpus scale
+    that is the difference between the candidate join exploding on
+    stop-shingles and staying near-linear. At a loose threshold the prefix
+    is nearly the whole set (at 0.015 it is all of a doc's trigrams or one
+    short), so it prunes little there. Candidate counts of both cores are
+    compared in tests/test_llm_ops.py; the result itself is
+    oracle-identical to the brute-force form.
+
+    With ``collapse=True`` corpus document frequency is counted over
+    DISTINCT texts, which only changes candidate pruning order, never the
+    verified answer set.
+    """
+    return _exact_jaccard_pairs(
+        _prefix_candidates, docs, id_col, text_col, n, threshold, collapse
     )
 
 
@@ -1410,40 +1543,42 @@ def dedup_clusters(
     )
 
 
-def dedup_clusters_collapsed(
+def ngram_dedup_clusters(
     docs: DataFrame,
-    rep_pairs_fn,
-    pairable: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
     pre_collapsed: bool = False,
 ) -> DataFrame:
-    """:func:`dedup_clusters` without ever materializing member-level pairs.
+    """:func:`dedup_clusters` over :func:`ngram_jaccard_pairs` without ever
+    materializing member-level pairs.
 
     A duplicate-heavy corpus makes the member pair set quadratic in copy
     multiplicity (30-way copies → 435 within-group pairs per distinct
     text) — at the round-4 30×-duplication rehearsal the member-level edge
     list OOM'd the 8 GB test heap before label propagation even started.
     But byte-identical docs share their representative's connectivity
-    exactly, so the components can be computed on the DISTINCT-TEXT rep
-    graph and the labels expanded to members with one join:
+    exactly, so the components are computed on the DISTINCT-TEXT rep graph
+    and the labels expanded to members with one join:
 
-    - members of a ``pairable`` group (a text that can self-pair in the
-      naive pair formulation, e.g. ≥ n tokens for the n-gram family) are
-      all mutually connected (self-Jaccard 1.0) and inherit the rep-graph
-      component — whose label is the min member id reachable, because
-      ``_collapse_exact`` picks rep = min member id per group and the rep
-      graph's component label is the min rep reachable;
+    - members of a pairable group (a text that can self-pair in the naive
+      pair formulation: ≥ ``n`` tokens, and the inclusive filter admits
+      self-Jaccard 1.0) are all mutually connected and inherit the
+      rep-graph component — whose label is the min member id reachable,
+      because ``_collapse_exact`` picks rep = min member id per group and
+      the rep graph's component label is the min rep reachable;
     - members of an UNpairable group (too short to shingle) have no pairs
       at all in the naive form — each is its own singleton, INCLUDING the
       rep;
     - NULL-text docs never enter membership and fall out as singletons via
       the caller-facing left join below.
 
-    ``rep_pairs_fn(reps)`` must return the naive (already linear at rep
-    granularity) pair frame with columns (doc_a, doc_b) over a frame with
-    the caller's ``id_col``/``text_col`` schema; ``pairable`` is evaluated
-    against the group's shared text exposed as column ``vec``.
+    The rep pairs and the pairable predicate both derive from the one
+    ``(n, threshold)``: a pair function and a predicate that disagree on
+    tokenization or ``n`` silently mislabel clusters (pairs at ``n=2``
+    with the predicate still requiring 3 tokens force duplicated 2-token
+    docs into singletons with no error).
 
     ``pre_collapsed=True`` (r11) declares the caller already removed
     byte-identical texts (e.g. curate_corpus clusters the output of its own
@@ -1476,8 +1611,13 @@ def dedup_clusters_collapsed(
     reps = groups.select(
         F.col("rep").alias(id_col), F.col("vec").alias(text_col)
     )
-    rep_pairs = rep_pairs_fn(reps)
+    rep_pairs = ngram_jaccard_pairs(
+        reps, id_col, text_col, n, threshold, collapse=False
+    ).select("doc_a", "doc_b")
     cc = connected_components(rep_pairs, src="doc_a", dst="doc_b")
+    # self-Jaccard is exactly 1.0: the same boundary the pair families'
+    # emit_intra encodes.
+    pairable = _jaccard_pairable(n) & F.lit(threshold <= 1.0)
     member_lab = (
         membership.join(groups.select("rep", pairable.alias("__ok")), "rep")
         .join(cc.withColumnRenamed("node", "rep"), "rep", "left")
@@ -1513,231 +1653,3 @@ def dedup_clusters_collapsed(
         # naive window form) pin the equivalence.
         .withColumn("is_canonical", F.col(id_col) == F.col("cluster_id"))
     )
-
-
-def ngram_dedup_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    pre_collapsed: bool = False,
-) -> DataFrame:
-    """:func:`dedup_clusters_collapsed` specialized to the n-gram Jaccard
-    family, deriving the rep-pair function AND the matching ``pairable``
-    predicate from one ``(n, threshold)``.
-
-    The two halves are a load-bearing invariant of the collapsed
-    formulation (a rep-pair function and a ``pairable`` that disagree on
-    tokenization or ``n`` silently mislabel clusters — e.g. pairs computed
-    at ``n=2`` with ``pairable`` still requiring 3 tokens force duplicated
-    2-token docs into singletons with no error), so callers must not
-    assemble them by hand."""
-    return dedup_clusters_collapsed(
-        docs,
-        rep_pairs_fn=lambda reps: ngram_jaccard_pairs(
-            reps, id_col, text_col, n, threshold, collapse=False
-        ).select("doc_a", "doc_b"),
-        # self-Jaccard is exactly 1.0, so a doc self-pairs iff it can
-        # shingle AND the naive inclusive filter admits 1.0 — the same
-        # boundary the pair family's emit_intra encodes.
-        pairable=(F.size(F.split(F.col("vec"), r"\s+")) >= n)
-        & F.lit(threshold <= 1.0),
-        id_col=id_col,
-        text_col=text_col,
-        pre_collapsed=pre_collapsed,
-    )
-
-
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    collapse: bool = True,
-) -> DataFrame:
-    """EXACT Jaccard pairs via prefix filtering (the ssjoin family:
-    AllPairs/PPJoin's length-independent prefix) — same answer as
-    :func:`ngram_jaccard_pairs`, far fewer candidates.
-
-    If J(A,B) ≥ t then |A∩B| ≥ t·|A|, so B must hit one of A's
-    (|A| − ⌈t·|A|⌉ + 1) globally RAREST shingles — the prefix. Shingles are
-    ranked by corpus document frequency (ties by xxhash64 of the shingle:
-    total, deterministic order on both sides of the join); only the prefix of the
-    smaller-id doc joins against full shingle sets, and each surviving
-    candidate pair is verified with an exact intersection count. Blocking
-    on every shared shingle (the naive scheme) pairs docs through their
-    COMMONEST shingle; prefix filtering pairs them only through rare ones —
-    at corpus scale that is the difference between the candidate join
-    exploding on stop-shingles and staying near-linear. Candidate-count
-    reduction is asserted in tests/test_llm_ops.py; the result itself is
-    oracle-identical to the brute-force form.
-
-    ``collapse=True`` (default) collapses byte-identical texts first —
-    copies would otherwise pair each other through their rare prefix
-    shingles, quadratic in copy multiplicity (the same measured class as
-    :func:`minhash_portable_pairs`). Same bit-identical-output argument: the
-    ranking/prefix/verify all depend only on the text, with one
-    refinement — corpus document frequency is counted over DISTINCT texts,
-    which only changes candidate PRUNING order, never the verified answer
-    set (verification is exact Jaccard). ``collapse=False`` keeps the
-    naive formulation as the differential oracle.
-    """
-    from .text import shingles
-
-    if collapse:
-        out = _collapsed_pairs(
-            docs, id_col, text_col,
-            naive_fn=lambda reps: prefix_filter_jaccard_pairs(
-                reps, id_col, text_col, n, threshold, collapse=False
-            ).select(
-                F.col("doc_a").alias("id_a"),
-                F.col("doc_b").alias("id_b"),
-                "jaccard",
-            ),
-            # same tokenization/boundary contract as ngram_jaccard_pairs
-            # (this family verifies with the identical exact-Jaccard rule).
-            pairable=F.size(F.split(F.col("vec"), r"\s+")) >= n,
-            payload=F.lit(1.0), payload_name="jaccard",
-            emit_intra=threshold <= 1.0,
-        )
-        return out.select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            "jaccard",
-        )
-
-    # Shingles are xxhash64'd up front (the ngram_jaccard_pairs discipline,
-    # r10): every downstream shuffle/join moves 8-byte keys instead of
-    # unbounded strings, at the shared 2^-64 collision budget. The df
-    # ranking's tie-break becomes (df, hash) instead of (df, text) — still
-    # total and deterministic, and ranking order only changes candidate
-    # PRUNING, never the verified answer set (exact-Jaccard verify).
-    sh = (
-        docs.select(id_col, F.split(F.col(text_col), r"\s+").alias("toks"))
-        .select(id_col, F.explode(shingles("toks", n)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("sh"))
-        .distinct()
-    )
-    freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "sh")
-    ranked = sh.join(freq, "sh").withColumn(
-        "n_sh", F.count("*").over(Window.partitionBy(id_col))
-    ).withColumn("rn", F.row_number().over(w))
-    prefix = ranked.filter(
-        F.col("rn") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).select(id_col, "sh")
-
-    cand = (
-        prefix.alias("p")
-        .join(
-            sh.alias("f"),
-            (F.col("p.sh") == F.col("f.sh"))
-            & (F.col(f"p.{id_col}") < F.col(f"f.{id_col}")),
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("doc_a"), F.col(f"f.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-    # Exact verification, PPJoin-style (r10): each doc's distinct shingle
-    # hashes as ONE sorted array row, candidates join that table twice and
-    # count |A∩B| with array_intersect — O(|A|+|B|) per pair. The previous
-    # formulation re-joined candidates against the row-per-shingle table
-    # (cand ⋈ sh on doc_a alone fans every pair out by ~|A| rows before the
-    # (doc_b, sh) match), which the 10× near-dup rehearsal measured
-    # super-linear (13.2× for 10× data, 45× true pairs): the pair×shingle
-    # intermediate is the one frame that grows as candidates × doc length.
-    # Identical answers: arrays hold exactly the distinct hash set the row
-    # form held, and array_intersect counts distinct common elements.
-    arrs = sh.groupBy(id_col).agg(
-        F.array_sort(F.collect_list("sh")).alias("arr"),
-        F.count("*").alias("n_sh"),
-    )
-    inter = (
-        cand.join(
-            arrs.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("arr").alias("arr_a"),
-                F.col("n_sh").alias("n_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arrs.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("arr").alias("arr_b"),
-                F.col("n_sh").alias("n_b"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
-            "n_a",
-            "n_b",
-        )
-    )
-    return inter.select(
-        "doc_a",
-        "doc_b",
-        (
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
-
-
-def candidate_pair_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> tuple[int, int]:
-    """(prefix-filter candidates, shared-shingle-blocking candidates) — the
-    pruning measurement behind prefix_filter_jaccard_pairs' claim. Shingles
-    are xxhash64'd to mirror the operator exactly (r10), so the measured
-    candidate set is the one the operator actually generates."""
-    from .text import shingles
-
-    sh = (
-        docs.select(id_col, F.split(F.col(text_col), r"\s+").alias("toks"))
-        .select(id_col, F.explode(shingles("toks", n)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("sh"))
-        .distinct()
-    )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "sh")
-    ranked = sh.join(freq, "sh").withColumn("rn", F.row_number().over(w)).join(
-        sizes, id_col
-    )
-    prefix = ranked.filter(
-        F.col("rn") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).select(id_col, "sh")
-    a, b = sh.alias("a"), sh.alias("b")
-    blocked = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
-        .distinct()
-        .count()
-    )
-    pref = (
-        prefix.alias("p")
-        .join(
-            sh.alias("f"),
-            (F.col("p.sh") == F.col("f.sh"))
-            & (F.col(f"p.{id_col}") < F.col(f"f.{id_col}")),
-        )
-        .select(F.col(f"p.{id_col}"), F.col(f"f.{id_col}"))
-        .distinct()
-        .count()
-    )
-    return pref, blocked

@@ -23,7 +23,7 @@ replays it (the q_sim_ann, q_sim_ivf and q_emb_pca oracles).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
@@ -41,8 +41,6 @@ def cosine_topk(
     Returns (query_id, vec_id, cos) — k rows per query, deterministic
     tie-break on vec_id. ``query`` must carry (query_id, query_vec).
     """
-    from pyspark.sql import Window
-
     scored = embeddings.crossJoin(F.broadcast(query)).select(
         "query_id",
         id_col,
@@ -121,8 +119,6 @@ def cosine_topk_batched(
                     "cos": s[idx.T.ravel(), np.repeat(np.arange(nq), kk)],
                 }
             )
-
-    from pyspark.sql import Window
 
     scored = embeddings.mapInPandas(
         score, f"query_id bigint, {id_col} bigint, cos double"
@@ -247,15 +243,11 @@ def ann_portable_topk(
         .select("query_id", id_col)
         .distinct()
     )
-    from ..functions.vector import cosine
-
     cand = (
         cand_ids.join(pb.select(id_col, "__e"), id_col)
         .join(F.broadcast(pq.select("query_id", "__q")), "query_id")
         .select("query_id", id_col, cosine("__e", "__q").alias("__cos"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc(id_col))
     return (
         cand.withColumn("__rk", F.row_number().over(w))
@@ -288,8 +280,6 @@ def ivf_portable_topk(
     probed by scripts/margin_probe.py. Scale shape: centroid state is
     k·dim driver-side, probing is a broadcast join, scoring touches only
     probed members — expected work ≈ nprobe/n_centroids of brute force."""
-    from ..functions.vector import cosine
-
     assigned, cents = kmeans_lloyd(
         embeddings, k=n_centroids, n_iter=n_iter, id_col=id_col,
         vec_col=vec_col, _return_model=True, model_key=model_key,
@@ -306,8 +296,6 @@ def ivf_portable_topk(
         "query_id", "query_vec", "cluster",
         cosine("query_vec", "centroid").alias("cell_cos"),
     )
-    from pyspark.sql import Window
-
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("cell_cos"), F.asc("cluster")
     )

@@ -8,7 +8,7 @@ speed over a 100 TB documents table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Tiny per-language stopword seeds for the n-gram/stopword heuristic.
@@ -57,6 +57,31 @@ def shingles(tokens_col: str, n: int = 3) -> Column:
         f"CASE WHEN size({tokens_col}) < {n} THEN array()"
         f" ELSE transform(sequence(1, size({tokens_col}) - {n - 1}),"
         f" i -> concat_ws(' ', {parts})) END"
+    )
+
+
+def shingle_hashes(
+    df: DataFrame, id_col: str, n: int, text_col: str = "text"
+) -> DataFrame:
+    """Distinct ``(id_col, sh)`` rows: each document's set of ``\\s+``-split
+    word ``n``-grams, as ``xxhash64`` of the shingle text.
+
+    The one shingle-set definition behind the exact text-overlap operators
+    (the two Jaccard pair joins and the contamination join). Hashing BEFORE
+    the distinct means every shuffle and join downstream moves 16-byte
+    ``(id, hash)`` rows instead of shingle strings — measured ~20% off the
+    whole n-gram pair build at sf0.1. A false shared shingle needs two
+    distinct shingles colliding in 2^64, the collision budget of the exact
+    dedup's xxhash64 grouping. A map-side ``array_distinct(shingles(...))``
+    variant that skips the distinct's shuffle was measured 10× slower:
+    CollapseProject inlines the whole shingle-HOF chain into every consumer
+    and re-evaluates it per ``size()``/``explode()``.
+    """
+    return (
+        df.select(id_col, ws_tokens(F.col(text_col)).alias("toks"))
+        .select(id_col, F.explode(shingles("toks", n)).alias("sh"))
+        .select(id_col, F.xxhash64("sh").alias("sh"))
+        .distinct()
     )
 
 

@@ -118,7 +118,11 @@ def write_etl_outputs(result: EtlResult, out_dir: str | Path) -> None:
 from pyspark.sql import functions as F  # noqa: E402
 
 from .operators import text as text_ops  # noqa: E402
-from .operators.curation import hash_bucket, split_ranges  # noqa: E402
+from .operators.curation import (  # noqa: E402
+    contaminated_pairs,
+    hash_bucket,
+    split_ranges,
+)
 from .operators.dedup import (  # noqa: E402
     dedup_exact,
     ngram_dedup_clusters,
@@ -252,7 +256,7 @@ def curate_corpus(
     # two full-text shuffles to rediscover all-singleton groups (r11,
     # guide §2.4 — measured: the collapse groupBy+join were the heaviest
     # exchanges of the fuzzy build). Bit-identical output on distinct-text
-    # input; see dedup_clusters_collapsed.
+    # input; see ngram_dedup_clusters.
     clusters = ngram_dedup_clusters(
         exact, n=3, threshold=jaccard_threshold, pre_collapsed=True
     )
@@ -267,23 +271,8 @@ def curate_corpus(
 
     # 4. benchmark-contamination scrub
     if bench_docs is not None:
-        def shingled(df: DataFrame, idc: str) -> DataFrame:
-            # hash before the distinct/join: the shuffle and the broadcast
-            # move 8-byte keys, not trigram strings (r07; same 2^-64
-            # collision budget as the fuzzy stage's blocking key)
-            return (
-                df.select(idc, text_ops.ws_tokens("text").alias("t"))
-                .select(idc, F.explode(text_ops.shingles("t", 3)).alias("s"))
-                .select(idc, F.xxhash64("s").alias("s"))
-                .distinct()
-            )
-
         contaminated = (
-            shingled(fuzzy, "doc_id")
-            .join(F.broadcast(shingled(bench_docs, "bench_id")), "s")
-            .groupBy("doc_id", "bench_id")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .filter(F.col("shared") >= contamination_min_shared)
+            contaminated_pairs(fuzzy, bench_docs, contamination_min_shared)
             .select("doc_id")
             .distinct()
         )

@@ -1277,8 +1277,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning-invariant — so unlike the classic float formulation this
     IS SQL-oracle-checked: the oracle unrolls the same five supersteps as
     chained CTEs in DuckDB and the top-20 hub table hash-matches
-    bit-for-bit. Mass conservation, positivity, and degree-rank
-    correlation of the float variant remain property-tested in
+    bit-for-bit. Mass conservation within the truncation bound,
+    positivity, and hub ranking are property-tested in
     tests/test_properties.py. Top 20 hubs returned.
     """
     from .operators.graph import pagerank_units
@@ -1292,14 +1292,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
         .distinct()
     )
-    # dangling_free: the co-occurrence pairs are emitted in both directions
-    # (p1≠p2 over the same join), so every node has outdeg ≥ 1 and the
-    # dangling-mass subtree (a second rank-vector pass + broadcast per
-    # superstep) is provably zero — the unrolled oracle keeps its dmass CTE,
-    # which evaluates to that same zero.
+    # The co-occurrence pairs are emitted in both directions (p1≠p2 over
+    # the same join), so every node has outdeg ≥ 1: pagerank_units finds no
+    # dangling node and drops the dangling-mass subtree — the unrolled
+    # oracle keeps its dmass CTE, which evaluates to that same zero.
     ranks = pagerank_units(
-        pairs, iterations=_PR_ITERS, damping=0.85, scale=_PR_SCALE,
-        dangling_free=True,
+        pairs, iterations=_PR_ITERS, damping=0.85, scale=_PR_SCALE
     )
     return ranks.orderBy(F.desc("rank_units"), F.asc("id")).limit(20)
 

@@ -19,6 +19,7 @@ from .catalog import register
 from .functions import vector
 from .functions.parity import fixed_point_join
 from .operators import dedup, multimodal, similarity, text
+from .operators.curation import contaminated_pairs, pack_sequences
 from .registry import load_tables
 from .sources.fixtures import FIXTURES_DIR
 
@@ -1361,8 +1362,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver's canonicalizer can't sort list cells — the q_multimodal r03
     failure class, caught by the strengthened local sweep). Library users
     call ``pack_sequences`` directly for the typed array."""
-    from .operators.curation import pack_sequences
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select(
         "doc_id", F.size(text.ws_tokens("text")).cast("long").alias("n_tokens")
@@ -1408,29 +1407,21 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     word trigrams with any doc in a held-out 'benchmark' slice (a
     deterministic 2% hash sample stands in for the eval set). The join is
     shingle-blocked — corpus×bench pairs only materialize on shared
-    n-grams, and the bench side is tiny so Catalyst broadcasts it."""
+    n-grams, and the bench side is tiny so it is broadcast
+    (operators/curation.contaminated_pairs, curate_corpus's scrub join).
+    Trigrams join as xxhash64 keys where the oracle compares strings; a
+    false shared trigram needs a 2^-64 collision."""
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     bench = docs.filter(
         (F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296) % 50 == 7
     ).select(F.col("doc_id").alias("bench_id"), "text")
-
-    def shingled(df, idc):
-        toks = text.ws_tokens("text")
-        return (
-            df.select(idc, toks.alias("t"))
-            .select(idc, F.explode(text.shingles("t", 3)).alias("s"))
-            .distinct()
-        )
-
-    c = shingled(docs, "doc_id")
-    b = shingled(bench, "bench_id")
+    # the self-match filter is on group keys: applied after the count it
+    # keeps the same rows as the oracle's pre-aggregate WHERE.
     return (
-        c.join(F.broadcast(b), "s")
+        contaminated_pairs(docs, bench, 5)
         .filter(F.col("doc_id") != F.col("bench_id"))
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("shared_ngrams"))
-        .filter(F.col("shared_ngrams") >= 5)
+        .select("doc_id", "bench_id", F.col("shared").alias("shared_ngrams"))
     )
 
 

@@ -1,32 +1,38 @@
-"""File-granularity + row-order invariance rehearsal: fragmented tables.
+"""Physical-invariance rehearsal: the same logical tables in a hostile
+physical form, then the full catalog against them.
 
-The driver's testdata is one tidy parquet file per table. A 100 TB table is
-not: it arrives as hundreds-to-thousands of part files, written by many
-tasks, with no meaningful global row order. Two invariances must hold and
-are NOT implied by the physical-layout rehearsal (which kept one file per
-table and preserved row order):
+The engine's contract is to bind to column NAMES and LOGICAL types — never
+to physical layout, file count or row order. A user's parquet will not look
+like the driver's testdata (one tidy file per table), so this script
+rewrites every table, preserving the logical schema and the multiset of
+rows EXACTLY, in one of two modes:
 
-- **file-count invariance** — no key's answer may depend on how many files a
-  table is split across (Spark's scan splits, file-listing order, and
-  partition coalescing all change with file count);
-- **row-order invariance** (``--shuffle``) — no key may lean on the incoming
-  row order of the testdata (a ``first()`` without a total ordering, a LIMIT
-  without tie-free sort keys, an aggregation whose "arbitrary" pick happens
-  to be stable on single-file input would all surface here).
+- **fragmentation** (default) — each table becomes a DIRECTORY
+  ``{name}.parquet/`` of N seeded row-slice part files (N scaled to table
+  size; part boundaries are odd on purpose). A 100 TB table arrives as
+  hundreds-to-thousands of part files written by many tasks, and Spark's
+  scan splits, file-listing order and partition coalescing all change with
+  file count: no key's answer may depend on it. With ``--shuffle`` the
+  rows are first permuted by a seeded ``random.Random`` shuffle, so
+  row-order hazards compound (a ``first()`` without a total ordering, a
+  LIMIT without tie-free sort keys, an aggregation whose "arbitrary" pick
+  happens to be stable on single-file input).
+- **layout** (``--layout``) — one file per table with every physical knob
+  perturbed at once: column order permuted (seeded, per table); row groups
+  forced tiny and odd (997 rows), the shape that exposes
+  row-group-boundary bugs in predicate pushdown and min/max pruning on
+  both engines; zstd instead of snappy; dictionary encoding disabled
+  (PLAIN pages).
 
-Each table is rewritten as a DIRECTORY ``{name}.parquet/`` of N seeded
-row-slice part files (N scaled to table size; part boundaries are odd on
-purpose). With ``--shuffle`` the rows are first permuted by a seeded
-``random.Random`` shuffle, so both hazards compound. Logical schema and the
-multiset of rows are preserved EXACTLY — so every key's
-hash-compare against the DuckDB oracle (which reads the same fragmented
-directory via a glob, see ``testing.duckdb_connect``) is a true invariance
-check.
+Then ``scripts/sweep.py`` runs every key against the rewritten directory.
+Spark and the DuckDB oracle (which reads a fragmented directory via a
+glob, see ``testing.duckdb_connect``) read the same rewritten files, so
+every key's hash compare is a true invariance check. The rewritten dir's
+basename is never the gate-scale name, so sweep's cost snapshot is
+untouched. The rewrite is deleted afterwards unless ``--keep`` is given.
 
-The rewritten dir's basename is never the gate-scale name, so sweep's cost
-snapshot is untouched.
-
-Usage:  python scripts/fragmentation_rehearsal.py [src_sf_dir] [--shuffle] [--keep]
+Usage:  python scripts/fragmentation_rehearsal.py [src_sf_dir]
+            [--shuffle | --layout] [--keep]
 """
 
 from __future__ import annotations
@@ -49,10 +55,9 @@ def _n_parts(num_rows: int) -> int:
     return max(3, min(97, num_rows // 500 or 3))
 
 
-def rewrite(src: str, dst: str, *, shuffle: bool, seed: int = 4242) -> None:
+def rewrite_fragmented(src: str, dst: str, *, shuffle: bool, seed: int = 4242) -> None:
     import pyarrow.parquet as pq
 
-    os.makedirs(dst, exist_ok=True)
     for name in TABLE_NAMES:
         t = pq.read_table(f"{src}/{name}.parquet")
         # Cross-process-stable seed: tuple.__hash__ salts str hashing per
@@ -77,14 +82,41 @@ def rewrite(src: str, dst: str, *, shuffle: bool, seed: int = 4242) -> None:
               f"{' (rows shuffled)' if shuffle else ''}")
 
 
+def rewrite_layout(src: str, dst: str, seed: int = 42) -> None:
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    for name in TABLE_NAMES:
+        t = pq.read_table(f"{src}/{name}.parquet")
+        cols = list(t.column_names)
+        rng.shuffle(cols)
+        pq.write_table(
+            t.select(cols),
+            f"{dst}/{name}.parquet",
+            row_group_size=997,
+            compression="zstd",
+            use_dictionary=False,
+        )
+        print(f"rewrote {name}: cols {cols[:3]}..., "
+              f"{t.num_rows} rows -> 997-row groups, zstd, no-dict")
+
+
 def main() -> int:
     argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     src = argv[0] if argv else "/root/testdata/sf0.01"
     shuffle = "--shuffle" in sys.argv
+    layout = "--layout" in sys.argv
     keep = "--keep" in sys.argv
-    dst = tempfile.mkdtemp(prefix="frag_rehearsal_")
+    if shuffle and layout:
+        print("--shuffle applies to the fragmentation mode, not --layout",
+              file=sys.stderr)
+        return 2
+    dst = tempfile.mkdtemp(prefix="layout_rehearsal_" if layout else "frag_rehearsal_")
     try:
-        rewrite(src, dst, shuffle=shuffle)
+        if layout:
+            rewrite_layout(src, dst)
+        else:
+            rewrite_fragmented(src, dst, shuffle=shuffle)
         print(f"\nsweeping full catalog against {dst} ...", flush=True)
         proc = subprocess.run(
             [sys.executable, os.path.join(os.path.dirname(__file__), "sweep.py"), dst],

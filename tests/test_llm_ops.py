@@ -1157,9 +1157,16 @@ def test_kmeans_full_assignment_and_monotone_inertia(spark, sf_dir):
 
 def test_prefix_filter_prunes_candidates_same_answer(spark, sf_dir):
     """Prefix filtering must (a) generate strictly fewer candidate pairs
-    than shared-shingle blocking and (b) return the identical pair set."""
+    than shared-shingle blocking and (b) return the identical pair set.
+    The counts are read off the two operators' own candidate cores (one
+    row per candidate pair), so they measure the frames the operators
+    verify — blocking's length filter included."""
+    from etl_asana_spark.operators.text import shingle_hashes
+
     docs = load_tables(spark, sf_dir)["documents"].filter(F.col("lang") == "fr")
-    pref, blocked = dedup.candidate_pair_counts(docs, n=3, threshold=0.2)
+    sh = shingle_hashes(docs, "doc_id", 3)
+    pref = dedup._prefix_candidates(sh, "doc_id", 0.2).count()
+    blocked = dedup._blocking_candidates(sh, "doc_id", 0.2).count()
     assert pref < blocked, (pref, blocked)
     a = dedup.prefix_filter_jaccard_pairs(docs, n=3, threshold=0.2)
     b = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2)
@@ -1730,13 +1737,11 @@ def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
         docs, jaccard_threshold=1.0), ["id_a", "id_b"]) == []
 
 
-def test_ngram_dedup_clusters_wrapper_matches_hand_assembly(spark):
-    """ngram_dedup_clusters (the family-level wrapper both production
-    call sites use) must equal the hand-assembled rep_pairs_fn/pairable
-    pair it replaces — the wrapper exists so the two halves derive from
-    one (n, threshold) and cannot drift per call site."""
-    from pyspark.sql import functions as F
-
+def test_ngram_dedup_clusters_singleton_rules(spark):
+    """ngram_dedup_clusters' collapsed labeling on a small corpus: byte-
+    identical short (unshingleable) docs stay singletons, a NULL-text doc
+    is its own cluster, and near-dup texts — an identical pair included —
+    merge into one cluster labeled by its smallest id."""
     from etl_asana_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -1750,40 +1755,26 @@ def test_ngram_dedup_clusters_wrapper_matches_hand_assembly(spark):
         ],
         "doc_id long, text string",
     )
-    got = sorted(
-        tuple(r) for r in dedup.ngram_dedup_clusters(
-            docs, n=3, threshold=0.1).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in dedup.dedup_clusters_collapsed(
-            docs,
-            rep_pairs_fn=lambda reps: dedup.ngram_jaccard_pairs(
-                reps, n=3, threshold=0.1, collapse=False
-            ).select("doc_a", "doc_b"),
-            pairable=F.size(F.split(F.col("vec"), r"\s+")) >= 3,
-        ).collect()
-    )
-    assert got == want
-    assert len(got) == 6
-    # the duplicated short docs are singletons; the three near-dup texts
-    # (including the identical pair) merge into one cluster.
-    sizes = {r[0]: (r[1], r[2]) for r in got}
-    assert sizes[3][0] != sizes[4][0]
-    assert sizes[0][0] == sizes[1][0] == sizes[2][0]
+    got = {
+        r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_canonical"])
+        for r in dedup.ngram_dedup_clusters(docs, n=3, threshold=0.1).collect()
+    }
+    assert got == {
+        0: (0, 3, True), 1: (0, 3, False), 2: (0, 3, False),
+        3: (3, 1, True), 4: (4, 1, True), 5: (5, 1, True),
+    }
 
 
-def test_dedup_clusters_collapsed_equals_member_level_cc(spark):
-    """dedup_clusters_collapsed (components over the distinct-text rep
-    graph, the q_dedup_clusters production path) must equal member-level
+def test_ngram_dedup_clusters_equals_member_level_cc(spark):
+    """ngram_dedup_clusters (components over the distinct-text rep graph,
+    the q_dedup_clusters production path) must equal member-level
     pairs → connected components on a duplicate-heavy corpus — including
     the singleton rules: unshingleable duplicated texts (each copy its own
     cluster) and a NULL-text doc. Motivation: member-level edges are
     quadratic in copy multiplicity; the 30×-duplication rehearsal OOM'd on
-    them before the collapse."""
+    them before the collapse. ``pre_collapsed=True`` must give the same
+    labels on the corpus's distinct texts."""
     import random
-
-    from pyspark.sql import functions as F
 
     from etl_asana_spark.operators import dedup
 
@@ -1808,16 +1799,23 @@ def test_dedup_clusters_collapsed_equals_member_level_cc(spark):
     want = sorted(tuple(r) for r in dedup.dedup_clusters(pairs, docs).collect())
     got = sorted(
         tuple(r)
-        for r in dedup.dedup_clusters_collapsed(
-            docs,
-            rep_pairs_fn=lambda reps: dedup.ngram_jaccard_pairs(
-                reps, n=3, threshold=0.1, collapse=False
-            ).select("doc_a", "doc_b"),
-            pairable=F.size(F.split(F.col("vec"), r"\s+")) >= 3,
-        ).collect()
+        for r in dedup.ngram_dedup_clusters(docs, n=3, threshold=0.1).collect()
     )
     assert got == want
     assert len(got) == len(rows)
+
+    firsts = dedup.dedup_exact(docs, ["text"], ["doc_id"])
+    pairs = dedup.ngram_jaccard_pairs(firsts, n=3, threshold=0.1).select(
+        "doc_a", "doc_b"
+    )
+    want = sorted(tuple(r) for r in dedup.dedup_clusters(pairs, firsts).collect())
+    got = sorted(
+        tuple(r)
+        for r in dedup.ngram_dedup_clusters(
+            firsts, n=3, threshold=0.1, pre_collapsed=True
+        ).collect()
+    )
+    assert got == want
 
 
 def test_png_resize_matches_numpy_reference_random_dims():

@@ -240,6 +240,26 @@ def test_stream_session_matches_batch_session_window(spark, sf_dir):
     assert must_emit <= emitted
 
 
+def test_stream_session_output_dtypes(spark, sf_dir):
+    """The drained sessions keep their declared schema, and toPandas gives
+    int64 ids and counts and datetime64 bounds. PySpark pads the
+    applyInPandasWithState output with a pandas concat whose dtype
+    inference is deprecated for empty/all-NA entries (a FutureWarning per
+    batch); if a pandas upgrade changes that inference, this fails loudly
+    instead of letting the output types drift."""
+    out = catalog.queries()["q_stream_session"](spark, sf_dir)
+    assert out.schema.simpleString() == (
+        "struct<user_id:bigint,session_start:timestamp,"
+        "session_end:timestamp,n_events:bigint>"
+    )
+    pdf = out.toPandas()
+    assert len(pdf) > 0
+    assert str(pdf["user_id"].dtype) == "int64"
+    assert str(pdf["n_events"].dtype) == "int64"
+    for col in ("session_start", "session_end"):
+        assert str(pdf[col].dtype).startswith("datetime64"), pdf[col].dtype
+
+
 @pytest.mark.slow  # ~9 s dual drain; opt-in (r11, see pytest.ini)
 def test_stream_stream_join_equals_batch_join(spark, sf_dir):
     """Inner stream-stream joins emit a match as soon as both rows have
