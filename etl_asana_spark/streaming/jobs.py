@@ -23,6 +23,7 @@ import os
 import tempfile
 import time
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,23 +78,44 @@ def _stream_partitions(spark: SparkSession, input_path: str | None) -> str:
     ))
 
 
-@contextlib.contextmanager
-def _stream_shuffle(spark: SparkSession, input_path: str | None = None):
-    """Temporarily right-size shuffle partitions for a bounded stateful run.
+#: Spark's checkpoint manager that renames with ``FileSystem.rename``. The
+#: default FileContext manager renames through Hadoop's ``RawLocalFs``,
+#: which, without native Hadoop, forks a ``readlink`` process per rename of
+#: a local file: 160 forks per ``asana_sync`` pass, all from the bounded
+#: drains' checkpoint and state-store commits. A local rename is atomic
+#: either way; on a remote store the default stays.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-    The value is pinned into the (fresh, per-run) checkpoint at query
-    start, so setting it around start→stop is safe; the previous value is
-    restored for subsequent batch queries on the shared session. The
-    state-store backend is Spark's own
+
+@contextlib.contextmanager
+def _drain_confs(spark: SparkSession, ckpt: str, input_path: str | None = None):
+    """Temporarily set the confs of one bounded drain checkpointing at
+    ``ckpt``: shuffle partitions right-sized for a stateful run, and on a
+    local checkpoint, :data:`_FS_CHECKPOINT_MANAGER`.
+
+    Both are read at query start — the partition count is pinned into the
+    (fresh, per-run) checkpoint — so setting them around start→stop is
+    safe; the previous values are restored for subsequent batch queries on
+    the shared session. The state-store backend is Spark's own
     ``spark.sql.streaming.stateStore.providerClass``, left as configured.
     """
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, _stream_partitions(spark, input_path))
+    confs = {"spark.sql.shuffle.partitions": _stream_partitions(spark, input_path)}
+    if urlparse(ckpt).scheme in ("", "file"):
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    before = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(key, before)
+        for key, value in before.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _events_stream_dir(sf_dir: str) -> str:
@@ -218,12 +240,13 @@ def _run_to_memory(
     def drain() -> DataFrame:
         name = f"sink_{uuid.uuid4().hex[:12]}"
         t0 = time.perf_counter()
-        with _stream_shuffle(spark, input_path):
+        ckpt = fresh_dir("ckpt")
+        with _drain_confs(spark, ckpt, input_path):
             query = (
                 df.writeStream.format("memory")
                 .queryName(name)
                 .outputMode(mode)
-                .option("checkpointLocation", fresh_dir("ckpt"))
+                .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
             )
@@ -505,7 +528,7 @@ def upsert_drain(spark: SparkSession, sf_dir: str, ckpt: str, target: str) -> No
         newest.write.mode("append").parquet(target)
 
     t0 = time.perf_counter()
-    with _stream_shuffle(spark, _events_stream_dir(sf_dir)):
+    with _drain_confs(spark, ckpt, _events_stream_dir(sf_dir)):
         query = (
             ev.writeStream.foreachBatch(upsert)
             .option("checkpointLocation", ckpt)
@@ -605,12 +628,13 @@ def sync_token_source_stream(spark: SparkSession) -> DataFrame:
     def drain() -> DataFrame:
         name = f"sink_{uuid.uuid4().hex[:12]}"
         t0 = time.perf_counter()
-        with _stream_shuffle(spark, STORIES_FIXTURE):
+        ckpt = fresh_dir("ckpt")
+        with _drain_confs(spark, ckpt, STORIES_FIXTURE):
             query = (
                 agg.writeStream.format("memory")
                 .queryName(name)
                 .outputMode("complete")
-                .option("checkpointLocation", fresh_dir("ckpt"))
+                .option("checkpointLocation", ckpt)
                 .start()
             )
             t_started = time.perf_counter()

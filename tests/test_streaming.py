@@ -871,7 +871,7 @@ def _drain_once(plan, spark, src_dir, mode, ckpt, sink):
     from etl_asana_spark.streaming import jobs
 
     df = plan(spark, src_dir)
-    with jobs._stream_shuffle(spark):
+    with jobs._drain_confs(spark, ckpt):
         if mode == "append":
             q = (
                 df.writeStream.format("parquet")
@@ -1029,7 +1029,7 @@ def test_sync_source_crash_recovery_resumes_from_token(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run(available_now: bool, name: str):
-        with jobs._stream_shuffle(spark):
+        with jobs._drain_confs(spark, ckpt):
             w = (
                 agg.writeStream.format("memory")
                 .queryName(name)
@@ -1148,7 +1148,7 @@ from etl_asana_spark.session import build_session
 from etl_asana_spark.streaming import jobs
 spark = build_session(app_name="recovery-run1")
 spark.sparkContext.setLogLevel("ERROR")
-with jobs._stream_shuffle(spark):
+with jobs._drain_confs(spark, {ckpt!r}):
     q = (jobs.plan_tumbling(spark, {staged!r})
          .writeStream.format("parquet")
          .option("path", {sink!r})
@@ -1204,3 +1204,21 @@ def test_stream_partitions_volume_rule(spark, tmp_path, monkeypatch):
         SparkContext, "defaultParallelism", property(lambda self: 1)
     )
     assert jobs._stream_partitions(spark, str(big)) == "2"
+
+
+def test_drain_confs_scope_the_checkpoint_manager(spark, tmp_path):
+    """A local checkpoint drains under the FileSystem-rename checkpoint
+    manager (no ``readlink`` fork per rename); a remote one keeps Spark's
+    default. Both confs are restored when the drain ends."""
+    from etl_asana_spark.streaming import jobs
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(key, None) is None
+    for local in (str(tmp_path / "ckpt"), f"file://{tmp_path}/ckpt"):
+        with jobs._drain_confs(spark, local):
+            assert spark.conf.get(key) == jobs._FS_CHECKPOINT_MANAGER
+        assert spark.conf.get(key, None) is None
+    with jobs._drain_confs(spark, "s3a://bucket/ckpt"):
+        assert spark.conf.get(key, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
